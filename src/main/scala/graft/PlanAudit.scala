@@ -63,9 +63,10 @@ object PlanAudit {
       Registry.levelExact(ev, Registry.I1).explain("formatted")
     }
     section("Q4 append tail scan (expect PartitionFilters on tb + PushedFilters on time)") {
-      val interval = meta.levelIntervals.head
-      val closedEnd = Warehouse.closedEndAt(spark, whRoot, interval)
-      Warehouse.tailRegion(spark, whRoot, closedEnd, Registry.B, meta.intervalMax)
+      val starts = Warehouse.closedEnds(hta.levels).collect {
+        case (i, m, end) if i == meta.levelIntervals.head => m -> end
+      }.toMap
+      Warehouse.tailRegion(spark, whRoot, starts, meta.intervalMax)
         .explain("formatted")
     }
     section("routed MIN/MAX/SUM/COUNT (expect scan of levels/, no raw, group filter on count)") {

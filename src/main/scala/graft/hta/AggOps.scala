@@ -99,12 +99,17 @@ object AggOps {
     * All arithmetic stays in the long domain (ns exactness, see above).
     */
   def boundarySplit(lifted: DataFrame, interval: Long,
-                    time: String = "time"): DataFrame = {
+                    time: String = "time"): DataFrame =
+    boundarySplit(lifted, lit(interval), time)
+
+  /** [[boundarySplit]] with the interval as a column: one split serves rows
+    * of several levels at once (the all-levels append). */
+  def boundarySplit(lifted: DataFrame, interval: Column, time: String): DataFrame = {
     val t = col(time)
     val s0 = intervalBegin(col("prev_time"), interval)
     val sk = intervalBegin(t, interval)
     lifted
-      .withColumn("bstart", explode(sequence(s0, sk, lit(interval))))
+      .withColumn("bstart", explode(sequence(s0, sk, interval)))
       .withColumn("seg_len",
         least(t, col("bstart") + interval) -
           greatest(col("prev_time"), col("bstart")))

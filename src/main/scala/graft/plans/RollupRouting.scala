@@ -1,13 +1,13 @@
 package graft.plans
 
-import graft.store.Hta
+import graft.store.{Hta, Warehouse}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions.{col, max => smax}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** Transparent rollup routing as a Catalyst optimizer rule (SURVEY §4
@@ -50,16 +50,12 @@ object RollupRouting {
     * level rows, and the rewritten Aggregate over the level table would
     * silently drop its group while the raw plan returns it. */
   def install(spark: SparkSession, hta: Hta): Unit = {
-    val perMetric = hta.levels
-      .groupBy("interval", "metric").agg(smax(col("time")).as("t"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     val rawMetrics: Set[String] = hta.metrics
       .getOrElse(hta.raw.select("metric").distinct())
       .select("metric").collect().map(_.getString(0)).toSet
-    val wm: Map[Long, Long] = perMetric.groupBy(_._1).collect {
-      case (i, rows) if rawMetrics.subsetOf(rows.map(_._2).toSet) =>
-        i -> (rows.map(_._3).min + i)
-    }.toMap
+    val wm: Map[Long, Long] = Warehouse.closedEnds(hta.levels).groupBy(_._1).collect {
+      case (i, ends) if rawMetrics.subsetOf(ends.map(_._2).toSet) => i -> ends.map(_._3).min
+    }
     val rawPaths = hta.raw.queryExecution.analyzed.collect {
       case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
         fs.location.rootPaths.map(_.toString)
@@ -72,8 +68,10 @@ object RollupRouting {
     // absence of nulls, not the presence of non-nulls.
     val minMaxOk = levelsPlan.output.exists(_.name == "minimum_home") &&
       hta.levels.where(col("minimum_home").isNull).limit(1).count() == 0
-    routes = routes :+ Route(rawPaths, levelsPlan, hta.meta.levelIntervals, wm,
-      minMaxOk)
+    // a re-install (after an append or compact) replaces the store's route:
+    // the old one holds stale watermarks and a stale levels file listing
+    routes = routes.filterNot(_.rawPaths == rawPaths) :+
+      Route(rawPaths, levelsPlan, hta.meta.levelIntervals, wm, minMaxOk)
     if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[RollupRoutingRule]))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ new RollupRoutingRule

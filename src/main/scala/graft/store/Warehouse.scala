@@ -2,6 +2,7 @@ package graft.store
 
 import graft.hta.AggOps
 import graft.model.Meta
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,7 +25,9 @@ import org.apache.spark.sql.functions._
   *  - the level build is one gap-lift shuffle + one aggregation per level,
   *    all reusing the same lifted frame (no per-point cascade — the
   *    reference's insert-time recursion becomes batch rollup k→k+1, which
-  *    reads the (much smaller) child level, not raw).
+  *    reads the (much smaller) child level, not raw);
+  *  - an append recomputes every level's open tail in one pass from one
+  *    pruned raw tail scan: its Spark job count does not grow with the ladder.
   */
 final case class Hta(raw: DataFrame, levels: DataFrame, meta: Meta,
                      metrics: Option[DataFrame] = None)
@@ -49,14 +52,7 @@ object Warehouse {
       require(bad == 0L, "non-monotonic or zero timestamp in ingest batch")
     }
 
-    withWriterCoalesce(points.sparkSession) {
-      points
-        .withColumn("tb", AggOps.intervalBegin(col("time"), meta.intervalMax))
-        .repartition(col("tb"))
-        .sortWithinPartitions("metric", "time")
-        .write.mode(SaveMode.Overwrite).partitionBy("tb")
-        .parquet(s"$root/raw")
-    }
+    writeRaw(points, meta, root, SaveMode.Overwrite)
 
     // level ladder: L0 from raw (one gapLift shuffle), k→k+1 from level k
     val ladder = meta.levelIntervals
@@ -80,10 +76,21 @@ object Warehouse {
     open(spark, root)
   }
 
+  private def writeRaw(points: DataFrame, meta: Meta, root: String,
+                       mode: SaveMode): Unit =
+    withWriterCoalesce(points.sparkSession) {
+      points
+        .withColumn("tb", AggOps.intervalBegin(col("time"), meta.intervalMax))
+        .repartition(col("tb"))
+        .sortWithinPartitions("metric", "time")
+        .write.mode(mode).partitionBy("tb")
+        .parquet(s"$root/raw")
+    }
+
   private def writeLevel(level: DataFrame, root: String, mode: SaveMode): Unit =
     withWriterCoalesce(level.sparkSession) {
       level.repartition(col("interval"))
-        .sortWithinPartitions("metric", "time")
+        .sortWithinPartitions("interval", "metric", "time")
         .write.mode(mode).partitionBy("interval")
         .parquet(s"$root/levels")
     }
@@ -95,14 +102,14 @@ object Warehouse {
   private def writeMeta(meta: Meta, root: String, spark: SparkSession): Unit = {
     val json =
       s"""{"interval_min":${meta.intervalMin},"interval_max":${meta.intervalMax},"interval_factor":${meta.intervalFactor}}"""
-    val p = new org.apache.hadoop.fs.Path(s"$root/meta.json")
+    val p = new Path(s"$root/meta.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
     out.write(json.getBytes("UTF-8")); out.close()
   }
 
   def readMeta(spark: SparkSession, root: String): Meta = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/meta.json")
+    val p = new Path(s"$root/meta.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(p)
     val s = scala.io.Source.fromInputStream(in).mkString; in.close()
@@ -116,111 +123,111 @@ object Warehouse {
     * only each level's OPEN TAIL — the region at/after the last closed
     * interval end `interval_begin(old_last, k)`. New points can never touch
     * an already-closed row (a row closes only when a later point crosses its
-    * end), so appends are strictly additive.
-    *
-    * Scale: the recomputed region per level is O(open tail + new batch); the
-    * raw re-scan prunes to the tail's time buckets. This is the batch
-    * equivalent of the reference's in-memory accumulator restore.
+    * end), so appends are strictly additive. All levels come from one pass
+    * (one tail scan, gap lift, aggregation and level write), as
+    * StreamIngest.foldBatch folds every level at once. F5
+    * (src/metric.cpp:515-524): a zero or duplicate time, or a point at or
+    * before its metric's last, rejects the batch before anything is written.
+    * Scale: one row per metric and one per (metric, level) are collected.
     */
   def append(points: DataFrame, root: String): Hta = {
     val spark = points.sparkSession
+    import spark.implicits._
     val existing = open(spark, root)
     val meta = existing.meta
 
-    // Per-metric bounds of the pre-append store: used for the monotonicity
-    // check AND the tail prune bound (appends never lower a metric's first).
-    val oldBounds = existing.raw.groupBy("metric")
-      .agg(min("time").as("_first"), max("time").as("_old_last")).cache()
-    // F5 across batches: every new point must be past its metric's last
-    val crossBad = points.join(broadcast(oldBounds), Seq("metric"), "left")
-      .where(col("_old_last").isNotNull && col("time") <= col("_old_last"))
-      .limit(1).count()
-    require(crossBad == 0L, "append batch not monotonic vs existing data")
-    // metrics first seen in this batch have no closed rows anywhere — the
-    // prune bound must reach down to their earliest point
-    val newMetricMin = points
-      .join(broadcast(oldBounds.select("metric")), Seq("metric"), "left_anti")
-      .agg(min("time")).collect()(0) match {
-        case r if r.isNullAt(0) => Long.MaxValue
-        case r => r.getLong(0)
+    // F5 pre-pass, one row per metric of the batch or the store: the batch's
+    // zero and duplicate times and first/last point, beside the store's
+    val spans = points.groupBy("metric")
+      .agg(count(when(col("time") === 0L, 1)).as("zeros"),
+        (count("time") - countDistinct("time")).as("dups"),
+        min("time").as("b_first"), max("time").as("b_last"))
+      .join(existing.raw.groupBy("metric")
+        .agg(min("time").as("first"), max("time").as("last")),
+        Seq("metric"), "full_outer")
+      .collect().map { r =>
+        def opt(f: String) = Option(r.getAs[java.lang.Long](f)).map(_.longValue)
+        require(opt("zeros").forall(_ == 0L), "zero timestamp in append batch")
+        require(opt("dups").forall(_ == 0L), "duplicate timestamp in append batch")
+        require(opt("last").forall(l => opt("b_first").forall(_ > l)),
+          "append batch not monotonic vs existing data")
+        MetricSpan(r.getAs[String]("metric"), opt("first").orElse(opt("b_first")).get,
+          opt("b_last").orElse(opt("last")).get, isNew = opt("first").isEmpty)
       }
 
-    withWriterCoalesce(points.sparkSession) {
-      points
-        .withColumn("tb", AggOps.intervalBegin(col("time"), meta.intervalMax))
-        .repartition(col("tb"))
-        .sortWithinPartitions("metric", "time")
-        .write.mode(SaveMode.Append).partitionBy("tb")
-        .parquet(s"$root/raw")
-    }
+    // every (metric, level) whose open tail now closes rows: from the closed
+    // end (none yet: the first point) up to the bucket holding the last point
+    val closed = closedEnds(existing.levels).map { case (i, m, end) => (i, m) -> end }.toMap
+    val tails = for {
+      s <- spans.toSeq; k <- meta.levelIntervals
+      start = closed.getOrElse((k, s.metric), s.first)
+      lastBucket = s.last - Math.floorMod(s.last, k)
+      if start - Math.floorMod(start, k) < lastBucket
+    } yield (s.metric, k, start, lastBucket)
 
-    for (interval <- meta.levelIntervals) {
-      val closedEnd = closedEndAt(spark, root, interval)
-      // Driver-side global prune bound: the earliest point any metric's tail
-      // recompute can need — its closed end where present, else its first
-      // point. A LITERAL bound (unlike the join-derived tail predicate)
-      // pushes into the parquet scan: tb directory pruning + time row-group
-      // skipping, so a 7-level ladder no longer means 7 full raw scans.
-      val bound = oldBounds.join(closedEnd, Seq("metric"), "left")
-        .agg(min(coalesce(col("_closed_end"), col("_first"))))
-        .collect()(0) match {
-          case r if r.isNullAt(0) => newMetricMin
-          case r => math.min(r.getLong(0), newMetricMin)
-        }
-      val region = tailRegion(spark, root, closedEnd, bound, meta.intervalMax)
-      // gap seed: closed-region end (reference Level restore gap origin),
-      // or the point itself when the level had no closed rows; skew-safe
-      // chunked lag, chunk grid == tb layout (no extra shuffle shape)
-      val lifted = AggOps.gapLiftChunked(region, meta.intervalMax,
-        firstDefault = Some(coalesce(col("_closed_end"), col("time"))))
-      val lastT = region.groupBy("metric").agg(max("time").as("_last"))
+    writeRaw(points, meta, root, SaveMode.Append)
+
+    if (tails.nonEmpty) {
+      val starts = tails.groupMapReduce(_._1)(_._3)(math.min)
+      // a metric's first point in the tail lifts to the sentinel, which the
+      // per-level start then replaces: the closed end (the reference's Level
+      // restore gap origin), or the point's own time at a level with no
+      // closed rows. Skew-safe chunked lag, chunk grid == tb layout.
+      val lifted = AggOps.gapLiftChunked(
+        tailRegion(spark, root, starts, meta.intervalMax), meta.intervalMax,
+        firstDefault = Some(lit(Long.MinValue)))
       val newRows = AggOps.boundarySplit(
-          lifted.join(broadcast(lastT), Seq("metric")), interval)
-        .where(col("bstart") < AggOps.intervalBegin(col("_last"), interval) &&
-          (col("_closed_end").isNull || col("bstart") >= col("_closed_end")))
-        .groupBy(col("metric"), col("bstart").as("time"))
+          lifted.join(broadcast(tails.toDF("metric", "interval", "_start", "_open")),
+              Seq("metric"))
+            .where(col("time") >= col("_start"))
+            .withColumn("prev_time", greatest(col("prev_time"), col("_start"))),
+          col("interval"), "time")
+        .where(col("bstart") < col("_open"))
+        .groupBy(col("metric"), col("interval"), col("bstart").as("time"))
         .agg(AggOps.segmentAggCols(col("value")).head,
           AggOps.segmentAggCols(col("value")).tail: _*)
-        .withColumn("interval", lit(interval))
       writeLevel(newRows, root, SaveMode.Append)
     }
-    oldBounds.unpersist()
-    // merge any new metric names into the catalog (S6); tolerate stores
-    // created before the catalog existed
-    val fs0 = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existingCat = readCatalog(spark, root)
-      .getOrElse(existing.raw.select("metric").distinct())
-    val cat = existingCat
-      .unionByName(points.select("metric").distinct()).distinct()
-    cat.write.mode(SaveMode.Overwrite).parquet(s"$root/_metrics_tmp")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/_metrics"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$root/_metrics_tmp"),
-      new org.apache.hadoop.fs.Path(s"$root/_metrics"))
+
+    // merge new metric names into the catalog (S6); a store created before
+    // the catalog existed gets one listing every metric
+    val names = spans.collect { case s if s.isNew || existing.metrics.isEmpty => s.metric }
+    if (names.nonEmpty) {
+      val added = names.toSeq.toDF("metric")
+      existing.metrics.fold(added)(_.unionByName(added).distinct())
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/_metrics_tmp")
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new Path(s"$root/_metrics"), true)
+      fs.rename(new Path(s"$root/_metrics_tmp"), new Path(s"$root/_metrics"))
+    }
     open(spark, root)
   }
 
-  /** Per-metric end of the closed region at `interval` (absent metrics have
-    * no row). The levels scan prunes to one `interval=` partition. */
-  def closedEndAt(spark: SparkSession, root: String, interval: Long): DataFrame =
-    readLevels(spark, root)
-      .where(col("interval") === interval)
-      .groupBy("metric").agg((max("time") + interval).as("_closed_end"))
+  /** A metric's first and last point once the append batch is in. */
+  private final case class MetricSpan(metric: String, first: Long, last: Long, isNew: Boolean)
 
-  /** The raw tail scan an append recomputes: literal `tb`/`time` bounds so
-    * the parquet source prunes directories and row groups (PartitionFilters
-    * on tb — asserted by RestoreSpec), then the per-metric join-derived tail
-    * predicate trims the remainder. */
-  def tailRegion(spark: SparkSession, root: String, closedEnd: DataFrame,
-                 bound: Long, intervalMax: Long): DataFrame = {
+  /** (interval, metric, end of the closed region — the last level row's
+    * end), from one aggregate over every level partition. A metric with no
+    * closed row at a level has no entry there. */
+  def closedEnds(levels: DataFrame): Seq[(Long, String, Long)] =
+    levels.groupBy("interval", "metric").agg(max(col("time") + col("interval")))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+
+  /** The raw tail scan an append recomputes: the lowest of `starts` as
+    * literal `tb`/`time` bounds, so the parquet source prunes directories and
+    * row groups (PartitionFilters on tb — asserted by RestoreSpec), then each
+    * metric's own start trims the rest; metrics without one are dropped. */
+  def tailRegion(spark: SparkSession, root: String, starts: Map[String, Long],
+                 intervalMax: Long): DataFrame = {
+    import spark.implicits._
+    val bound = starts.values.min
     val tbBound = bound - Math.floorMod(bound, intervalMax)
     spark.read.parquet(s"$root/raw")
       .where(col("tb") >= tbBound && col("time") >= bound)
       .drop("tb")
-      .join(broadcast(closedEnd), Seq("metric"), "left")
-      .where(col("_closed_end").isNull || col("time") >= col("_closed_end"))
+      .join(broadcast(starts.toSeq.toDF("metric", "_tail_start")), Seq("metric"))
+      .where(col("time") >= col("_tail_start"))
+      .drop("_tail_start")
   }
 
   import org.apache.spark.sql.types._
@@ -246,9 +253,9 @@ object Warehouse {
     * and a subsequent compact would delete the backup and commit an empty
     * levels table. */
   private def restoreInterruptedSwap(
-      fs: org.apache.hadoop.fs.FileSystem, dst: String): Unit = {
-    val dstP = new org.apache.hadoop.fs.Path(dst)
-    val bakP = new org.apache.hadoop.fs.Path(dst + "_compact_bak")
+      fs: FileSystem, dst: String): Unit = {
+    val dstP = new Path(dst)
+    val bakP = new Path(dst + "_compact_bak")
     if (!fs.exists(dstP) && fs.exists(bakP)) {
       // two concurrent readers can both pass the exists checks; the rename
       // loser is fine as long as SOMEONE completed the restore — only a
@@ -264,10 +271,10 @@ object Warehouse {
     * crash mid-publish that the stream WILL replay on restart; its cleanup
     * keys on the `bid-N-` file names, which compaction would erase. */
   private def assertNoUncommittedPublishes(
-      fs: org.apache.hadoop.fs.FileSystem, root: String): Unit = {
+      fs: FileSystem, root: String): Unit = {
     val bidName = "bid-(\\d+)-.*".r
     for (table <- Seq("raw", "levels")) {
-      val dir = new org.apache.hadoop.fs.Path(s"$root/$table")
+      val dir = new Path(s"$root/$table")
       if (fs.exists(dir)) {
         val bids = for {
           part <- fs.listStatus(dir).toSeq if part.isDirectory
@@ -279,9 +286,9 @@ object Warehouse {
           // at _stream_commits/<bid> (see StreamIngest.publishBatch) — an
           // upgraded store must not be refused as "uncommitted"
           val committed =
-            fs.exists(new org.apache.hadoop.fs.Path(s"$root/_stream_commits/$table/$bid")) ||
+            fs.exists(new Path(s"$root/_stream_commits/$table/$bid")) ||
               (table == "levels" &&
-                fs.isFile(new org.apache.hadoop.fs.Path(s"$root/_stream_commits/$bid")))
+                fs.isFile(new Path(s"$root/_stream_commits/$bid")))
           require(committed,
             s"compact: uncommitted streaming batch $bid in $table/ — restart the " +
               s"stream so it replays batch $bid (or remove the partial bid-$bid-* " +
@@ -299,8 +306,7 @@ object Warehouse {
     * restore then skips (dst exists) and the next compact deletes the only
     * pre-crash copy. */
   private[graft] def restoreStore(spark: SparkSession, root: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     restoreInterruptedSwap(fs, s"$root/levels")
     restoreInterruptedSwap(fs, s"$root/raw")
   }
@@ -308,9 +314,7 @@ object Warehouse {
   def readLevels(spark: SparkSession, root: String): DataFrame =
     try {
       restoreInterruptedSwap(
-        new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration),
-        s"$root/levels")
+        new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration), s"$root/levels")
       val df0 = spark.read.parquet(s"$root/levels")
         .withColumn("interval", col("interval").cast("long"))
       // stores written before the home-only min/max columns (or converted
@@ -328,8 +332,7 @@ object Warehouse {
     }
 
   def open(spark: SparkSession, root: String): Hta = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     restoreInterruptedSwap(fs, s"$root/raw")
     Hta(spark.read.parquet(s"$root/raw"), readLevels(spark, root),
       readMeta(spark, root), readCatalog(spark, root))
@@ -342,7 +345,7 @@ object Warehouse {
     * but a fresh-clone test run must not emit datasource warnings). */
   private def readCatalog(spark: SparkSession,
                           root: String): Option[DataFrame] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$root/_metrics")
+    val dir = new Path(s"$root/_metrics")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) None
     else {
@@ -350,11 +353,8 @@ object Warehouse {
         .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
         .map(_.getPath.toString)
       if (parts.isEmpty)
-        Some(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("metric",
-              org.apache.spark.sql.types.StringType)))))
+        Some(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(Seq(StructField("metric", StringType)))))
       else Some(spark.read.parquet(parts.toIndexedSeq: _*))
     }
   }
@@ -374,8 +374,7 @@ object Warehouse {
     // before reading (readLevels guards levels itself, but the raw read
     // below has no per-read guard) and before swap() deletes any backup
     restoreStore(spark, root)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a crashed stream may have left a PARTIAL publish (bid-N-k files with
     // no commit marker). Compacting would rewrite those into anonymous
     // part-files, so the restarted stream's replay cleanup (delete bid-N-*,
@@ -388,9 +387,9 @@ object Warehouse {
     // it. Every rename result is checked; rename-returning-false would
     // otherwise silently drop raw/ (permanent loss) or levels/ (rebuildable).
     def swap(tmp: String, dst: String): Unit = {
-      val tmpP = new org.apache.hadoop.fs.Path(tmp)
-      val dstP = new org.apache.hadoop.fs.Path(dst)
-      val bakP = new org.apache.hadoop.fs.Path(dst + "_compact_bak")
+      val tmpP = new Path(tmp)
+      val dstP = new Path(dst)
+      val bakP = new Path(dst + "_compact_bak")
       fs.delete(bakP, true)
       if (fs.exists(dstP))
         require(fs.rename(dstP, bakP), s"compact: rename $dst -> $bakP failed")

@@ -169,4 +169,21 @@ class RollupRoutingSpec extends SparkSpec {
       assert(routed === direct, s"window ($b, $e)")
     }
   }
+
+  test("re-install after compact replaces the store's route") {
+    val root = tmpDir("route_reinstall")
+    RollupRouting.install(spark, Warehouse.ingest(fixtureDf, Meta(10 * S, 1000 * S, 10), root))
+    // compact rewrites every file: the first route's levels listing is stale
+    val h = Warehouse.compact(spark, root, filesPerPartition = 1)
+    RollupRouting.install(spark, h)
+    val df = h.raw.where(col("time") >= tp(20) && col("time") < tp(100))
+      .groupBy("metric").agg(sum("value").as("s"), count("value").as("c"))
+    assert(df.queryExecution.executedPlan.toString.contains("levels"), "not routed")
+    val got = df.collect().head
+    val expect = fixtureDf.where(col("time") >= tp(20) && col("time") < tp(100))
+      .groupBy("metric").agg(sum("value"), count("value")).collect().head
+    assert(got.getDouble(1) === expect.getDouble(1))
+    assert(got.getLong(2) === expect.getLong(2))
+    assert(RollupRouting.routes.count(_.rawPaths.exists(_.contains(root))) === 1)
+  }
 }

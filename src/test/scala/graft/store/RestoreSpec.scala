@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.hta.RetrieveFlex
 import graft.model.Meta
 import graft.tools.Tools
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Port of /root/reference/tests/restore.cpp:60-215 — ingesting the fixture
   * across multiple sessions (batch appends) must produce exactly the same
@@ -38,10 +39,12 @@ class RestoreSpec extends SparkSpec {
   test("append tail scan prunes raw partitions (PartitionFilters on tb)") {
     val root = tmpDir("restore3")
     Warehouse.ingest(pointsDf(fixture110.take(80)), meta, root)
-    val interval = meta.levelIntervals.head
-    val closedEnd = Warehouse.closedEndAt(spark, root, interval)
-    val bound = tp(50) // any literal bound stands in for the driver-computed one
-    val region = Warehouse.tailRegion(spark, root, closedEnd, bound, meta.intervalMax)
+    val levels = Warehouse.open(spark, root).levels
+    // level-0 closed ends stand in for the append's per-metric tail starts
+    val starts = Warehouse.closedEnds(levels).collect {
+      case (i, m, end) if i == meta.levelIntervals.head => m -> end
+    }.toMap
+    val region = Warehouse.tailRegion(spark, root, starts, meta.intervalMax)
     val plan = region.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") &&
       plan.split("\n").exists(l => l.contains("PartitionFilters") && l.contains("tb")),
@@ -61,5 +64,112 @@ class RestoreSpec extends SparkSpec {
     assert(r(0).getAs[Long]("active_time") === 9 * S)
     assert(r(3).getAs[Double]("integral") === 1e9 * (2 * -30.0 + 6 * -20.0 + 2 * -10.0))
     assert(r(20).getAs[Double]("integral") === 1e9 * (7 * 35.0 + 2 * 45.0 + 1 * 35.0))
+  }
+
+  test("ingest rejects a zero and a duplicate timestamp (F5)") {
+    intercept[IllegalArgumentException](Warehouse.ingest(
+      pointsDf(Seq(0L -> 1.0, tp(5) -> 2.0)), meta, tmpDir("f5_zero")))
+    intercept[IllegalArgumentException](Warehouse.ingest(
+      pointsDf(Seq(tp(5) -> 1.0, tp(5) -> 2.0, tp(9) -> 3.0)), meta, tmpDir("f5_dup")))
+  }
+
+  test("append rejects stale, duplicate and zero timestamps and writes nothing (F5)") {
+    val root = tmpDir("f5_append")
+    Warehouse.ingest(pointsDf(fixture110.take(50)), meta, root)
+    def rows(h: Hta) = (h.raw.count(), h.levels.count(), Warehouse.metricNames(h))
+    val before = rows(Warehouse.open(spark, root))
+    val last = fixture110(49)._1
+    val bad = Seq(
+      "a point at the existing last" -> pointsDf(Seq(last -> 1.0, tp(300) -> 2.0)),
+      "a point before the existing last" -> pointsDf(Seq(last - S -> 1.0)),
+      "a duplicate inside the batch" -> pointsDf(Seq(tp(300) -> 1.0, tp(300) -> 2.0)),
+      "a duplicate of a new metric" ->
+        pointsDf(Seq(tp(300) -> 1.0, tp(300) -> 2.0), metric = "fresh"),
+      "a zero timestamp of a new metric" ->
+        pointsDf(Seq(0L -> 1.0, tp(300) -> 2.0), metric = "fresh"))
+    for ((what, batch) <- bad) {
+      intercept[IllegalArgumentException](Warehouse.append(batch, root))
+      assert(rows(Warehouse.open(spark, root)) === before, s"$what was written")
+    }
+    val after = Warehouse.append(pointsDf(fixture110.drop(50)), root)
+    assert(after.raw.count() === fixture110.length)
+  }
+
+  test("multi-metric append in seeded cuts == one-shot ingest (levels and raw bit-identical)") {
+    def series(metric: String, secs: Seq[Long]) =
+      secs.map(t => (metric, tp(t), (t % 7 - 3).toDouble))
+    // different spacings close different rows per level; `late` is first
+    // seen in a later batch; `gappy` stays silent for several 100 s
+    // intervals across a cut; `sparse` gets no points in the middle batches
+    val pts = (series("fast", 5L to 2500L by 3) ++
+      series("slow", 20L to 2600L by 37) ++
+      series("late", 1200L to 2700L by 11) ++
+      series("gappy", (10L to 300L by 13) ++ (1700L to 2400L by 13)) ++
+      series("sparse", (0L to 200L by 17) ++ (1500L to 1600L by 9)))
+      .sortBy(p => (p._2, p._1))
+    val s = spark
+    import s.implicits._
+    def df(p: Seq[(String, Long, Double)]) = p.toDF("metric", "time", "value")
+    val oneShot = Warehouse.ingest(df(pts), meta, tmpDir("multi_oneshot"))
+
+    // a one-point ingest, two one-point appends, one cut inside gappy's gap
+    // (one point either side of it), the rest seeded
+    val inGap = pts.indexWhere(_._2 >= tp(1000))
+    val rnd = new scala.util.Random(11)
+    val cuts = (Seq(1, 2, 3, inGap, inGap + 1, pts.length) ++
+      Seq.fill(3)(4 + rnd.nextInt(pts.length - 5))).distinct.sorted
+    val root = tmpDir("multi_restore")
+    var hta: Hta = null
+    for ((from, until) <- (0 +: cuts).zip(cuts)) {
+      val batch = df(pts.slice(from, until))
+      hta = if (from == 0) Warehouse.ingest(batch, meta, root)
+            else Warehouse.append(batch, root)
+      assert(Warehouse.metricNames(hta) === pts.take(until).map(_._1).distinct.sorted,
+        s"catalog after the batch ending at $until")
+    }
+
+    val a = oneShot.levels.orderBy("interval", "metric", "time").collect()
+    val b = hta.levels.orderBy("interval", "metric", "time").collect()
+    assert(a.length === b.length)
+    a.zip(b).foreach { case (x, y) => assert(x === y) }
+    assert(hta.raw.drop("tb").orderBy("metric", "time").collect().toSeq ===
+      oneShot.raw.drop("tb").orderBy("metric", "time").collect().toSeq)
+    assert(Tools.check(hta, tp(100000)).count() === 0)
+  }
+
+  /** Spark jobs started by `body`: a marker job run after it drains the
+    * listener bus, whose events arrive in submission order. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "drain"))
+          drained.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription("drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("append issues as many Spark jobs into 7 levels as into 3") {
+    def appendJobs(m: Meta, tag: String): Int = {
+      val root = tmpDir(tag)
+      Warehouse.ingest(pointsDf(fixture110.take(80)), m, root)
+      jobsOf(Warehouse.append(pointsDf(fixture110.drop(80)), root))
+    }
+    val wide = Meta(10 * S, 10000000 * S, 10)
+    assert(meta.levelIntervals.length === 3 && wide.levelIntervals.length === 7)
+    val three = appendJobs(meta, "jobs3")
+    val seven = appendJobs(wide, "jobs7")
+    assert(three > 0 && seven === three,
+      s"append jobs grow with the ladder: 3 levels $three, 7 levels $seven")
   }
 }
