@@ -58,6 +58,21 @@ object GraftSession {
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
 
+  /** A `spark.graft.*` long setting, or `default` when unset; a malformed
+    * value fails naming the key and the value. */
+  def confLong(spark: SparkSession, key: String, default: Long): Long =
+    spark.conf.getOption(key).fold(default) { raw =>
+      raw.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$key must be a long integer, got '$raw'"))
+    }
+
+  /** A boolean setting (`true`/`false`, any case), as [[confLong]]. */
+  def confBool(spark: SparkSession, key: String, default: Boolean): Boolean =
+    spark.conf.getOption(key).fold(default) { raw =>
+      raw.trim.toBooleanOption.getOrElse(throw new IllegalArgumentException(
+        s"$key must be true or false, got '$raw'"))
+    }
+
   def local(): SparkSession = {
     val s = builder().getOrCreate()
     s.sparkContext.setLogLevel("WARN")

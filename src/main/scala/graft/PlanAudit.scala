@@ -56,7 +56,8 @@ object PlanAudit {
       RetrieveFlex.retrieveFlex(hta, Registry.B, Registry.E, 5 * Registry.I1)
         .explain("formatted")
     }
-    section("A6 telescoped aggregate (expect per-slice pruned scans + union)") {
+    section("A6 telescoped aggregate (expect levels scanned once with PartitionFilters " +
+      "interval IN (..), raw twice under one tb bound, broadcast slice tables, one merge)") {
       Telescope.aggregateRange(hta, Registry.B, Registry.E).explain("formatted")
     }
     section("q07 level build (expect single shuffle per grouping; pushdown of nothing — full scan is inherent)") {

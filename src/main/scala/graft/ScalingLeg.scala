@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * Methodology matches graft.Bench: each leg's frame is fully
   * materialized via `toRdd.foreachPartition` (no sink cost), wall time is
   * min of `SPARK_GRAFT_BENCH_PASSES` (default 2 here — legs are minutes,
-  * not seconds), one JSON line per leg on stdout. Legs are selectable via
+  * not seconds), one JSON line per leg on stdout; a leg in which any pass
+  * threw prints `"ok":false` and no `wall_s`. Legs are selectable via
   * `SPARK_GRAFT_LEG_ONLY=name1,name2`.
   *
   * Run: SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScalingLeg /tmp/testdata_x100"
@@ -48,21 +49,22 @@ object ScalingLeg {
 
     def run(name: String)(body: => DataFrame): Unit = {
       if (only.exists(!_.contains(name))) return
-      val times = (1 to passes).map { _ =>
+      // (seconds, ok) per pass: a pass that threw did not do the leg's
+      // work, so its time is reported but never counted as the leg's wall
+      val timed = (1 to passes).map { _ =>
         val t0 = System.nanoTime()
-        try {
+        val ok = try {
           spark.sparkContext.setJobDescription(s"scalingleg: $name")
           body.queryExecution.toRdd.foreachPartition(
             (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
               while (it.hasNext) it.next())
+          true
         } catch {
-          case e: Throwable => System.err.println(s"[leg] $name: ${e.getMessage}")
+          case e: Throwable => System.err.println(s"[leg] $name: ${e.getMessage}"); false
         } finally spark.sparkContext.setJobDescription(null)
-        (System.nanoTime() - t0) / 1e9
+        ((System.nanoTime() - t0) / 1e9, ok)
       }
-      println(s"""SCALINGLEG {"leg":"$name","cpus":$cpus,""" +
-        s""""wall_s":${math.round(times.min * 100) / 100.0},""" +
-        s""""passes":[${times.map(t => math.round(t * 100) / 100.0).mkString(",")}]}""")
+      println(legLine(name, cpus, timed))
     }
 
     // shingle/gram family (r16 finding B: doc_id exchange before the
@@ -121,5 +123,16 @@ object ScalingLeg {
       out
     }
     spark.stop()
+  }
+
+  private def round2(t: Double): Double = math.round(t * 100) / 100.0
+
+  /** One leg's JSON line: `"ok":false` and no `wall_s` when any pass threw,
+    * else `wall_s` is the fastest pass. */
+  def legLine(name: String, cpus: String, passes: Seq[(Double, Boolean)]): String = {
+    val ok = passes.forall(_._2)
+    val wall = if (ok) s""""wall_s":${round2(passes.map(_._1).min)},""" else ""
+    s"""SCALINGLEG {"leg":"$name","cpus":$cpus,"ok":$ok,$wall""" +
+      s""""passes":[${passes.map(p => round2(p._1)).mkString(",")}]}"""
   }
 }

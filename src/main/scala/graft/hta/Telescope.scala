@@ -2,27 +2,25 @@ package graft.hta
 
 import graft.store.Hta
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** A6 performance tier — the reference's telescoping range-aggregate plan
   * (src/metric.cpp:160-231): instead of folding every raw point in [b, e),
   * read raw only at the two unaligned edges and cover the middle with
   * aligned runs of successively coarser pre-aggregated levels
-  * (O(2·factor·#levels) level rows + O(ε) raw points).
+  * (O(2·factor·#levels) level rows + O(interval_min) raw points per metric).
   *
-  * The decomposition is pure driver-side arithmetic on (b, e, ladder); the
-  * resulting plan is a union of per-slice pruned scans merged by one final
-  * monoid aggregation — a single Spark action. Each level slice hits exactly
-  * one `interval=` partition with a pushed-down time range; the raw edges
-  * prune to their time buckets. At 100 TB this reads megabytes, not
-  * terabytes — the same asymptotic win the reference gets from positional
-  * file offsets, obtained via partition pruning + row-group skipping.
-  *
-  * The reference clamps [b, e] into each metric's data range before
-  * decomposing; a shared global decomposition is only valid for metrics
-  * whose range covers [b, e]. Those take the telescoped plan; the remainder
-  * (a broadcast-sized exception set) falls back to the exact raw fold
-  * (Queries.aggregateRange). Results are identical either way.
+  * As in the reference, each metric's range is clamped to its data range
+  * (`Hta.extents`, collected once per opened store) before it is
+  * decomposed; metrics disjoint from [b, e) get the identity row. The
+  * decomposition is driver-side arithmetic, shared by metrics with the same
+  * clamp, and becomes two broadcast tables: level runs (metric, interval,
+  * lo, hi) and raw edges (metric, rb, re). One pruned level scan, one raw
+  * scan under the lowest edge start (read twice: once for each edge's next
+  * point, once for its kept points) and one monoid merge answer every
+  * metric; the reference's postcondition `active_time == e' - b'` fails the
+  * query when the levels do not cover what raw holds.
   */
 object Telescope {
 
@@ -71,68 +69,70 @@ object Telescope {
     * Queries.aggregateRange, telescoped. */
   def aggregateRange(hta: Hta, b: Long, e: Long): DataFrame = {
     require(b < e, s"invalid request: begin $b >= end $e")
+    val spark = hta.raw.sparkSession
+    import spark.implicits._
     val meta = hta.meta
-    val slices = decompose(b, e, meta.levelIntervals, meta.intervalFactor)
+    // overlap test and clamp per metric (src/metric.cpp:169-181); metrics
+    // with the same clamp share one decomposition
+    val (live, disjoint) = hta.extents.partition { case (_, (f, l)) => e > f && b <= l }
+    val slices = live.toSeq.groupMap { case (_, (f, l)) => (math.max(b, f), math.min(e, l)) }(_._1)
+      .toSeq.flatMap { case ((cb, ce), ms) =>
+        val ss = decompose(cb, ce, meta.levelIntervals, meta.intervalFactor)
+        for (m <- ms; s <- ss) yield m -> s
+      }
+    val aggCols = Seq("minimum", "maximum", "sum", "count", "integral", "active_time")
+    val identity = disjoint.keys.toSeq.toDF("metric")
+      .select(col("metric") +: AggOps.identityAggCols: _*)
+    if (slices.isEmpty) return identity
 
-    val bounds = hta.raw.groupBy("metric")
-      .agg(min("time").as("_first"), max("time").as("_last"))
-    val coveredPred = col("_first") <= b && col("_last") >= e
-    val covered = broadcast(bounds.where(coveredPred).select("metric"))
+    // every level run in one scan of the runs' partitions and time span
+    val runs = slices.collect { case (m, LevelRun(i, lo, hi)) => (m, i, lo, hi) }
+    val levelRows = if (runs.isEmpty) None else Some(
+      hta.levels.where(col("interval").isin(runs.map(_._2).distinct: _*) &&
+          col("time") >= runs.map(_._3).min && col("time") < runs.map(_._4).max)
+        .join(broadcast(runs.toDF("metric", "interval", "_lo", "_hi")), Seq("metric", "interval"))
+        .where(col("time") >= col("_lo") && col("time") < col("_hi"))
+        .select(col("metric") +: aggCols.map(col) :+ lit(null).cast("long").as("_rb") :+
+          lit(null).cast("long").as("_re"): _*))
 
-    val pieces: Seq[DataFrame] = slices.map {
-      case LevelRun(i, rb, re) =>
-        hta.levels
-          .where(col("interval") === i && col("time") >= rb && col("time") < re)
-          .join(covered, Seq("metric"), "left_semi")
-          .select(col("metric"), col("minimum"), col("maximum"), col("sum"),
-            col("count"), col("integral"), col("active_time"))
-      case RawEdge(rb, re) =>
-        rawEdge(hta.raw.join(covered, Seq("metric"), "left_semi"), rb, re,
-          meta.intervalMax)
-    }
+    // every raw edge from one scan under the lowest edge start:
+    // aggregate_raw (src/metric.cpp:112-137), scope (closed, extended) on
+    // [rb, re) with the gap seeded at rb. Points in [rb, re) and the edge's
+    // first point at or after re are kept before the lag, so the lag sees
+    // O(interval_min) points per edge, not the store's tail.
+    val edges = slices.collect { case (m, RawEdge(rb, re)) => (m, rb, re) }
+    val lo = edges.map(_._2).min
+    val scan = (if (hta.raw.columns.contains("tb"))
+        hta.raw.where(col("tb") >= lo - Math.floorMod(lo, meta.intervalMax))
+      else hta.raw).where(col("time") >= lo)
+      .join(broadcast(edges.toDF("metric", "_rb", "_re")), Seq("metric"))
+      .where(col("time") >= col("_rb"))
+    val ext = scan.where(col("time") >= col("_re"))
+      .groupBy("metric", "_rb").agg(min("time").as("_ext"))
+    val t = col("time")
+    val prev = coalesce(lag(t, 1).over(Window.partitionBy("metric", "_rb").orderBy(t)), col("_rb"))
+    val in = t < col("_re")
+    val edgeRows = scan.join(broadcast(ext), Seq("metric", "_rb"))
+      .where(in || t === col("_ext"))
+      .withColumn("_gap", least(t, col("_re")) - prev)
+      .select(col("metric"), col("value").as("minimum"), col("value").as("maximum"),
+        when(in, col("value")).otherwise(0.0).as("sum"), when(in, 1L).otherwise(0L).as("count"),
+        (col("value") * col("_gap").cast("double")).as("integral"),
+        col("_gap").as("active_time"), col("_rb"), col("_re"))
 
-    val telescoped = pieces.reduce(_ unionByName _).groupBy("metric").agg(
-      min("minimum").as("minimum"), max("maximum").as("maximum"),
-      sum("sum").as("sum"), sum("count").as("count"),
-      sum("integral").as("integral"), sum("active_time").as("active_time"))
-
-    // exception set: metrics whose data range does not cover [b, e)
-    val rest = broadcast(bounds.where(!coveredPred).select("metric"))
-    val restAgg = Queries.aggregateRange(
-      hta.raw.join(rest, Seq("metric"), "left_semi"), b, e,
-      chunkWidth = Some(meta.intervalMax))
-
-    telescoped.unionByName(restAgg)
-  }
-
-  /** aggregate_raw over one edge (src/metric.cpp:112-137): scope
-    * (closed, extended) on [rb, re), gap seed at rb — exact for metrics
-    * covering the global range (no clamping binds). */
-  private def rawEdge(raw: DataFrame, rb: Long, re: Long,
-                      bucketWidth: Long): DataFrame = {
-    // derived time-bucket bound → parquet directory pruning on the edge scan
-    val pruned =
-      if (raw.columns.contains("tb"))
-        raw.where(col("tb") >= (rb - Math.floorMod(rb, bucketWidth)))
-      else raw
-    val inRange = pruned.where(col("time") >= rb)
-    // per-metric edge point via scalar agg + broadcast join, NOT an unordered
-    // window (which would buffer a whole metric on one task)
-    val edge = inRange.groupBy("metric")
-      .agg(min(when(col("time") >= re, col("time"))).as("_min_ge_e"))
-    val scoped = inRange.join(broadcast(edge), Seq("metric"))
-      .where(col("time") < re || col("time") === col("_min_ge_e"))
-    AggOps.gapLiftChunked(scoped, bucketWidth, firstDefault = Some(lit(rb)))
-      .withColumnRenamed("prev_time", "_prev")
-      .withColumn("_gap",
-        when(col("time") < re, col("time") - col("_prev"))
-          .otherwise(lit(re) - col("_prev")))
-      .withColumn("_in", col("time") < re)
-      .groupBy("metric").agg(
-        min("value").as("minimum"), max("value").as("maximum"),
-        sum(when(col("_in"), col("value")).otherwise(0.0)).as("sum"),
-        sum(when(col("_in"), 1L).otherwise(0L)).as("count"),
-        sum(col("value") * col("_gap").cast("double")).as("integral"),
-        sum("_gap").as("active_time"))
+    // one monoid merge; the reference's postcondition (:229) fails loudly
+    // when the levels do not cover what raw holds. A metric's edges start
+    // at its clamped b' and end at its clamped e'.
+    levelRows.fold(edgeRows)(_.unionByName(edgeRows)).groupBy("metric")
+      .agg(min("minimum").as("minimum"), max("maximum").as("maximum"),
+        sum("sum").as("sum"), sum("count").as("count"),
+        sum("integral").as("integral"), sum("active_time").as("active_time"),
+        (max("_re") - min("_rb")).as("_span"))
+      .withColumn("active_time", when(col("active_time") === col("_span"), col("active_time"))
+        .otherwise(raise_error(concat(lit("telescoped aggregate: metric "), col("metric"),
+          lit(" covers "), col("active_time"), lit(s" ns of [$b, $e), its data range holds "),
+          col("_span"), lit(" ns: levels do not cover raw")))))
+      .drop("_span")
+      .unionByName(identity)
   }
 }

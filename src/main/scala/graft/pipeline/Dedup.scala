@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.GraftSession
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
@@ -1061,24 +1062,6 @@ object Dedup {
     * is exactness-per-candidate by construction). `f` is the corpus tf
     * frame; only candidate docs' vectors are re-derived (left_semi), the
     * corpus is never self-joined. */
-  /** Candidate-PAIR frames are data-dependent and unbounded (the uncapped
-    * oracle mode on a copy-dense corpus reached 50 M pairs), and
-    * localCheckpoint PRESERVES the child plan's size estimate — so the
-    * static planner once saw a few-MB join-output estimate and
-    * auto-broadcast a multi-GB frame into the driver. Every verify tail
-    * therefore routes on the MEASURED size: the frame is already
-    * localCheckpoint'd by every caller (the count is a cached-block scan,
-    * not a recompute), small frames keep the one-shuffle broadcast plan,
-    * big ones get an explicit merge hint — never an estimate-driven
-    * broadcast. */
-  private def confLong(spark: SparkSession, key: String,
-                       default: Long): Long =
-    spark.conf.getOption(key).map { raw =>
-      try raw.trim.toLong
-      catch { case _: NumberFormatException => throw new IllegalArgumentException(
-        s"$key must be a long integer, got '$raw'") }
-    }.getOrElse(default)
-
   /** Actual bytes the frame's localCheckpoint blocks occupy in the block
     * manager, if the frame IS a materialized localCheckpoint — a measured
     * size with ZERO extra jobs (vs the count() fallback's one action per
@@ -1100,6 +1083,16 @@ object Dedup {
     }
   }
 
+  /** Candidate-PAIR frames are data-dependent and unbounded (the uncapped
+    * oracle mode on a copy-dense corpus reached 50 M pairs), and
+    * localCheckpoint PRESERVES the child plan's size estimate — so the
+    * static planner once saw a few-MB join-output estimate and
+    * auto-broadcast a multi-GB frame into the driver. Every verify tail
+    * therefore routes on the MEASURED size: the frame is already
+    * localCheckpoint'd by every caller (the count is a cached-block scan,
+    * not a recompute), small frames keep the one-shuffle broadcast plan,
+    * big ones get an explicit merge hint — never an estimate-driven
+    * broadcast. */
   private def routePairFrame(cands: DataFrame): DataFrame = {
     val spark = cands.sparkSession
     // candidate frames arrive localCheckpoint'd from every caller, so the
@@ -1111,13 +1104,13 @@ object Dedup {
     // UnsafeRows = 80.1 MiB), so 4M pairs ≈ 336 MiB — 400 MiB keeps the
     // two signals routing the same frames the same way, and deserialized
     // block size can only OVERESTIMATE the serialized broadcast payload
-    val maxBytes = confLong(spark, "spark.graft.maxBroadcastPairBytes",
+    val maxBytes = GraftSession.confLong(spark, "spark.graft.maxBroadcastPairBytes",
       400L << 20)
     checkpointedBytes(cands) match {
       case Some(bytes) =>
         if (bytes <= maxBytes) broadcast(cands) else cands.hint("merge")
       case None =>
-        val maxPairs = confLong(spark, "spark.graft.maxBroadcastPairs",
+        val maxPairs = GraftSession.confLong(spark, "spark.graft.maxBroadcastPairs",
           4000000L)
         if (cands.count() <= maxPairs) broadcast(cands)
         else cands.hint("merge")
@@ -1726,6 +1719,8 @@ object Dedup {
                           b: String = "doc_b", maxIters: Int = 64): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val spark = edges.sparkSession
+    // read before the persist below, so a malformed value leaves no cache
+    val maxBcVerts = GraftSession.confLong(spark, "spark.graft.maxBroadcastVertices", 4000000L)
     // symmetric edges partitioned by DST before the persist (r17, guide
     // §2.4): every round's neighbour propagation groups by dst, and the
     // label side of the propagation join broadcasts under the measured
@@ -1756,8 +1751,6 @@ object Dedup {
     // — the q180/routePairFrame lesson applied in reverse), and a plain
     // shuffle join above it so a 100 TB vertex set is never collected on
     // an estimate. `changed` here is exactly the vertex count.
-    val maxBcVerts = spark.conf.getOption("spark.graft.maxBroadcastVertices")
-      .map(_.trim.toLong).getOrElse(4000000L)
     val vertexSide: DataFrame => DataFrame =
       if (changed <= maxBcVerts) broadcast else identity
     var iters = 0
@@ -2114,9 +2107,8 @@ object Dedup {
     // for corpora where re-tokenizing 3× loses to one materialization —
     // identical results either way, it only moves WHEN the frame is
     // computed.)
-    val materialize = spark.conf
-      .getOption("spark.graft.semanticDedup.materializeAssigned")
-      .exists(_.trim.toBoolean)
+    val materialize = GraftSession.confBool(spark,
+      "spark.graft.semanticDedup.materializeAssigned", default = false)
     val withN0 = v.join(asg, "doc_id")
       // Σcv² through the codegen'd graft_dot (r17): same exact int64 sum
       // as the interpreted transform/aggregate pair, evaluated once per

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.GraftSession
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -87,8 +88,7 @@ object Graph {
       e.select(col("src").as("node"))
         .unionByName(e.select(col("dst").as("node")))
         .distinct(), count(lit(1)))(_.count())
-    val maxBcVerts = spark.conf.getOption("spark.graft.maxBroadcastVertices")
-      .map(_.trim.toLong).getOrElse(4000000L)
+    val maxBcVerts = GraftSession.confLong(spark, "spark.graft.maxBroadcastVertices", 4000000L)
     val vertexSide: DataFrame => DataFrame =
       if (nVerts <= maxBcVerts) broadcast else identity
     val teleport = ((scale - damp) * scale) / scale
@@ -222,8 +222,7 @@ object Graph {
     // the measured cap (checkpointed frames carry no usable estimate for
     // the static planner), plain joins above it — never an
     // estimate-driven driver collect at 100 TB vertex counts
-    val maxBcVerts = spark.conf.getOption("spark.graft.maxBroadcastVertices")
-      .map(_.trim.toLong).getOrElse(4000000L)
+    val maxBcVerts = GraftSession.confLong(spark, "spark.graft.maxBroadcastVertices", 4000000L)
     def vertexSide(df: DataFrame, rows: Long): DataFrame =
       if (rows <= maxBcVerts) broadcast(df) else df
     // the frontier size rides the frontier's checkpoint materialization

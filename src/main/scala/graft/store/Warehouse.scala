@@ -30,7 +30,14 @@ import org.apache.spark.sql.functions._
   *    pruned raw tail scan: its Spark job count does not grow with the ladder.
   */
 final case class Hta(raw: DataFrame, levels: DataFrame, meta: Meta,
-                     metrics: Option[DataFrame] = None)
+                     metrics: Option[DataFrame] = None) {
+
+  /** Each metric's (first, last) point time, from one raw aggregate
+    * collected on first use: it reads the snapshot this handle opened. */
+  lazy val extents: Map[String, (Long, Long)] =
+    raw.groupBy("metric").agg(min("time"), max("time")).collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+}
 
 object Warehouse {
 
@@ -222,7 +229,7 @@ object Warehouse {
     import spark.implicits._
     val bound = starts.values.min
     val tbBound = bound - Math.floorMod(bound, intervalMax)
-    spark.read.parquet(s"$root/raw")
+    readRaw(spark, root)
       .where(col("tb") >= tbBound && col("time") >= bound)
       .drop("tb")
       .join(broadcast(starts.toSeq.toDF("metric", "_tail_start")), Seq("metric"))
@@ -231,9 +238,16 @@ object Warehouse {
   }
 
   import org.apache.spark.sql.types._
-  /** Canonical level-table schema (partition col `interval` normalized to
-    * LongType — Spark's partition inference would narrow small ladders to
-    * int). */
+  /** Declared table schemas: reads skip the schema-inference job, partition
+    * columns stay LongType (inference narrows a small `tb` or ladder to
+    * int), and a column a file lacks reads as null. */
+  val rawSchema: StructType = StructType(Seq(
+    StructField("metric", StringType), StructField("time", LongType),
+    StructField("value", DoubleType), StructField("tb", LongType)))
+
+  /** Level rows; stores written before the home-only min/max columns (or
+    * converted from .hta files) read them as null, which RollupRouting
+    * checks before it routes MIN/MAX. */
   val levelSchema: StructType = StructType(Seq(
     StructField("metric", StringType), StructField("time", LongType),
     StructField("minimum", DoubleType), StructField("maximum", DoubleType),
@@ -244,8 +258,9 @@ object Warehouse {
 
   /** `raw` keeps the `tb` partition column so query paths can hand Scoped a
     * bucket hint for directory-level pruning (Scoped.scopedRange doc). */
-  /** Levels table, tolerating a legitimately empty directory (a store whose
-    * data span closes no interval: tests/basics.cpp:88-93). */
+  private def readRaw(spark: SparkSession, root: String): DataFrame =
+    spark.read.schema(rawSchema).parquet(s"$root/raw")
+
   /** If a compact crashed between `rename(dst -> bak)` and
     * `rename(tmp -> dst)`, `dst` is missing and the backup holds the only
     * copy. Every reader and the next compact must restore it — otherwise
@@ -311,30 +326,19 @@ object Warehouse {
     restoreInterruptedSwap(fs, s"$root/raw")
   }
 
-  def readLevels(spark: SparkSession, root: String): DataFrame =
-    try {
-      restoreInterruptedSwap(
-        new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration), s"$root/levels")
-      val df0 = spark.read.parquet(s"$root/levels")
-        .withColumn("interval", col("interval").cast("long"))
-      // stores written before the home-only min/max columns (or converted
-      // from .hta files, which don't carry them) read as null — harmless for
-      // HTA queries; RollupRouting gates MIN/MAX routing on their presence
-      val df = levelSchema.fieldNames.foldLeft(df0) { (d, f) =>
-        if (d.columns.contains(f)) d else d.withColumn(f, lit(null).cast("double"))
-      }
-      df.select(levelSchema.fieldNames.map(col): _*)
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], levelSchema)
-    }
+  /** Levels table; a legitimately empty directory (a store whose data span
+    * closes no interval: tests/basics.cpp:88-93) reads as empty. */
+  def readLevels(spark: SparkSession, root: String): DataFrame = {
+    restoreInterruptedSwap(
+      new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration), s"$root/levels")
+    spark.read.schema(levelSchema).parquet(s"$root/levels")
+  }
 
+  /** Opens a store snapshot without running a Spark job. */
   def open(spark: SparkSession, root: String): Hta = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     restoreInterruptedSwap(fs, s"$root/raw")
-    Hta(spark.read.parquet(s"$root/raw"), readLevels(spark, root),
+    Hta(readRaw(spark, root), readLevels(spark, root),
       readMeta(spark, root), readCatalog(spark, root))
   }
 
@@ -352,10 +356,10 @@ object Warehouse {
       val parts = fs.listStatus(dir)
         .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
         .map(_.getPath.toString)
+      val schema = StructType(Seq(StructField("metric", StringType)))
       if (parts.isEmpty)
-        Some(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("metric", StringType)))))
-      else Some(spark.read.parquet(parts.toIndexedSeq: _*))
+        Some(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+      else Some(spark.read.schema(schema).parquet(parts.toIndexedSeq: _*))
     }
   }
 
@@ -404,7 +408,7 @@ object Warehouse {
         .write.mode(SaveMode.Overwrite).partitionBy("interval")
         .parquet(s"$root/levels_compact_tmp")
       swap(s"$root/levels_compact_tmp", s"$root/levels")
-      spark.read.parquet(s"$root/raw")
+      readRaw(spark, root)
         .repartition(col("tb"),
           pmod(xxhash64(col("metric")), lit(filesPerPartition)))
         .sortWithinPartitions("metric", "time")

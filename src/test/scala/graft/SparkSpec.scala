@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -39,6 +40,28 @@ trait SparkSpec extends AnyFunSuite {
     }
 
   def fixtureDf: DataFrame = pointsDf(fixture110)
+
+  /** Spark jobs started by `body`: a marker job run after it drains the
+    * listener bus, whose events arrive in submission order. */
+  def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "drain"))
+          drained.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription("drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(l)
+    jobs.get
+  }
 
   def tmpDir(name: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft-$name").toFile

@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.hta.RetrieveFlex
 import graft.model.Meta
 import graft.tools.Tools
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Port of /root/reference/tests/restore.cpp:60-215 — ingesting the fixture
   * across multiple sessions (batch appends) must produce exactly the same
@@ -135,28 +134,6 @@ class RestoreSpec extends SparkSpec {
     assert(hta.raw.drop("tb").orderBy("metric", "time").collect().toSeq ===
       oneShot.raw.drop("tb").orderBy("metric", "time").collect().toSeq)
     assert(Tools.check(hta, tp(100000)).count() === 0)
-  }
-
-  /** Spark jobs started by `body`: a marker job run after it drains the
-    * listener bus, whose events arrive in submission order. */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "drain"))
-          drained.countDown()
-        else jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setJobDescription("drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(l)
-    jobs.get
   }
 
   test("append issues as many Spark jobs into 7 levels as into 3") {
