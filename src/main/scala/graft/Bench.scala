@@ -30,8 +30,7 @@ object Bench {
     try SparkEntry.entry(spark).queryExecution.toRdd.count()
     catch { case _: Throwable => () }
     // pre-build ALL memoized stores (warehouse, clone, multi-Meta) so query
-    // timings measure retrieval plans, not one-time ingest — ingest
-    // throughput has its own benchmark (graft.IngestBench)
+    // timings measure retrieval plans, not one-time ingest
     try graft.registry.Registry.warehouseFor(spark, sfDir)
     catch { case _: Throwable => () }
     try graft.registry.Registry.cloneFor(spark, sfDir)

@@ -207,8 +207,7 @@ object AggOps {
   val levelCols: Seq[String] =
     Seq("metric", "time", "minimum", "maximum", "sum", "count", "integral", "active_time")
 
-  /** [[levelBuild]] on a pre-lifted frame (lets ingest reuse one gapLift
-    * shuffle across all levels). */
+  /** [[levelBuild]] on a pre-lifted frame. */
   def levelBuildFromLifted(lifted: DataFrame, interval: Long,
                            metric: String = "metric",
                            time: String = "time",
@@ -232,7 +231,9 @@ object AggOps {
     * `level` must be a levelBuild output at `childInterval`;
     * `parentInterval = childInterval * factor`.
     * A parent interval is closed iff its children run to its end
-    * (src/metric.cpp:576-603: the child whose end == parent end closes it). */
+    * (src/metric.cpp:576-603: the child whose end == parent end closes it).
+    * Stores build each parent straight from lifted raw instead
+    * (Warehouse.writeTails); LevelBuildSpec pins the two equal. */
   def rollup(level: DataFrame, childInterval: Long, parentInterval: Long): DataFrame = {
     require(parentInterval % childInterval == 0)
     val last = level.groupBy("metric")

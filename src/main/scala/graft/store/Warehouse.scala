@@ -22,12 +22,11 @@ import org.apache.spark.sql.functions._
   *  - levels are partitioned by `interval`: retrieveFlex touches exactly one
   *    directory per chosen level; within a partition, files are written
   *    sorted by (metric, time) for row-group skipping;
-  *  - the level build is one gap-lift shuffle + one aggregation per level,
-  *    all reusing the same lifted frame (no per-point cascade — the
-  *    reference's insert-time recursion becomes batch rollup k→k+1, which
-  *    reads the (much smaller) child level, not raw);
-  *  - an append recomputes every level's open tail in one pass from one
-  *    pruned raw tail scan: its Spark job count does not grow with the ladder.
+  *  - one ladder writer: ingest and append both build every level's rows
+  *    in one plan from one pruned raw scan, one gap lift and one
+  *    aggregation with the interval as a grouping column (no per-point
+  *    cascade, no level read back); ingest is the append plan run into an
+  *    empty store, so neither one's Spark job count grows with the ladder.
   */
 final case class Hta(raw: DataFrame, levels: DataFrame, meta: Meta,
                      metrics: Option[DataFrame] = None) {
@@ -41,72 +40,66 @@ final case class Hta(raw: DataFrame, levels: DataFrame, meta: Meta,
 
 object Warehouse {
 
-  /** Batch ingest: write raw + build the full level ladder (A4+A5).
-    * Monotonicity (F5) is asserted per metric via one window pass when
-    * `validate` — mirroring the reference's ingest-time throw
-    * (src/metric.cpp:515-524). */
+  /** Batch ingest (A4+A5): the [[append]] plan run into an empty store, as the
+    * reference ingests through its insert cascade (src/metric.cpp:510-603).
+    * One row per metric is collected before any write: F5's zero and
+    * duplicate times when `validate` (src/metric.cpp:515-524), and its first
+    * and last points; with no store to join, a metric's start at every level
+    * is its first point. */
   def ingest(points: DataFrame, meta: Meta, root: String,
              validate: Boolean = true): Hta = {
     val spark = points.sparkSession
-    if (validate) {
-      // chunked lag (no whole-metric window); MinValue sentinel marks each
-      // metric's first point so a duplicate timestamp still trips the check
-      val lifted = AggOps.gapLiftChunked(points, meta.intervalMax,
-        firstDefault = Some(lit(Long.MinValue)))
-      val bad = lifted.where(col("time") === 0L ||
-          (col("prev_time") =!= Long.MinValue && col("time") <= col("prev_time")))
-        .limit(1).count()
-      require(bad == 0L, "non-monotonic or zero timestamp in ingest batch")
-    }
-
-    writeRaw(points, meta, root, SaveMode.Overwrite)
-
-    // level ladder: L0 from raw (one gapLift shuffle), k→k+1 from level k
-    val ladder = meta.levelIntervals
-    val l0 = AggOps.levelBuild(points, ladder.head,
-      chunkWidth = Some(meta.intervalMax))
-      .withColumn("interval", lit(ladder.head))
-    writeLevel(l0, root, SaveMode.Overwrite)
-    for ((parent, idx) <- ladder.zipWithIndex.drop(1)) {
-      // read the just-written child back: rollup then scans the (small)
-      // materialized level instead of recomputing the whole lineage
-      val child = readLevels(spark, root)
-        .where(col("interval") === ladder(idx - 1)).drop("interval")
-      val built = AggOps.rollup(child, ladder(idx - 1), parent)
-        .withColumn("interval", lit(parent))
-      writeLevel(built, root, SaveMode.Append)
-    }
-
-    points.select("metric").distinct()
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/_metrics")
-    writeMeta(meta, root, spark)
+    import spark.implicits._
+    val spans = batchSpans(points, validate).collect().map { r =>
+      checkBatch(r, "ingest")
+      MetricSpan(r.getString(0), r.getAs[Long]("b_first"), r.getAs[Long]("b_last"), isNew = true)
+    }.toSeq
+    writeRaw(points, meta.intervalMax, s"$root/raw", SaveMode.Overwrite)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(s"$root/levels"), true)
+    fs.mkdirs(new Path(s"$root/levels"))
+    writeTails(readRaw(spark, root).drop("tb"), meta, root, tailsOf(spans, meta, Map.empty))
+    writeCatalog(spans.map(_.metric).toDF("metric"), root)
+    writeMetaPublic(meta, root, spark)
     open(spark, root)
   }
 
-  private def writeRaw(points: DataFrame, meta: Meta, root: String,
-                       mode: SaveMode): Unit =
+  /** The one raw writer: points partitioned by `tb` under `dir`, sorted by
+    * (metric, time), spread as in [[writeLevel]]. */
+  private def writeRaw(points: DataFrame, intervalMax: Long, dir: String, mode: SaveMode,
+                       spread: Int = 1): Unit =
     withWriterCoalesce(points.sparkSession) {
-      points
-        .withColumn("tb", AggOps.intervalBegin(col("time"), meta.intervalMax))
-        .repartition(col("tb"))
+      val withTb = points.withColumn("tb", AggOps.intervalBegin(col("time"), intervalMax))
+      (if (spread == 1) withTb.repartition(col("tb"))
+       else withTb.repartition(col("tb"), pmod(xxhash64(col("metric")), lit(spread))))
         .sortWithinPartitions("metric", "time")
         .write.mode(mode).partitionBy("tb")
-        .parquet(s"$root/raw")
+        .parquet(dir)
     }
 
-  private def writeLevel(level: DataFrame, root: String, mode: SaveMode): Unit =
+  /** The one level writer: rows partitioned by `interval` under `dir`, sorted
+    * by (metric, time) for row-group skipping, in one file per partition at
+    * small scale, or spread over `spread` files by metric hash. */
+  private[graft] def writeLevel(level: DataFrame, dir: String, mode: SaveMode,
+                                spread: Int = 1): Unit =
     withWriterCoalesce(level.sparkSession) {
-      level.repartition(col("interval"))
+      (if (spread == 1) level.repartition(col("interval"))
+       else level.repartition(col("interval"), pmod(xxhash64(col("metric")), lit(spread))))
         .sortWithinPartitions("interval", "metric", "time")
         .write.mode(mode).partitionBy("interval")
-        .parquet(s"$root/levels")
+        .parquet(dir)
     }
 
-  /** public alias for streaming sinks */
-  def writeMetaPublic(meta: Meta, root: String, spark: SparkSession): Unit =
-    writeMeta(meta, root, spark)
+  /** Replaces `_metrics` with `names` as one file, written beside it first. */
+  private def writeCatalog(names: DataFrame, root: String): Unit = {
+    names.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/_metrics_tmp")
+    val fs = new Path(root).getFileSystem(names.sparkSession.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(s"$root/_metrics"), true)
+    fs.rename(new Path(s"$root/_metrics_tmp"), new Path(s"$root/_metrics"))
+  }
 
-  private def writeMeta(meta: Meta, root: String, spark: SparkSession): Unit = {
+  /** Writes `meta.json`; public for the streaming sinks. */
+  def writeMetaPublic(meta: Meta, root: String, spark: SparkSession): Unit = {
     val json =
       s"""{"interval_min":${meta.intervalMin},"interval_max":${meta.intervalMax},"interval_factor":${meta.intervalFactor}}"""
     val p = new Path(s"$root/meta.json")
@@ -126,17 +119,13 @@ object Warehouse {
   }
 
   /** Q4 analogue — incremental batch append (reference restore_level,
-    * src/metric.cpp:451-497): instead of rebuilding the ladder, recompute
-    * only each level's OPEN TAIL — the region at/after the last closed
-    * interval end `interval_begin(old_last, k)`. New points can never touch
-    * an already-closed row (a row closes only when a later point crosses its
-    * end), so appends are strictly additive. All levels come from one pass
-    * (one tail scan, gap lift, aggregation and level write), as
-    * StreamIngest.foldBatch folds every level at once. F5
-    * (src/metric.cpp:515-524): a zero or duplicate time, or a point at or
+    * src/metric.cpp:451-497): recompute only each level's OPEN TAIL, the
+    * region at/after the last closed interval end. New points never touch a
+    * closed row (a row closes only when a later point crosses its end), so
+    * appends are strictly additive; all levels come from one [[writeTails]].
+    * F5 (src/metric.cpp:515-524): a zero or duplicate time, or a point at or
     * before its metric's last, rejects the batch before anything is written.
-    * Scale: one row per metric and one per (metric, level) are collected.
-    */
+    * Scale: one row per metric and one per (metric, level) are collected. */
   def append(points: DataFrame, root: String): Hta = {
     val spark = points.sparkSession
     import spark.implicits._
@@ -145,43 +134,76 @@ object Warehouse {
 
     // F5 pre-pass, one row per metric of the batch or the store: the batch's
     // zero and duplicate times and first/last point, beside the store's
-    val spans = points.groupBy("metric")
-      .agg(count(when(col("time") === 0L, 1)).as("zeros"),
-        (count("time") - countDistinct("time")).as("dups"),
-        min("time").as("b_first"), max("time").as("b_last"))
+    val spans = batchSpans(points, f5 = true)
       .join(existing.raw.groupBy("metric")
         .agg(min("time").as("first"), max("time").as("last")),
         Seq("metric"), "full_outer")
       .collect().map { r =>
         def opt(f: String) = Option(r.getAs[java.lang.Long](f)).map(_.longValue)
-        require(opt("zeros").forall(_ == 0L), "zero timestamp in append batch")
-        require(opt("dups").forall(_ == 0L), "duplicate timestamp in append batch")
+        checkBatch(r, "append")
         require(opt("last").forall(l => opt("b_first").forall(_ > l)),
           "append batch not monotonic vs existing data")
         MetricSpan(r.getAs[String]("metric"), opt("first").orElse(opt("b_first")).get,
           opt("b_last").orElse(opt("last")).get, isNew = opt("first").isEmpty)
-      }
+      }.toSeq
 
-    // every (metric, level) whose open tail now closes rows: from the closed
-    // end (none yet: the first point) up to the bucket holding the last point
     val closed = closedEnds(existing.levels).map { case (i, m, end) => (i, m) -> end }.toMap
-    val tails = for {
-      s <- spans.toSeq; k <- meta.levelIntervals
+    val tails = tailsOf(spans, meta, closed)
+    writeRaw(points, meta.intervalMax, s"$root/raw", SaveMode.Append)
+    writeTails(tailRegion(spark, root, tails.groupMapReduce(_._1)(_._3)(math.min),
+      meta.intervalMax), meta, root, tails)
+
+    // merge new metric names into the catalog (S6); a store created before
+    // the catalog existed gets one listing every metric
+    val names = spans.collect { case s if s.isNew || existing.metrics.isEmpty => s.metric }
+    if (names.nonEmpty) {
+      val added = names.toDF("metric")
+      writeCatalog(existing.metrics.fold(added)(_.unionByName(added).distinct()), root)
+    }
+    open(spark, root)
+  }
+
+  /** One row per metric of a batch: its first and last point and, when
+    * `f5`, its counts of zero and of duplicate times (zeros otherwise). */
+  private def batchSpans(points: DataFrame, f5: Boolean): DataFrame =
+    points.groupBy("metric")
+      .agg((if (f5) count(when(col("time") === 0L, 1)) else lit(0L)).as("zeros"),
+        (if (f5) count("time") - countDistinct("time") else lit(0L)).as("dups"),
+        min("time").as("b_first"), max("time").as("b_last"))
+
+  /** F5 on one [[batchSpans]] row; a metric absent from the batch passes. */
+  private def checkBatch(r: org.apache.spark.sql.Row, what: String): Unit =
+    for ((f, kind) <- Seq("zeros" -> "zero", "dups" -> "duplicate"))
+      require(Option(r.getAs[java.lang.Long](f)).forall(_ == 0L), s"$kind timestamp in $what batch")
+
+  /** A metric's first and last point once the batch is in. */
+  private final case class MetricSpan(metric: String, first: Long, last: Long, isNew: Boolean)
+
+  /** Every (metric, level, start, open bucket) whose open tail now closes
+    * rows: from the level's closed end (none yet: the metric's first point)
+    * up to the bucket holding its last point. */
+  private def tailsOf(spans: Seq[MetricSpan], meta: Meta,
+                      closed: Map[(Long, String), Long]): Seq[(String, Long, Long, Long)] =
+    for {
+      s <- spans; k <- meta.levelIntervals
       start = closed.getOrElse((k, s.metric), s.first)
       lastBucket = s.last - Math.floorMod(s.last, k)
       if start - Math.floorMod(start, k) < lastBucket
     } yield (s.metric, k, start, lastBucket)
 
-    writeRaw(points, meta, root, SaveMode.Append)
-
+  /** Appends the rows every tail closes, all levels in one plan (no tails: no
+    * plan, `region` unbuilt): one gap lift of raw `region` (chunk grid == tb
+    * layout), one broadcast join to the tails, one split with the interval as
+    * a column, one aggregation, one level write. A metric's first point lifts
+    * to the sentinel, which the level's start replaces: the closed end (the
+    * reference's Level restore gap origin), or the point's own time at a
+    * level with no closed rows. */
+  private def writeTails(region: => DataFrame, meta: Meta, root: String,
+                         tails: Seq[(String, Long, Long, Long)]): Unit =
     if (tails.nonEmpty) {
-      val starts = tails.groupMapReduce(_._1)(_._3)(math.min)
-      // a metric's first point in the tail lifts to the sentinel, which the
-      // per-level start then replaces: the closed end (the reference's Level
-      // restore gap origin), or the point's own time at a level with no
-      // closed rows. Skew-safe chunked lag, chunk grid == tb layout.
-      val lifted = AggOps.gapLiftChunked(
-        tailRegion(spark, root, starts, meta.intervalMax), meta.intervalMax,
+      val raw = region
+      import raw.sparkSession.implicits._
+      val lifted = AggOps.gapLiftChunked(raw, meta.intervalMax,
         firstDefault = Some(lit(Long.MinValue)))
       val newRows = AggOps.boundarySplit(
           lifted.join(broadcast(tails.toDF("metric", "interval", "_start", "_open")),
@@ -193,25 +215,8 @@ object Warehouse {
         .groupBy(col("metric"), col("interval"), col("bstart").as("time"))
         .agg(AggOps.segmentAggCols(col("value")).head,
           AggOps.segmentAggCols(col("value")).tail: _*)
-      writeLevel(newRows, root, SaveMode.Append)
+      writeLevel(newRows, s"$root/levels", SaveMode.Append)
     }
-
-    // merge new metric names into the catalog (S6); a store created before
-    // the catalog existed gets one listing every metric
-    val names = spans.collect { case s if s.isNew || existing.metrics.isEmpty => s.metric }
-    if (names.nonEmpty) {
-      val added = names.toSeq.toDF("metric")
-      existing.metrics.fold(added)(_.unionByName(added).distinct())
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/_metrics_tmp")
-      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(s"$root/_metrics"), true)
-      fs.rename(new Path(s"$root/_metrics_tmp"), new Path(s"$root/_metrics"))
-    }
-    open(spark, root)
-  }
-
-  /** A metric's first and last point once the append batch is in. */
-  private final case class MetricSpan(metric: String, first: Long, last: Long, isNew: Boolean)
 
   /** (interval, metric, end of the closed region — the last level row's
     * end), from one aggregate over every level partition. A metric with no
@@ -336,8 +341,7 @@ object Warehouse {
 
   /** Opens a store snapshot without running a Spark job. */
   def open(spark: SparkSession, root: String): Hta = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    restoreInterruptedSwap(fs, s"$root/raw")
+    restoreStore(spark, root)
     Hta(readRaw(spark, root), readLevels(spark, root),
       readMeta(spark, root), readCatalog(spark, root))
   }
@@ -400,22 +404,12 @@ object Warehouse {
       require(fs.rename(tmpP, dstP), s"compact: rename $tmp -> $dst failed")
       fs.delete(bakP, true)
     }
-    withWriterCoalesce(spark) {
-      readLevels(spark, root)
-        .repartition(col("interval"),
-          pmod(xxhash64(col("metric")), lit(filesPerPartition)))
-        .sortWithinPartitions("metric", "time")
-        .write.mode(SaveMode.Overwrite).partitionBy("interval")
-        .parquet(s"$root/levels_compact_tmp")
-      swap(s"$root/levels_compact_tmp", s"$root/levels")
-      readRaw(spark, root)
-        .repartition(col("tb"),
-          pmod(xxhash64(col("metric")), lit(filesPerPartition)))
-        .sortWithinPartitions("metric", "time")
-        .write.mode(SaveMode.Overwrite).partitionBy("tb")
-        .parquet(s"$root/raw_compact_tmp")
-      swap(s"$root/raw_compact_tmp", s"$root/raw")
-    }
+    writeLevel(readLevels(spark, root), s"$root/levels_compact_tmp", SaveMode.Overwrite,
+      filesPerPartition)
+    swap(s"$root/levels_compact_tmp", s"$root/levels")
+    writeRaw(readRaw(spark, root).drop("tb"), readMeta(spark, root).intervalMax,
+      s"$root/raw_compact_tmp", SaveMode.Overwrite, filesPerPartition)
+    swap(s"$root/raw_compact_tmp", s"$root/raw")
     open(spark, root)
   }
 

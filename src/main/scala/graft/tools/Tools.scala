@@ -216,11 +216,8 @@ object Tools {
     require(rawDirs.exists(_._1 >= h),
       s"retire($h) would delete EVERY raw bucket — refusing; " +
         "dropping a whole store is a delete, not retention")
-    val keptLevels = Warehouse.readLevels(spark, root)
-      .where(col("time") >= h)
-    keptLevels
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("interval").parquet(s"$root/levels_compact_tmp")
+    Warehouse.writeLevel(Warehouse.readLevels(spark, root).where(col("time") >= h),
+      s"$root/levels_compact_tmp", org.apache.spark.sql.SaveMode.Overwrite)
     val tmpP = new org.apache.hadoop.fs.Path(s"$root/levels_compact_tmp")
     val dstP = new org.apache.hadoop.fs.Path(s"$root/levels")
     val bakP = new org.apache.hadoop.fs.Path(s"$root/levels_compact_bak")

@@ -1,7 +1,7 @@
 package graft.store
 
 import graft.SparkSpec
-import graft.hta.RetrieveFlex
+import graft.hta.{AggOps, RetrieveFlex}
 import graft.model.Meta
 import graft.tools.Tools
 
@@ -11,6 +11,7 @@ import graft.tools.Tools
 class RestoreSpec extends SparkSpec {
 
   private val meta = Meta(10 * S, 1000 * S, 10)
+  private val wide = Meta(10 * S, 10000000 * S, 10)
 
   test("multi-batch append == one-shot ingest (levels bit-identical)") {
     val all = fixture110
@@ -142,11 +143,52 @@ class RestoreSpec extends SparkSpec {
       Warehouse.ingest(pointsDf(fixture110.take(80)), m, root)
       jobsOf(Warehouse.append(pointsDf(fixture110.drop(80)), root))
     }
-    val wide = Meta(10 * S, 10000000 * S, 10)
     assert(meta.levelIntervals.length === 3 && wide.levelIntervals.length === 7)
     val three = appendJobs(meta, "jobs3")
     val seven = appendJobs(wide, "jobs7")
     assert(three > 0 && seven === three,
       s"append jobs grow with the ladder: 3 levels $three, 7 levels $seven")
+  }
+
+  test("ingest issues as many Spark jobs into 7 levels as into 3") {
+    def ingestJobs(m: Meta, tag: String): Int =
+      jobsOf(Warehouse.ingest(pointsDf(fixture110), m, tmpDir(tag)))
+    val three = ingestJobs(meta, "ingest_jobs3")
+    val seven = ingestJobs(wide, "ingest_jobs7")
+    assert(three > 0 && seven === three,
+      s"ingest jobs grow with the ladder: 3 levels $three, 7 levels $seven")
+  }
+
+  test("ingest levels equal AggOps.levelBuild level by level, bit for bit") {
+    def series(metric: String, secs: Seq[Long]) =
+      secs.map(t => (metric, tp(t), (t % 7 - 3) * 0.25))
+    // `paused` is silent across a 1000 s interval and a raw bucket; `single`
+    // has one point and `short` two in one 10 s interval, so neither closes
+    // a row; `dups` repeats its first time with two values (both points get
+    // gap 0, whichever sorts first) and a later time with one value
+    val pts = series("steady", 5L to 2500L by 3) ++
+      series("paused", (10L to 300L by 13) ++ (1700L to 2400L by 13)) ++
+      series("single", Seq(777L)) ++
+      series("short", Seq(1201L, 1205L)) ++
+      Seq(("dups", tp(40), 1.0), ("dups", tp(400), 2.0), ("dups", tp(400), 2.0)) ++
+      series("dups", 40L to 1500L by 17)
+    val s = spark
+    import s.implicits._
+    val df = pts.toDF("metric", "time", "value")
+    val hta = Warehouse.ingest(df, meta, tmpDir("ingest_vs_build"), validate = false)
+    val cols = AggOps.levelCols ++ Seq("minimum_home", "maximum_home")
+    def bits(rows: Array[org.apache.spark.sql.Row]) = rows.toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    })
+    for (k <- meta.levelIntervals) {
+      val built = AggOps.levelBuild(df, k).select(cols.map(org.apache.spark.sql.functions.col): _*)
+        .orderBy("metric", "time").collect()
+      val got = hta.levels.where(s"interval = $k").select(cols.head, cols.tail: _*)
+        .orderBy("metric", "time").collect()
+      assert(built.map(_.getString(0)).distinct.sorted.toSeq === Seq("dups", "paused", "steady"),
+        s"level $k: metrics with closed rows")
+      assert(bits(got) === bits(built), s"level $k")
+    }
   }
 }
