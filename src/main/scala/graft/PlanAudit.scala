@@ -64,9 +64,9 @@ object PlanAudit {
       Registry.levelExact(ev, Registry.I1).explain("formatted")
     }
     section("Q4 append tail scan (expect PartitionFilters on tb + PushedFilters on time)") {
-      val starts = Warehouse.closedEnds(hta.levels).collect {
-        case (i, m, end) if i == meta.levelIntervals.head => m -> end
-      }.toMap
+      val starts = hta.levelExtents.collect {
+        case ((i, m), ext) if i == meta.levelIntervals.head => m -> ext.closedEnd
+      }
       Warehouse.tailRegion(spark, whRoot, starts, meta.intervalMax)
         .explain("formatted")
     }

@@ -1,7 +1,7 @@
 package graft.hta
 
-import graft.model.{IntervalScope, Meta, Scope}
-import graft.store.Hta
+import graft.model.{IntervalScope, Scope}
+import graft.store.{Hta, LevelExtent}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,16 +15,16 @@ import org.apache.spark.sql.functions._
   *
   * Here the router is a *materialized-view selection* over all metrics in
   * one distributed plan:
-  *   1. one pruned scan of the candidate levels → per-(metric, level)
-  *      emptiness summary (tiny aggregate);
-  *   2. per metric, choose the coarsest non-empty level (driver/broadcast);
+  *   1. per (metric, candidate level), emptiness in scope by arithmetic on
+  *      the store catalog's first row and closed end (`Hta.levelExtents`):
+  *      level rows are dense in between, as the reference's index is;
+  *   2. per metric, choose the coarsest non-empty level, on the driver;
   *   3. one pruned scan of exactly the chosen (metric, level) partitions,
   *      scope-filtered, positionally smoothed with a per-metric factor.
   *
-  * At 100 TB step 1 touches only `interval ∈ candidates` partitions (a tiny
-  * fraction of the store: each level is factor× smaller than its child), and
-  * step 3 reads exactly one level per metric. Raw is touched only in the
-  * `limit < interval_min` branch.
+  * On an opened store with a current catalog no Spark job runs before the
+  * plan is returned, and step 3 reads exactly one level per metric. Raw is
+  * touched only in the `limit < interval_min` branch.
   *
   * Result schema (Row form, include/hta/types.hpp:109-127):
   *   (metric, interval, time, minimum, maximum, sum, count, integral,
@@ -64,10 +64,7 @@ object RetrieveFlex {
     retrieveFlexMulti(Seq(hta), begin, end, limit, scope, smooth)
 
   /** Q2 over one OR several independent stores (MultiWarehouse config
-    * groups, each with its own ladder). The level-probe descent is batched:
-    * rank r probes EVERY group's r-th candidate level in one unioned
-    * summary scan, so the action count is one per descent rank — bounded by
-    * the deepest ladder — regardless of how many configs the store holds. */
+    * groups, each with its own ladder, each routed from its own catalog). */
   def retrieveFlexMulti(groups: Seq[Hta], begin: Long, end: Long, limit: Long,
                         scope: IntervalScope = IntervalScope.retrieveDefault,
                         smooth: Boolean = true): DataFrame = {
@@ -87,118 +84,61 @@ object RetrieveFlex {
 
     val (rawGs, lvlGs) = groups.partition(h => limit < h.meta.intervalMin)
     val parts = rawGs.map(h => rawBranch(h, begin, end, limit, scope, smooth)) ++
-      levelRouted(lvlGs, begin, end, limit, scope, smooth)
+      lvlGs.map(h => levelRouted(h, begin, end, limit, scope, smooth))
     parts.reduce(_ unionByName _)
   }
 
-  /** Per-level emptiness probe as FILTERED scans: each branch's time
-    * predicate reaches the parquet source (row-group pruning), instead of
-    * hiding inside an aggregate conditional over the whole partition. */
-  private def nonEmptyAt(lv: DataFrame, begin: Long, end: Long,
-                         scope: IntervalScope): DataFrame = {
-    val beginBase = scope.begin match {
-      case Scope.Closed => col("time") >= begin
-      case Scope.Open | Scope.Extended => col("time") > begin
-      case Scope.Infinity => lit(true)
+  /** Whether a level holds a row in scope of [begin, end], by arithmetic:
+    * its rows sit on every interval from `ext.first` to the closed end (the
+    * reference's `offset/interval` index, src/metric.cpp:394-409). Each
+    * begin mode picks the first row it admits; the end mode tests that row;
+    * an extended side also admits the row before `begin` (after `end`). */
+  private[graft] def nonEmptyAt(ext: LevelExtent, interval: Long, begin: Long, end: Long,
+                                scope: IntervalScope): Boolean = {
+    val last = ext.closedEnd - interval
+    // the first row at or after `from` (`from` within [first, last])
+    def rowFrom(from: Long): Long = last - Math.floorDiv(last - from, interval) * interval
+    val firstIn = scope.begin match {
+      case Scope.Infinity => Some(ext.first)
+      case Scope.Closed =>
+        if (begin <= ext.first) Some(ext.first) else if (begin > last) None else Some(rowFrom(begin))
+      case Scope.Open | Scope.Extended =>
+        if (begin < ext.first) Some(ext.first) else if (begin >= last) None else Some(rowFrom(begin + 1))
     }
-    val endBase = scope.end match {
-      case Scope.Closed => col("time") <= end
-      case Scope.Open | Scope.Extended => col("time") < end
-      case Scope.Infinity => lit(true)
-    }
-    val branches = Seq(
-      Some(lv.where(beginBase && endBase).select("metric")),
-      if (scope.begin == Scope.Extended)
-        Some(lv.where(col("time") <= begin).select("metric")) else None,
-      if (scope.end == Scope.Extended)
-        Some(lv.where(col("time") >= end).select("metric")) else None)
-    branches.flatten.reduce(_ unionByName _).distinct()
+    firstIn.exists(t => scope.end match {
+      case Scope.Closed => t <= end
+      case Scope.Open | Scope.Extended => t < end
+      case Scope.Infinity => true
+    }) || (scope.begin == Scope.Extended && ext.first <= begin) ||
+      (scope.end == Scope.Extended && last >= end)
   }
 
-  // explicit-schema local relations (not spark.implicits.toDF: Product
-  // encoders need compile-time reflection that breaks under REPL/notebook
-  // classloaders — a library entry point can't assume an application one)
   import org.apache.spark.sql.Row
   import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-  private def metricDf(spark: org.apache.spark.sql.SparkSession,
-                       ms: Seq[String]): DataFrame =
-    spark.createDataFrame(
-      java.util.Arrays.asList(ms.map(Row(_)): _*),
-      StructType(Seq(StructField("metric", StringType))))
 
-  /** The level-selection descent (materialized-view routing) for one or
-    * more ladders. The reference probes the coarsest fitting level and
-    * descends only while it is empty (src/metric.cpp:394-409). We translate
-    * that probe order: rank r scans every still-active group's r-th
-    * candidate level (each pruned to one partition) for metrics still
-    * unrouted, as ONE unioned summary collect; in the common case rank 0
-    * answers every metric of every group and the finer, larger levels are
-    * never read. The routing table is one entry per metric — broadcast-
-    * sized by design — so it lives on the DRIVER: the early exit and the
-    * unrouted exclusion cost no extra Spark actions, and nothing is cached
-    * (previous versions leaked cached frames into executor storage memory). */
-  private def levelRouted(hs: Seq[Hta], begin: Long, end: Long, limit: Long,
-                          scope: IntervalScope, smooth: Boolean): Seq[DataFrame] = {
-    if (hs.isEmpty) return Nil
-    val spark = hs.head.raw.sparkSession
-
-    final case class G(h: Hta, capped: Long, candidates: Seq[Long], desc: Seq[Long])
-    val gs = hs.map { h =>
-      val ladder = h.meta.levelIntervals
-      val capped = math.min(limit, h.meta.intervalMax)
-      val coarsest = ladder.takeWhile(_ <= capped).lastOption.getOrElse(h.meta.intervalMin)
-      val candidates = ladder.filter(_ <= coarsest)
-      G(h, capped, candidates, candidates.reverse)
-    }
-
-    // metric universe for the early exit: the warehouse catalog when
-    // available (tiny table maintained at ingest), else derived once from
-    // the coarsest populated level — one collect across ALL groups
-    val universes: Map[Int, Set[String]] = gs.zipWithIndex.map { case (g, gi) =>
-      g.h.metrics.getOrElse(g.h.levels.where(col("interval") === g.candidates.last)
-        .select("metric").distinct())
-        .select("metric").withColumn("_g", lit(gi))
-    }.reduce(_ unionByName _).collect()
-      .groupBy(_.getInt(1))
-      .map { case (gi, rows) => gi -> rows.map(_.getString(0)).toSet }
-
-    val routedPairs = Array.fill(gs.size)(Vector.empty[(String, Long)])
-    val routedSet = Array.fill(gs.size)(Set.empty[String])
-    def active(gi: Int, rank: Int): Boolean =
-      rank < gs(gi).desc.size &&
-        !(routedSet(gi).nonEmpty &&
-          universes.getOrElse(gi, Set.empty).subsetOf(routedSet(gi)))
-    var rank = 0
-    val maxRank = gs.map(_.desc.size).max
-    while (rank < maxRank && gs.indices.exists(active(_, rank))) {
-      val branches = gs.indices.flatMap { gi =>
-        if (!active(gi, rank)) None
-        else {
-          val i = gs(gi).desc(rank)
-          val probe0 = gs(gi).h.levels.where(col("interval") === i)
-          val probe = if (routedSet(gi).isEmpty) probe0
-            else probe0.join(broadcast(metricDf(spark, routedSet(gi).toSeq)),
-              Seq("metric"), "left_anti")
-          Some(nonEmptyAt(probe, begin, end, scope)
-            .select(col("metric"), lit(gi).as("_g"), lit(i).as("_i")))
-        }
-      }
-      branches.reduce(_ unionByName _).collect().foreach { r =>
-        val gi = r.getInt(1)
-        routedPairs(gi) :+= ((r.getString(0), r.getLong(2)))
-        routedSet(gi) += r.getString(0)
-      }
-      rank += 1
-    }
-
-    gs.zipWithIndex.map { case (g, gi) =>
-      val chosen = spark.createDataFrame(
-        java.util.Arrays.asList(routedPairs(gi).map { case (m, i) => Row(m, i) }: _*),
-        StructType(Seq(StructField("metric", StringType),
-          StructField("interval", LongType))))
-      routeAndSmooth(g.h, chosen, routedPairs(gi).map(_._2).distinct, begin, end,
-        scope, smooth, g.capped, g.candidates)
-    }
+  /** The level selection (materialized-view routing) of one ladder, on the
+    * driver. The reference probes the coarsest fitting level and descends
+    * only while it is empty (src/metric.cpp:394-409); here each metric takes
+    * its coarsest candidate level that is non-empty in scope ([[nonEmptyAt]]
+    * on the catalog), so no level is read to route. */
+  private def levelRouted(h: Hta, begin: Long, end: Long, limit: Long,
+                          scope: IntervalScope, smooth: Boolean): DataFrame = {
+    val ladder = h.meta.levelIntervals
+    val capped = math.min(limit, h.meta.intervalMax)
+    val coarsest = ladder.takeWhile(_ <= capped).lastOption.getOrElse(h.meta.intervalMin)
+    val candidates = ladder.filter(_ <= coarsest)
+    val routed = h.levelExtents.toSeq.collect {
+      case ((i, m), ext) if candidates.contains(i) && nonEmptyAt(ext, i, begin, end, scope) =>
+        m -> i
+    }.groupMapReduce(_._1)(_._2)(math.max).toSeq
+    // explicit-schema local relation (not spark.implicits.toDF: Product
+    // encoders need compile-time reflection that breaks under REPL/notebook
+    // classloaders — a library entry point can't assume an application one)
+    val chosen = h.raw.sparkSession.createDataFrame(
+      java.util.Arrays.asList(routed.map { case (m, i) => Row(m, i) }: _*),
+      StructType(Seq(StructField("metric", StringType), StructField("interval", LongType))))
+    routeAndSmooth(h, chosen, routed.map(_._2).distinct, begin, end,
+      scope, smooth, capped, candidates)
   }
 
   private def routeAndSmooth(hta: Hta, chosen: DataFrame, usedIntervals: Seq[Long],

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * (O(2·factor·#levels) level rows + O(interval_min) raw points per metric).
   *
   * As in the reference, each metric's range is clamped to its data range
-  * (`Hta.extents`, collected once per opened store) before it is
+  * (`Hta.extents`, read from the store catalog) before it is
   * decomposed; metrics disjoint from [b, e) get the identity row. The
   * decomposition is driver-side arithmetic, shared by metrics with the same
   * clamp, and becomes two broadcast tables: level runs (metric, interval,
@@ -74,8 +74,8 @@ object Telescope {
     val meta = hta.meta
     // overlap test and clamp per metric (src/metric.cpp:169-181); metrics
     // with the same clamp share one decomposition
-    val (live, disjoint) = hta.extents.partition { case (_, (f, l)) => e > f && b <= l }
-    val slices = live.toSeq.groupMap { case (_, (f, l)) => (math.max(b, f), math.min(e, l)) }(_._1)
+    val (live, disjoint) = hta.extents.partition { case (_, x) => e > x.first && b <= x.last }
+    val slices = live.toSeq.groupMap { case (_, x) => (math.max(b, x.first), math.min(e, x.last)) }(_._1)
       .toSeq.flatMap { case ((cb, ce), ms) =>
         val ss = decompose(cb, ce, meta.levelIntervals, meta.intervalFactor)
         for (m <- ms; s <- ss) yield m -> s

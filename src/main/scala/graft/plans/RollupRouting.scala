@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.store.{Hta, Warehouse}
+import graft.store.Hta
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -42,20 +42,25 @@ object RollupRouting {
 
   @volatile private[plans] var routes: Seq[Route] = Nil
 
-  /** Snapshot the warehouse's routing info and activate the rule on this
-    * session. Watermark per level = min over metrics of (last closed end).
+  /** Watermark per level = min over metrics of its closed end, from the
+    * store catalog (no Spark job on an opened store).
     *
     * An interval is routable ONLY if every raw metric has closed rows there:
     * a metric whose points all sit in one open bucket has raw rows but no
     * level rows, and the rewritten Aggregate over the level table would
     * silently drop its group while the raw plan returns it. */
-  def install(spark: SparkSession, hta: Hta): Unit = {
-    val rawMetrics: Set[String] = hta.metrics
-      .getOrElse(hta.raw.select("metric").distinct())
-      .select("metric").collect().map(_.getString(0)).toSet
-    val wm: Map[Long, Long] = Warehouse.closedEnds(hta.levels).groupBy(_._1).collect {
-      case (i, ends) if rawMetrics.subsetOf(ends.map(_._2).toSet) => i -> ends.map(_._3).min
+  private[graft] def watermarks(hta: Hta): Map[Long, Long] = {
+    val rawMetrics = hta.extents.keySet
+    hta.levelExtents.toSeq.groupBy(_._1._1).collect {
+      case (i, ends) if rawMetrics.subsetOf(ends.map(_._1._2).toSet) =>
+        i -> ends.map(_._2.closedEnd).min
     }
+  }
+
+  /** Snapshot the warehouse's routing info ([[watermarks]]) and activate the
+    * rule on this session. */
+  def install(spark: SparkSession, hta: Hta): Unit = {
+    val wm = watermarks(hta)
     val rawPaths = hta.raw.queryExecution.analyzed.collect {
       case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
         fs.location.rootPaths.map(_.toString)

@@ -89,9 +89,9 @@ object MultiWarehouse {
     MultiHta(root, groups, new Catalog(configs), configs)
   }
 
-  /** Q2 over a multi-Meta store: each group routes against its OWN ladder,
-    * with the probe descent BATCHED across groups — one summary action per
-    * ladder rank regardless of config count. Non-readable configs skipped. */
+  /** Q2 over a multi-Meta store: each group routes against its OWN ladder
+    * from its own store catalog — no Spark action to route, whatever the
+    * config count. Non-readable configs skipped. */
   def retrieveFlex(mh: MultiHta, begin: Long, end: Long, limit: Long,
                    scope: IntervalScope = IntervalScope.retrieveDefault,
                    smooth: Boolean = true): DataFrame =

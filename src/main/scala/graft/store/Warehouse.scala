@@ -13,6 +13,11 @@ import org.apache.spark.sql.functions._
   *   <root>/raw/tb=<bucket>/...parquet      time-bucketed raw samples
   *   <root>/levels/interval=<ns>/...parquet one partition per ladder level
   *   <root>/meta.json                       per-store Meta (interval ladder)
+  *   <root>/catalog.json                    the [[StoreCatalog]]: per metric
+  *                                          first/last point and count, per
+  *                                          (level, metric) first row and
+  *                                          closed end, and the files it
+  *                                          describes
   *
   * Scale design:
   *  - raw is partitioned by a coarse time bucket (`tb = time / interval_max`)
@@ -26,16 +31,25 @@ import org.apache.spark.sql.functions._
   *    in one plan from one pruned raw scan, one gap lift and one
   *    aggregation with the interval as a grouping column (no per-point
   *    cascade, no level read back); ingest is the append plan run into an
-  *    empty store, so neither one's Spark job count grows with the ladder.
+  *    empty store, so neither one's Spark job count grows with the ladder;
+  *  - both write the catalog last, from what they already collected, and
+  *    reads plan from it (flex routing, the aggregate's clamp, the routing
+  *    watermark) without a Spark job.
   */
 final case class Hta(raw: DataFrame, levels: DataFrame, meta: Meta,
-                     metrics: Option[DataFrame] = None) {
+                     catalog: Option[StoreCatalog] = None) {
 
-  /** Each metric's (first, last) point time, from one raw aggregate
-    * collected on first use: it reads the snapshot this handle opened. */
-  lazy val extents: Map[String, (Long, Long)] =
-    raw.groupBy("metric").agg(min("time"), max("time")).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+  /** Each metric's first and last point and point count: the catalog's when
+    * [[Warehouse.open]] found it current, else one raw aggregate collected
+    * on first use (it reads the snapshot this handle opened). */
+  lazy val extents: Map[String, MetricExtent] =
+    catalog.fold(StoreCatalog.metricsOf(raw))(_.metrics)
+
+  /** Each (level interval, metric)'s first row and closed end, from the
+    * catalog as [[extents]]; a metric with no closed row at a level has no
+    * entry there. */
+  lazy val levelExtents: Map[(Long, String), LevelExtent] =
+    catalog.fold(StoreCatalog.levelsOf(levels))(_.levels)
 }
 
 object Warehouse {
@@ -44,23 +58,24 @@ object Warehouse {
     * reference ingests through its insert cascade (src/metric.cpp:510-603).
     * One row per metric is collected before any write: F5's zero and
     * duplicate times when `validate` (src/metric.cpp:515-524), and its first
-    * and last points; with no store to join, a metric's start at every level
-    * is its first point. */
+    * and last points and count; with no store to join, a metric's start at
+    * every level is its first point. */
   def ingest(points: DataFrame, meta: Meta, root: String,
              validate: Boolean = true): Hta = {
     val spark = points.sparkSession
-    import spark.implicits._
     val spans = batchSpans(points, validate).collect().map { r =>
       checkBatch(r, "ingest")
-      MetricSpan(r.getString(0), r.getAs[Long]("b_first"), r.getAs[Long]("b_last"), isNew = true)
-    }.toSeq
+      r.getString(0) -> MetricExtent(r.getAs[Long]("b_first"), r.getAs[Long]("b_last"),
+        r.getAs[Long]("b_count"))
+    }.toMap
     writeRaw(points, meta.intervalMax, s"$root/raw", SaveMode.Overwrite)
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(s"$root/levels"), true)
     fs.mkdirs(new Path(s"$root/levels"))
-    writeTails(readRaw(spark, root).drop("tb"), meta, root, tailsOf(spans, meta, Map.empty))
-    writeCatalog(spans.map(_.metric).toDF("metric"), root)
+    val tails = tailsOf(spans, meta, Map.empty)
+    writeTails(readRaw(spark, root).drop("tb"), meta, root, tails)
     writeMetaPublic(meta, root, spark)
+    writeCatalog(spark, root, spans, levelsAfter(Map.empty, tails))
     open(spark, root)
   }
 
@@ -90,13 +105,13 @@ object Warehouse {
         .parquet(dir)
     }
 
-  /** Replaces `_metrics` with `names` as one file, written beside it first. */
-  private def writeCatalog(names: DataFrame, root: String): Unit = {
-    names.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/_metrics_tmp")
-    val fs = new Path(root).getFileSystem(names.sparkSession.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(s"$root/_metrics"), true)
-    fs.rename(new Path(s"$root/_metrics_tmp"), new Path(s"$root/_metrics"))
-  }
+  /** Writes the catalog of the data just written, with the files it lists
+    * now: the last step of [[ingest]] and [[append]]. */
+  private def writeCatalog(spark: SparkSession, root: String,
+                           metrics: Map[String, MetricExtent],
+                           levels: Map[(Long, String), LevelExtent]): Unit =
+    StoreCatalog.write(spark, root, StoreCatalog(
+      StoreCatalog.filesOf(root, readRaw(spark, root), readLevels(spark, root)), metrics, levels))
 
   /** Writes `meta.json`; public for the streaming sinks. */
   def writeMetaPublic(meta: Meta, root: String, spark: SparkSession): Unit = {
@@ -125,71 +140,73 @@ object Warehouse {
     * appends are strictly additive; all levels come from one [[writeTails]].
     * F5 (src/metric.cpp:515-524): a zero or duplicate time, or a point at or
     * before its metric's last, rejects the batch before anything is written.
-    * Scale: one row per metric and one per (metric, level) are collected. */
+    * The store's side (each metric's first and last point, each level's
+    * closed end) comes from its catalog, so only the batch is aggregated:
+    * one row per metric of the batch is collected. */
   def append(points: DataFrame, root: String): Hta = {
     val spark = points.sparkSession
-    import spark.implicits._
     val existing = open(spark, root)
     val meta = existing.meta
+    val stored = existing.extents
 
-    // F5 pre-pass, one row per metric of the batch or the store: the batch's
-    // zero and duplicate times and first/last point, beside the store's
-    val spans = batchSpans(points, f5 = true)
-      .join(existing.raw.groupBy("metric")
-        .agg(min("time").as("first"), max("time").as("last")),
-        Seq("metric"), "full_outer")
-      .collect().map { r =>
-        def opt(f: String) = Option(r.getAs[java.lang.Long](f)).map(_.longValue)
-        checkBatch(r, "append")
-        require(opt("last").forall(l => opt("b_first").forall(_ > l)),
-          "append batch not monotonic vs existing data")
-        MetricSpan(r.getAs[String]("metric"), opt("first").orElse(opt("b_first")).get,
-          opt("b_last").orElse(opt("last")).get, isNew = opt("first").isEmpty)
-      }.toSeq
+    // F5 pre-pass over the batch: zero and duplicate times, first/last point
+    val batch = batchSpans(points, f5 = true).collect().map { r =>
+      checkBatch(r, "append")
+      val m = r.getString(0)
+      val (bFirst, bLast) = (r.getAs[Long]("b_first"), r.getAs[Long]("b_last"))
+      val old = stored.get(m)
+      require(old.forall(_.last < bFirst), "append batch not monotonic vs existing data")
+      m -> MetricExtent(old.fold(bFirst)(_.first), bLast,
+        old.fold(0L)(_.count) + r.getAs[Long]("b_count"))
+    }
+    // every store metric takes part: one whose levels lag its raw (a raw-only
+    // stream sink) closes its rows here too
+    val spans = stored ++ batch
 
-    val closed = closedEnds(existing.levels).map { case (i, m, end) => (i, m) -> end }.toMap
+    val closed = existing.levelExtents.map { case (k, e) => k -> e.closedEnd }
     val tails = tailsOf(spans, meta, closed)
     writeRaw(points, meta.intervalMax, s"$root/raw", SaveMode.Append)
     writeTails(tailRegion(spark, root, tails.groupMapReduce(_._1)(_._3)(math.min),
       meta.intervalMax), meta, root, tails)
-
-    // merge new metric names into the catalog (S6); a store created before
-    // the catalog existed gets one listing every metric
-    val names = spans.collect { case s if s.isNew || existing.metrics.isEmpty => s.metric }
-    if (names.nonEmpty) {
-      val added = names.toDF("metric")
-      writeCatalog(existing.metrics.fold(added)(_.unionByName(added).distinct()), root)
-    }
+    writeCatalog(spark, root, spans, levelsAfter(existing.levelExtents, tails))
     open(spark, root)
   }
 
-  /** One row per metric of a batch: its first and last point and, when
-    * `f5`, its counts of zero and of duplicate times (zeros otherwise). */
+  /** One row per metric of a batch: its first and last point, its count
+    * and, when `f5`, its counts of zero and of duplicate times (zeros
+    * otherwise). */
   private def batchSpans(points: DataFrame, f5: Boolean): DataFrame =
     points.groupBy("metric")
       .agg((if (f5) count(when(col("time") === 0L, 1)) else lit(0L)).as("zeros"),
         (if (f5) count("time") - countDistinct("time") else lit(0L)).as("dups"),
-        min("time").as("b_first"), max("time").as("b_last"))
+        min("time").as("b_first"), max("time").as("b_last"), count(lit(1)).as("b_count"))
 
-  /** F5 on one [[batchSpans]] row; a metric absent from the batch passes. */
+  /** F5 on one [[batchSpans]] row. */
   private def checkBatch(r: org.apache.spark.sql.Row, what: String): Unit =
     for ((f, kind) <- Seq("zeros" -> "zero", "dups" -> "duplicate"))
-      require(Option(r.getAs[java.lang.Long](f)).forall(_ == 0L), s"$kind timestamp in $what batch")
-
-  /** A metric's first and last point once the batch is in. */
-  private final case class MetricSpan(metric: String, first: Long, last: Long, isNew: Boolean)
+      require(r.getAs[Long](f) == 0L, s"$kind timestamp in $what batch")
 
   /** Every (metric, level, start, open bucket) whose open tail now closes
     * rows: from the level's closed end (none yet: the metric's first point)
-    * up to the bucket holding its last point. */
-  private def tailsOf(spans: Seq[MetricSpan], meta: Meta,
+    * up to the bucket holding its last point. `spans` holds each metric's
+    * extent once the batch is in. */
+  private def tailsOf(spans: Map[String, MetricExtent], meta: Meta,
                       closed: Map[(Long, String), Long]): Seq[(String, Long, Long, Long)] =
     for {
-      s <- spans; k <- meta.levelIntervals
-      start = closed.getOrElse((k, s.metric), s.first)
+      (m, s) <- spans.toSeq; k <- meta.levelIntervals
+      start = closed.getOrElse((k, m), s.first)
       lastBucket = s.last - Math.floorMod(s.last, k)
       if start - Math.floorMod(start, k) < lastBucket
-    } yield (s.metric, k, start, lastBucket)
+    } yield (m, k, start, lastBucket)
+
+  /** The level half of the catalog once `tails` are written: each tail
+    * closes its level up to its open bucket; a level's first row is the
+    * bucket of its first tail's start. */
+  private def levelsAfter(before: Map[(Long, String), LevelExtent],
+                          tails: Seq[(String, Long, Long, Long)]): Map[(Long, String), LevelExtent] =
+    before ++ tails.map { case (m, k, start, open) =>
+      (k, m) -> LevelExtent(before.get((k, m)).fold(start - Math.floorMod(start, k))(_.first), open)
+    }
 
   /** Appends the rows every tail closes, all levels in one plan (no tails: no
     * plan, `region` unbuilt): one gap lift of raw `region` (chunk grid == tb
@@ -217,13 +234,6 @@ object Warehouse {
           AggOps.segmentAggCols(col("value")).tail: _*)
       writeLevel(newRows, s"$root/levels", SaveMode.Append)
     }
-
-  /** (interval, metric, end of the closed region — the last level row's
-    * end), from one aggregate over every level partition. A metric with no
-    * closed row at a level has no entry there. */
-  def closedEnds(levels: DataFrame): Seq[(Long, String, Long)] =
-    levels.groupBy("interval", "metric").agg(max(col("time") + col("interval")))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
 
   /** The raw tail scan an append recomputes: the lowest of `starts` as
     * literal `tb`/`time` bounds, so the parquet source prunes directories and
@@ -339,32 +349,13 @@ object Warehouse {
     spark.read.schema(levelSchema).parquet(s"$root/levels")
   }
 
-  /** Opens a store snapshot without running a Spark job. */
+  /** Opens a store snapshot without running a Spark job. The catalog is
+    * kept only when the files it lists are the files this snapshot reads. */
   def open(spark: SparkSession, root: String): Hta = {
     restoreStore(spark, root)
-    Hta(readRaw(spark, root), readLevels(spark, root),
-      readMeta(spark, root), readCatalog(spark, root))
-  }
-
-  /** Read the `_metrics` catalog by its CONCRETE part files: handing the
-    * `_`-prefixed directory itself to `spark.read` makes the DataSource
-    * path check log a spurious `All paths were ignored` WARN on every
-    * open/append (the FileIndex still reads it — the warning is noise,
-    * but a fresh-clone test run must not emit datasource warnings). */
-  private def readCatalog(spark: SparkSession,
-                          root: String): Option[DataFrame] = {
-    val dir = new Path(s"$root/_metrics")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) None
-    else {
-      val parts = fs.listStatus(dir)
-        .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-        .map(_.getPath.toString)
-      val schema = StructType(Seq(StructField("metric", StringType)))
-      if (parts.isEmpty)
-        Some(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-      else Some(spark.read.schema(schema).parquet(parts.toIndexedSeq: _*))
-    }
+    val (raw, levels) = (readRaw(spark, root), readLevels(spark, root))
+    Hta(raw, levels, readMeta(spark, root),
+      StoreCatalog.read(spark, root).filter(_.files == StoreCatalog.filesOf(root, raw, levels)))
   }
 
   /** Offline maintenance: rewrite the store into few large sorted files per
@@ -413,8 +404,6 @@ object Warehouse {
     open(spark, root)
   }
 
-  /** S6/O5 — sorted catalog of metric names (catalog table when present). */
-  def metricNames(hta: Hta): Seq[String] =
-    hta.metrics.getOrElse(hta.raw.select("metric").distinct())
-      .orderBy("metric").collect().map(_.getString(0)).toSeq
+  /** S6/O5 — sorted metric names, from the catalog. */
+  def metricNames(hta: Hta): Seq[String] = hta.extents.keys.toSeq.sorted
 }

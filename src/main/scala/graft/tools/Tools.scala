@@ -2,8 +2,9 @@ package graft.tools
 
 import graft.hta.{AggOps, Throttle}
 import graft.model.Meta
-import graft.store.{Hta, Warehouse}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.store.{Hta, StoreCatalog, Warehouse}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,7 +26,10 @@ object Tools {
     * (dense, epoch_k = interval_begin(first_raw, interval)), monotonic
     * unique, finite aggregate fields, last row time + interval ==
     * interval_begin(last_raw, interval), and the top-level emptiness rule
-    * (single-spanned levels must be empty, check.cpp:239-247). */
+    * (single-spanned levels must be empty, check.cpp:239-247).
+    * Catalog rule: a current store catalog (one `open` kept) must equal the
+    * catalog the data derives — one `catalog_mismatch` row per metric, `n`
+    * its differing entries. */
   /** `genesis` defaults to the reference's ns-domain 2000-01-01 bound
     * (check.cpp:48); stores using another tick unit (e.g. the µs-domain
     * oracle warehouse) pass their own lower bound.
@@ -121,7 +125,23 @@ object Tools {
         .select(col("metric"), col("interval").cast("string").as("layer"),
           lit("nonempty_spanning_level").as("issue"), col("n")))
 
-    (rawIssues ++ levelIssues).reduce(_ unionByName _)
+    (rawIssues ++ levelIssues :+ catalogIssues(hta)).reduce(_ unionByName _)
+  }
+
+  /** The catalog rule of [[check]], on the driver: both halves derived from
+    * the data (two aggregates), compared with the stored ones. */
+  private def catalogIssues(hta: Hta): DataFrame = {
+    def differ[K](a: Map[K, _], b: Map[K, _]): Seq[K] =
+      (a.keySet ++ b.keySet).filter(k => a.get(k) != b.get(k)).toSeq
+    val rows = hta.catalog.toSeq.flatMap { c =>
+      val d = StoreCatalog.derive(hta)
+      (differ(c.metrics, d.metrics) ++ differ(c.levels, d.levels).map(_._2))
+        .groupBy(identity).toSeq.sortBy(_._1)
+        .map { case (m, diffs) => Row(m, "catalog", "catalog_mismatch", diffs.size.toLong) }
+    }
+    hta.raw.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("metric", StringType), StructField("layer", StringType),
+        StructField("issue", StringType), StructField("n", LongType))))
   }
 
   /** F2 predicates of hta_repair (src/tools/repair.cpp:94-133). */

@@ -14,7 +14,7 @@ class OpenSpec extends SparkSpec {
     var hta: Hta = null
     assert(jobsOf { hta = Warehouse.open(spark, root) } === 0)
     assert(hta.raw.count() === fixture110.length)
-    assert(hta.metrics.map(_.count()) === Some(1L))
+    assert(hta.catalog.map(_.metrics.keySet) === Some(Set("foo")))
   }
 
   test("small tb and interval values read as long") {

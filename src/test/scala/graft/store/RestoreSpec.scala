@@ -1,9 +1,15 @@
 package graft.store
 
 import graft.SparkSpec
-import graft.hta.{AggOps, RetrieveFlex}
+import graft.hta.{AggOps, RetrieveFlex, Telescope}
 import graft.model.Meta
+import graft.plans.RollupRouting
+import graft.streaming.StreamIngest
+import graft.streaming.StreamIngest.Sample
 import graft.tools.Tools
+import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 
 /** Port of /root/reference/tests/restore.cpp:60-215 — ingesting the fixture
   * across multiple sessions (batch appends) must produce exactly the same
@@ -39,11 +45,10 @@ class RestoreSpec extends SparkSpec {
   test("append tail scan prunes raw partitions (PartitionFilters on tb)") {
     val root = tmpDir("restore3")
     Warehouse.ingest(pointsDf(fixture110.take(80)), meta, root)
-    val levels = Warehouse.open(spark, root).levels
     // level-0 closed ends stand in for the append's per-metric tail starts
-    val starts = Warehouse.closedEnds(levels).collect {
-      case (i, m, end) if i == meta.levelIntervals.head => m -> end
-    }.toMap
+    val starts = Warehouse.open(spark, root).levelExtents.collect {
+      case ((i, m), ext) if i == meta.levelIntervals.head => m -> ext.closedEnd
+    }
     val region = Warehouse.tailRegion(spark, root, starts, meta.intervalMax)
     val plan = region.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") &&
@@ -190,5 +195,71 @@ class RestoreSpec extends SparkSpec {
         s"level $k: metrics with closed rows")
       assert(bits(got) === bits(built), s"level $k")
     }
+  }
+
+  /** After a write the catalog does not describe: `open` ignores the stale
+    * catalog, so flex, aggregate and the routing watermarks equal a handle
+    * that derives from the data (and the stale catalog would not have); a
+    * following append of `next` writes a current catalog and, whatever the
+    * levels lagged or led, the one-shot ingest's levels. */
+  private def staleCatalogIgnored(root: String, stale: StoreCatalog,
+                                  next: Seq[(Long, Double)]): Unit = {
+    val opened = Warehouse.open(spark, root)
+    assert(opened.catalog.isEmpty, "open kept a catalog whose files are not the store's")
+    val fresh = Hta(opened.raw, opened.levels, opened.meta)
+    val derived = StoreCatalog.derive(fresh)
+    assert((stale.metrics, stale.levels) !== ((derived.metrics, derived.levels)),
+      "the stale catalog describes the data")
+    def reads(h: Hta) = (
+      Seq(10 * S, 100 * S).map(l => RetrieveFlex.retrieveFlex(h, tp(0), tp(300), l)
+        .orderBy("interval", "time").collect().toSeq),
+      Telescope.aggregateRange(h, tp(0), tp(100)).collect().toSeq,
+      RollupRouting.watermarks(h))
+    assert(reads(opened) === reads(fresh))
+
+    val after = Warehouse.append(pointsDf(next), root)
+    val current = StoreCatalog.derive(Hta(after.raw, after.levels, after.meta))
+    assert(after.catalog.map(c => (c.metrics, c.levels)) ===
+      Some((current.metrics, current.levels)), "the append's catalog")
+    val oneShot = Warehouse.ingest(pointsDf(fixture110), meta, tmpDir("stale_oneshot"))
+    assert(after.levels.orderBy("interval", "time").collect().toSeq ===
+      oneShot.levels.orderBy("interval", "time").collect().toSeq)
+  }
+
+  test("a catalog put back over an append (a crash before its write) is ignored") {
+    val root = tmpDir("stale_crash")
+    Warehouse.ingest(pointsDf(fixture110.take(40)), meta, root)
+    val old = StoreCatalog.read(spark, root).get
+    Warehouse.append(pointsDf(fixture110.slice(40, 80)), root)
+    StoreCatalog.write(spark, root, old)
+    staleCatalogIgnored(root, old, fixture110.drop(80))
+  }
+
+  test("raw appended by the raw stream sink makes the catalog stale") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val root = tmpDir("stale_rawsink")
+    Warehouse.ingest(pointsDf(fixture110.take(40)), meta, root)
+    val old = StoreCatalog.read(spark, root).get
+    val mem = MemoryStream[Sample]
+    val q = StreamIngest.sinkRawToWarehouse(mem.toDS(), meta, root, tmpDir("stale_ckpt"))
+    try {
+      mem.addData(fixture110.slice(40, 80).map { case (t, v) => Sample("foo", t, v) }: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    staleCatalogIgnored(root, old, fixture110.drop(80))
+  }
+
+  test("a level file written by hand makes the catalog stale") {
+    val root = tmpDir("stale_level")
+    Warehouse.ingest(pointsDf(fixture110.take(40)), meta, root)
+    val old = StoreCatalog.read(spark, root).get
+    // the 10 s rows a later append would close, written ahead of their raw
+    val end = old.levels((meta.intervalMin, "foo")).closedEnd
+    val full = Warehouse.ingest(pointsDf(fixture110), meta, tmpDir("stale_full"))
+    Warehouse.writeLevel(full.levels.where(col("interval") === meta.intervalMin &&
+      col("time") >= end && col("time") < tp(170)), s"$root/levels", SaveMode.Append)
+    staleCatalogIgnored(root, old, fixture110.drop(40))
   }
 }

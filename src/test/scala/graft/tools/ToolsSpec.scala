@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.SparkSpec
 import graft.model.Meta
-import graft.store.Warehouse
+import graft.store.{StoreCatalog, Warehouse}
 import org.apache.spark.sql.functions._
 
 /** T1-T5 tool jobs over the canonical fixture warehouse. */
@@ -22,6 +22,23 @@ class ToolsSpec extends SparkSpec {
         when(col("time") === tp(40), col("time") + 1).otherwise(col("time"))))
     val issues = Tools.check(broken, now).collect()
     assert(issues.exists(_.getAs[String]("issue") == "bogus_time"))
+  }
+
+  test("T2 check flags a current catalog that differs from the data") {
+    val root = tmpDir("tools_catalog")
+    Warehouse.ingest(fixtureDf.unionByName(pointsDf(fixture110.take(30), metric = "bar")),
+      Meta(10 * S, 1000 * S, 10), root)
+    assert(Tools.check(Warehouse.open(spark, root), now).count() === 0)
+    // tamper foo's last point but keep the file list, so open keeps it
+    val c = StoreCatalog.read(spark, root).get
+    val foo = c.metrics("foo")
+    StoreCatalog.write(spark, root,
+      c.copy(metrics = c.metrics.updated("foo", foo.copy(last = foo.last + 1))))
+    val opened = Warehouse.open(spark, root)
+    assert(opened.catalog.isDefined)
+    val issues = Tools.check(opened, now).collect()
+      .map(r => (r.getAs[String]("metric"), r.getAs[String]("issue"), r.getAs[Long]("n")))
+    assert(issues.toSeq === Seq(("foo", "catalog_mismatch", 1L)))
   }
 
   test("T2 check flags non-finite raw values") {
