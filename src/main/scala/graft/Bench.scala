@@ -80,79 +80,90 @@ object Bench {
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       } catch { case _: Throwable => Map.empty }
     }
-    def runOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).queryExecution.toRdd.foreachPartition(it => while (it.hasNext) it.next()) }
-      catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
-      (System.nanoTime() - t0) / 1e9
-    }
     val BasePasses = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt).getOrElse(3)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-        val base = Vector.fill(BasePasses)(runOnce(name, fn))
-        val floor = prior.get(name)
-        val passes = floor match {
-          case Some(p) if base.min > 2 * p =>
-            // suspect outlier: re-measure up to twice more; stop early the
-            // moment a pass lands back inside the 2x band
-            var acc = base
-            while (acc.size < BasePasses + 2 && acc.min > 2 * p)
-              acc = acc :+ runOnce(name, fn)
-            acc
-          case _ => base
+        val ps = passes(name, BasePasses, prior.get(name)) { () =>
+          fn(spark, sfDir).queryExecution.toRdd.foreachPartition(it => while (it.hasNext) it.next())
         }
-        (name, passes.min, passes, loadAvg)
+        Measured(name, ps, loadAvg)
       }
     val loadEnd = loadAvg
-    // The driver captures only the LAST 2000 chars of stdout and parses the
-    // JSON line out of that window. Two things ever kept that parse from
-    // succeeding: (1) through r08 the full-precision line was ~4 KB and the
-    // opening brace fell outside the window; (2) in r10/r11 the compacted
-    // line FIT, but sbt's LoggedOutput prefixed it with "[info] ", which
-    // fails any per-line json.loads — every BENCH_r*.json shows
-    // parsed:null. build.sbt now forces OutputStrategy.StdoutOutput (raw
-    // child stdout, no prefix), and the line itself keeps ≥500 bytes of
-    // headroom at any query count by listing only the TOP_SLOW slowest
-    // queries; the full per-query map lives in BENCH_DETAIL.json, which the
-    // judge reads directly. Locale.ROOT: a comma decimal separator would
-    // corrupt the JSON line.
+    val detail = detailJson(results, sfDir, loadStart, loadEnd, BasePasses)
+    try java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
+        "BENCH_DETAIL.json")), detail)
+    catch { case _: Throwable => () }
+    println(stdoutLine(results, sfDir))
+    spark.stop()
+  }
+
+  /** One query's passes: seconds each, None for a pass that threw. */
+  final case class Measured(name: String, passes: Vector[Option[Double]], load: Double) {
+    /** Every pass ran to the end; only such a query has a time. */
+    def ok: Boolean = passes.forall(_.isDefined)
+    def min: Double = passes.flatten.min
+  }
+
+  /** The timed passes of one query: `base` passes of `run`; when all of
+    * them succeeded and their min still exceeds twice `floor` (the query's
+    * prior-round min), up to two more, stopping the moment a pass lands
+    * back inside the 2x band. A pass that throws gives no time. */
+  def passes(name: String, base: Int, floor: Option[Double])(run: () => Unit): Vector[Option[Double]] = {
+    def once(): Option[Double] = {
+      val t0 = System.nanoTime()
+      try { run(); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}"); None }
+    }
+    def slow(ps: Vector[Option[Double]]) =
+      ps.forall(_.isDefined) && floor.exists(p => ps.flatten.min > 2 * p)
+    var acc = Vector.fill(base)(once())
+    while (acc.size < base + 2 && slow(acc)) acc = acc :+ once()
+    acc
+  }
+
+  /** BENCH_DETAIL.json: every query's min (`{"ok":false}` for a query with
+    * a failed pass, which the total leaves out), its passes (null for a
+    * failed one) and the load after it. */
+  def detailJson(results: Seq[Measured], sfDir: String, loadStart: Double, loadEnd: Double,
+                 basePasses: Int): String = {
+    def obj(f: Measured => String) =
+      results.map(r => "\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
+    val ok = results.filter(_.ok)
+    val m = obj(r => if (r.ok) r.min.toString else """{"ok":false}""")
+    val p = obj(_.passes.map(_.fold("null")(_.toString)).mkString("[", ",", "]"))
+    val l = obj(_.load.toString)
+    val rr = ok.filter(_.passes.size > basePasses).map("\"" + _.name + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","value":${ok.map(_.min).sum},"unit":"sec","queries":$m,"sf":"$sfDir","passes":$p,"load_after_query":$l,"load_start":$loadStart,"load_end":$loadEnd,"reruns":$rr,"base_passes":$basePasses,"n_failed":${results.size - ok.size}}"""
+  }
+
+  /** The stdout line: total and slowest-query map over the queries whose
+    * passes all succeeded, the query and failure counts, and "sf" as the
+    * basename. Only the last 2000 characters of the run's stdout are kept
+    * and the JSON line is parsed out of them, so the line lists only the
+    * TopSlow slowest queries and stays well inside that window at any
+    * query count; per-pass totals and the FULL per-query map live in
+    * BENCH_DETAIL.json. build.sbt forwards the forked run's stdout
+    * unprefixed (an "[info] " prefix fails a per-line JSON parse).
+    * Locale.ROOT: a comma decimal separator would corrupt the JSON line. */
+  def stdoutLine(results: Seq[Measured], sfDir: String): String = {
     def r2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f",
       Double.box(v))
     def r1(v: Double): String =
       if (v >= 0.95) String.valueOf(math.round(v))
       else String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    // top-40 slowest at ~11 bytes/query ≈ 440 bytes of map + ~130 bytes of
-    // envelope + sbt's ~75-byte [success] trailer ≈ 650 of the 2000-char
+    // top-40 slowest at ~11 bytes/query ≈ 440 bytes of map + ~150 bytes of
+    // envelope + sbt's ~75-byte [success] trailer ≈ 670 of the 2000-char
     // window — ~1.3 KB headroom, independent of how many queries register
     val TopSlow = 40
-    val qs = results.sortBy(-_._2).take(TopSlow).map { case (k, m, _, _) =>
+    val ok = results.filter(_.ok)
+    val qs = ok.sortBy(-_.min).take(TopSlow).map { r =>
         // "q01" → "q1": the contract's own key shape
-        val num = k.takeWhile(_ != '_').drop(1).dropWhile(_ == '0')
-        s"\"q" + (if (num.isEmpty) "0" else num) + "\":" + r1(m) }
+        val num = r.name.takeWhile(_ != '_').drop(1).dropWhile(_ == '0')
+        s"\"q" + (if (num.isEmpty) "0" else num) + "\":" + r1(r.min) }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val reruns = results.filter(_._3.size > BasePasses).map(_._1)
-    val detail = {
-      val m = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val p = results.map { case (k, _, ps, _) =>
-          s"\"" + k + "\":" + ps.mkString("[", ",", "]") }
-        .mkString("{", ",", "}")
-      val l = results.map { case (k, _, _, la) => s"\"" + k + "\":" + la }
-        .mkString("{", ",", "}")
-      val rr = reruns.map("\"" + _ + "\"").mkString("[", ",", "]")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$m,"sf":"$sfDir","passes":$p,"load_after_query":$l,"load_start":$loadStart,"load_end":$loadEnd,"reruns":$rr,"base_passes":$BasePasses}"""
-    }
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
-        "BENCH_DETAIL.json")), detail)
-    catch { case _: Throwable => () }
-    // stdout line: total + slowest-query map + count; "sf" as the basename;
-    // per-pass totals (cold/warm) and the FULL per-query map live in
-    // BENCH_DETAIL.json
     val sfShort = sfDir.split('/').lastOption.getOrElse(sfDir)
-    println(s"""{"metric":"total","value":${r2(total)},"unit":"sec","queries":$qs,"n_queries":${results.size},"detail":"BENCH_DETAIL.json","sf":"$sfShort"}""")
-    spark.stop()
+    s"""{"metric":"total","value":${r2(ok.map(_.min).sum)},"unit":"sec","queries":$qs,"n_queries":${results.size},"n_failed":${results.size - ok.size},"detail":"BENCH_DETAIL.json","sf":"$sfShort"}"""
   }
 }

@@ -555,64 +555,43 @@ object Ann {
                     nlist: Int, kmeansIters: Int,
                     crashAfterStep: Int): IvfIndex =
       graft.store.Lease.withLease(root, "Ann.writeIvfIndex") {
-    def crash(step: Int): Unit = if (step == crashAfterStep)
-      throw new RuntimeException(s"spec crash seam: rebuild step $step")
-    val spark = corpus.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // roll forward a prior COMMITTED rebuild first, so staging starts
-    // clean; then stage the new generation into tmp dirs — the live
-    // index (quantizer AND lists) stays fully intact and probe-able
-    // until the commit marker below: a crash (or a lease lost to a
-    // GC-pause takeover) during the long list write must not leave new
+    // the new generation (quantizer AND lists) is staged beside the live
+    // index, which stays probe-able until the commit: a crash (or a lease
+    // lost to a takeover) during the long list write must not leave new
     // centroids over old assignments, or half-written lists
-    graft.store.IvfStore.completeRebuild(root)
-    for (d <- Seq("centroids", "vectors"))
-      fs.delete(new org.apache.hadoop.fs.Path(root, d + "_rebuild_tmp"),
-        true)
-    val cents =
-      if (kmeansIters > 0) kmeansCentroids(corpus, nlist, kmeansIters)
-      else ivfCentroids(corpus, nlist)
-    // list_id is the centroid's ARRAY INDEX (what ivfAssign emits), not the
-    // seed vector's vec_id
-    val cRows = cents.zipWithIndex.map { case ((_, v), i) =>
-      org.apache.spark.sql.Row(i.toLong, v.toSeq)
-    }
-    spark.createDataFrame(java.util.Arrays.asList(cRows: _*), centroidSchema)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$root/centroids_rebuild_tmp")
-    // drift baseline: the build-time assignment-residual distribution,
-    // observed on the SAME pass that writes the lists (zero extra jobs) —
-    // appends compare their drops against it (IvfStore.driftStats); the
-    // aggregates travel in the commit marker so the roll-forward writes
-    // the fresh ledger whoever completes it
-    val obs = new org.apache.spark.sql.Observation()
-    graft.store.withWriterCoalesce(corpus.sparkSession) {
-      ivfStoredRowsWithDist(corpus,
-          cents.zipWithIndex.map { case ((_, v), i) => (i.toLong, v) })
-        .observe(obs, count(lit(1)).as("n"),
-          sum(col("adist").cast("double")).as("s"),
-          sum(col("adist").cast("double") * col("adist").cast("double")).as("s2"))
-        .drop("adist")
-        .repartition(col("list_id"))
-        .write.partitionBy("list_id").mode("overwrite")
-        .parquet(s"$root/vectors_rebuild_tmp")
-    }
-    val baseStats = graft.store.IvfStore.readObs3(obs)
-    crash(1) // staged, not committed: open() leaves the old index as-is
-    // commit point — fenced (a writer that lost its lease must not
-    // supersede the successor's generation), then the marker rename is
-    // the atomic commit; everything after rolls forward
-    graft.store.Lease.fence(root, "Ann.writeIvfIndex")
-    graft.store.TextIndex.writeSmallAtomic(fs,
-      new org.apache.hadoop.fs.Path(root, "rebuild.intent.json"),
-      baseStats match {
+    val spark = corpus.sparkSession
+    graft.store.StagedCommit.rebuild(root, graft.store.IvfStore.store,
+        "Ann.writeIvfIndex", crashAfterStep) { tmp =>
+      val cents =
+        if (kmeansIters > 0) kmeansCentroids(corpus, nlist, kmeansIters)
+        else ivfCentroids(corpus, nlist)
+      // list_id is the centroid's ARRAY INDEX (what ivfAssign emits), not
+      // the seed vector's vec_id
+      val indexed = cents.zipWithIndex.map { case ((_, v), i) => (i.toLong, v) }
+      val cRows = indexed.map { case (i, v) => org.apache.spark.sql.Row(i, v.toSeq) }
+      spark.createDataFrame(java.util.Arrays.asList(cRows: _*), centroidSchema)
+        .coalesce(1).write.mode("overwrite").parquet(tmp("centroids"))
+      // drift baseline: the build-time assignment-residual distribution,
+      // observed on the SAME pass that writes the lists (zero extra jobs)
+      // — appends compare their drops against it (IvfStore.driftStats);
+      // the aggregates travel in the commit marker so the roll-forward
+      // writes the fresh ledger whoever completes it
+      val obs = new org.apache.spark.sql.Observation()
+      graft.store.withWriterCoalesce(spark) {
+        ivfStoredRowsWithDist(corpus, indexed)
+          .observe(obs, count(lit(1)).as("n"),
+            sum(col("adist").cast("double")).as("s"),
+            sum(col("adist").cast("double") * col("adist").cast("double")).as("s2"))
+          .drop("adist")
+          .repartition(col("list_id"))
+          .write.partitionBy("list_id").mode("overwrite")
+          .parquet(tmp("vectors"))
+      }
+      (graft.store.IvfStore.readObs3(obs) match {
         case Some((n, s, s2)) => s"""{"n":$n,"s":$s,"s2":$s2}"""
         case None => "{}"
-      })
-    crash(2) // committed: open() completes the rebuild
-    graft.store.IvfStore.completeRebuild(root)
-    IvfIndex(root, cents.zipWithIndex.map { case ((_, v), i) => (i.toLong, v) })
+      }, IvfIndex(root, indexed))
+    }
   }
 
   /** The persisted row form of one corpus slice under a FROZEN quantizer —
@@ -632,6 +611,15 @@ object Ann {
   private[graft] def ivfStoredRowsWithDist(corpus: DataFrame,
                                            cents: Array[(Long, Array[Long])]): DataFrame =
     ivfAssignWithDist(corpus, cents)
+      // `graft_ivf_argmin` is NULL for a vector of the wrong dimension or
+      // with a null element; written as is, the row would land under
+      // list_id=__HIVE_DEFAULT_PARTITION__, which no probe's literal
+      // list_id filter ever reads
+      .withColumn("list_id", when(col("list_id").isNull,
+          raise_error(concat(lit("IVF store write: vec_id "), col("vid"),
+            lit(" has no list (its embedding is null, holds a null element " +
+              "or does not match the quantizer's dimension)"))).cast("long"))
+        .otherwise(col("list_id")))
       .withColumn("vn", normFast(corpus.sparkSession)(col("ve")))
 
   /** Open a persisted index: only the nlist-row quantizer is read eagerly

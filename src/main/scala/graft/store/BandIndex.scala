@@ -22,10 +22,11 @@ import org.apache.spark.sql.functions._
   *  - `band_index.json` — n_docs + the (ngram, num_hashes, bands)
   *    family parameters a probe must reuse.
   *
-  * Maintenance follows the [[TextIndex]] staged-append discipline
+  * Maintenance follows the [[StagedCommit]] staged offline append
   * (stage → intent → `_staged` commit marker → publish-by-rename →
-  * meta → clean), with a simpler heal matrix because every table here
-  * is PURELY ADDITIVE — there is no merged dictionary to swap. A crash
+  * meta → clean), with a simpler heal matrix than [[TextIndex]]'s because
+  * every table here is PURELY ADDITIVE — there is no merged dictionary to
+  * swap. A crash
   * before the marker aborts the append (index untouched, re-run it); a
   * crash after rolls forward on the next [[open]]. [[compact]] closes
   * the small-files fragmentation that per-drop appends accumulate,
@@ -35,8 +36,7 @@ import org.apache.spark.sql.functions._
   * from the index path, so local disk, HDFS and object stores behave
   * the same (the TextIndex/Warehouse rule). */
 object BandIndex {
-  import TextIndex.{fsOf, readSmall, writeSmall, writeSmallAtomic,
-    jsonField, jsonFieldOpt, renameOrFail, restoreInterruptedSwap,
+  import StagedCommit.{fsOf, readSmall, writeSmall, jsonField, jsonFieldOpt,
     readObsRow}
 
   final case class Handle(path: String, nDocs: Long, ngram: Int,
@@ -47,6 +47,42 @@ object BandIndex {
     writeSmall(fsOf(path), new HPath(path, "band_index.json"),
       s"""{"n_docs":$nDocs,"ngram":$ngram,"num_hashes":$numHashes,""" +
         s""""bands":$bands}""")
+
+  /** The staged-commit protocols' view of a band index: every table is
+    * purely additive, so an append stages and publishes bands and grams and
+    * the meta lands the staged intent's doc count. */
+  private val store: StagedCommit.Store = StagedCommit.Store("BandIndex",
+    tables = Seq("bands", "grams"), swapped = Seq("bands", "grams"),
+    rebuilt = Seq("bands", "grams"),
+    superseded = StagedCommit.StreamAndRetireState,
+    publish = (path, staged) => {
+      val fs = fsOf(path)
+      val intent = readSmall(fs, new HPath(staged, "intent.json"))
+      val meta = readSmall(fs, new HPath(path, "band_index.json"))
+      writeMeta(path, jsonField(intent, "n_docs"),
+        jsonField(meta, "ngram").toInt, jsonField(meta, "num_hashes").toInt,
+        jsonField(meta, "bands").toInt)
+    },
+    // the drift ledger resets with the re-derived geometry
+    land = (path, intent) => {
+      val nDocs = jsonField(intent, "n_docs")
+      writeMeta(path, nDocs, jsonField(intent, "ngram").toInt,
+        jsonField(intent, "num_hashes").toInt,
+        jsonField(intent, "bands").toInt)
+      for (g <- jsonFieldOpt(intent, "drift_grams") if nDocs > 0)
+        StagedCommit.writeBaseline(path, store,
+          s""""build_n":$nDocs,"build_grams":$g""")
+    },
+    ledger = Some(StagedCommit.Ledger("band_drift.json", "grams",
+      integral = true,
+      drift = j => parseDrift(j).map(d => (d.ratio, d.rebuildAdvised())),
+      warning = (path, ratio, appN) =>
+        s"BandIndex: appended shingle-count drift at $path crossed the " +
+          s"rebuild bound (ratio $ratio over $appN appended docs) — the " +
+          "knee-rule geometry no longer matches the appended docs and probe " +
+          "recall on them is degrading; rebuild with BandIndex.write to " +
+          "re-derive the geometry and reset the baseline")),
+    batchGuard = "intent.json")
 
   /** Build the index from a corpus snapshot: one signature shuffle for
     * the band rows, one shingle pass for the gram table, both written
@@ -69,122 +105,34 @@ object BandIndex {
             numHashes: Int, bands: Int, text: String, threshold: Double,
             crashAfterStep: Int): Handle =
       Lease.withLease(path, "BandIndex.write") {
-    def crash(step: Int): Unit = if (step == crashAfterStep)
-      throw new RuntimeException(s"spec crash seam: rebuild step $step")
     val (nHashes, nBands) = Dedup.resolveBandGeometry(numHashes, bands,
       threshold, "BandIndex.write", ngram)
-    val fs = fsOf(path)
-    // roll forward a prior COMMITTED rebuild first (its marker supersedes
-    // everything at this root), so the staging below starts clean
-    completeRebuild(path)
-    // 1. stage the new generation into tmp dirs — the live index stays
-    //    fully intact and readable until the commit marker below: a crash
-    //    (or a lease lost to a GC-pause takeover) during these long
-    //    writes must not leave a mixed-generation index (new bands under
-    //    the old meta was exactly that corruption)
-    for (d <- Seq("bands", "grams"))
-      fs.delete(new HPath(path, d + "_rebuild_tmp"), true)
-    withWriterCoalesce(corpus.sparkSession) {
-      Dedup.bandedRows(corpus, ngram, nHashes, nBands, text)
-        .select(col("doc_id"), col("bkey"), col("band"))
-        .write.mode("overwrite").partitionBy("band")
-        .parquet(s"$path/bands_rebuild_tmp")
+    StagedCommit.rebuild(path, store, "BandIndex.write", crashAfterStep) { tmp =>
+      withWriterCoalesce(corpus.sparkSession) {
+        Dedup.bandedRows(corpus, ngram, nHashes, nBands, text)
+          .select(col("doc_id"), col("bkey"), col("band"))
+          .write.mode("overwrite").partitionBy("band")
+          .parquet(tmp("bands"))
+      }
+      // drift baseline: observe the corpus's distinct-shingle volume on the
+      // SAME pass that writes the gram table (zero extra jobs)
+      val gobs = new org.apache.spark.sql.Observation()
+      withWriterCoalesce(corpus.sparkSession) {
+        Dedup.shingleHashRows(corpus, ngram, text, distinct = true)
+          .observe(gobs, count(lit(1)).as("n"))
+          .write.mode("overwrite").parquet(tmp("grams"))
+      }
+      val nDocs = corpus.count()
+      val baseGrams = readObs1(gobs)
+      (s"""{"n_docs":$nDocs,"ngram":$ngram,"num_hashes":$nHashes,""" +
+        s""""bands":$nBands${baseGrams.map(g => s""","drift_grams":$g""").getOrElse("")}}""",
+        Handle(path, nDocs, ngram, nHashes, nBands))
     }
-    // drift baseline: observe the corpus's distinct-shingle volume on the
-    // SAME pass that writes the gram table (zero extra jobs)
-    val gobs = new org.apache.spark.sql.Observation()
-    withWriterCoalesce(corpus.sparkSession) {
-      Dedup.shingleHashRows(corpus, ngram, text, distinct = true)
-        .observe(gobs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$path/grams_rebuild_tmp")
-    }
-    val nDocs = corpus.count()
-    val baseGrams = readObsRow(gobs)
-      .filter(r => r.length >= 1 && !r.isNullAt(0)).map(_.getLong(0))
-    crash(1) // staged, not committed: open() leaves the old index as-is
-    // 2. commit point — fenced (a writer that lost its lease must not
-    //    supersede the successor's generation), then the marker rename
-    //    is the atomic commit; everything after rolls forward
-    Lease.fence(path, "BandIndex.write")
-    writeSmallAtomic(fs, new HPath(path, "rebuild.intent.json"),
-      s"""{"n_docs":$nDocs,"ngram":$ngram,"num_hashes":$nHashes,""" +
-        s""""bands":$nBands${baseGrams.map(g => s""","drift_grams":$g""").getOrElse("")}}""")
-    crash(2) // committed: open() completes the rebuild
-    completeRebuild(path)
-    Handle(path, nDocs, ngram, nHashes, nBands)
   }
-
-  /** Roll a COMMITTED rebuild forward — idempotent from every crash
-    * point, called by [[open]] and [[write]]; no-op without the marker.
-    * Order: the superseded generation's maintenance state dies first
-    * (stale tombstones would wrongly suppress new docs, stale streaming
-    * markers would suppress a fresh stream's first batches, a stale
-    * staged append belongs to the dead generation, and the drift ledger
-    * resets with the re-derived geometry), then each data dir swaps in
-    * via rename (old aside, tmp in, old dropped), then the meta and
-    * fresh drift baseline land, then the marker clears. A crash anywhere
-    * re-runs harmlessly: deletes are idempotent, a swap whose tmp is
-    * gone already happened, and the meta rewrite lands the same
-    * values. */
-  private def completeRebuild(path: String): Unit = {
-    val fs = fsOf(path)
-    val marker = new HPath(path, "rebuild.intent.json")
-    if (!fs.exists(marker)) return
-    // no-op from the lease-free heal path (open); aborts a leased writer
-    // whose lease was taken over — the successor's own open() rolls the
-    // committed marker forward to the identical end state
-    Lease.fence(path, "BandIndex.completeRebuild")
-    val intent = readSmall(fs, marker)
-    for (d <- Seq("append.pending", "_stream_commits", "_stream_staging",
-        "tombstones", "retire.pending", "band_drift.json"))
-      fs.delete(new HPath(path, d), true)
-    for (d <- Seq("bands", "grams"))
-      TextIndex.rollRebuildSwap(fs, path, d)
-    val nDocs = jsonField(intent, "n_docs")
-    writeMeta(path, nDocs, jsonField(intent, "ngram").toInt,
-      jsonField(intent, "num_hashes").toInt,
-      jsonField(intent, "bands").toInt)
-    jsonFieldOpt(intent, "drift_grams")
-      .foreach(g => writeDriftBaseline(path, nDocs, g))
-    fs.delete(marker, false)
-  }
-
-  /** Fail-fast guard on the reincarnation hazard: appending a doc_id that
-    * is currently TOMBSTONED would not resurrect it — the tombstone
-    * anti-join keeps suppressing the id until the next [[compact]], so
-    * the "successful" append silently contributes nothing, the worst
-    * failure shape this repo allows. Takedown-then-repost is a real
-    * corpus event, so the contract is explicit: run [[compact]] (which
-    * applies and CLEARS tombstones) before re-appending a retired id.
-    * Answer-sized work: broadcast semi-join against the tombstone table,
-    * and only when retirements are outstanding (the common case skips
-    * straight through). */
-  private def requireNoTombstoned(docs: DataFrame, path: String,
-                                  idCol: String, op: String): Unit =
-    tombstones(docs.sparkSession, path).foreach { t =>
-      val clash = docs.join(
-          broadcast(t.select(col(idCol).cast("long").as(idCol))),
-          Seq(idCol), "left_semi")
-        .select(idCol).limit(3).collect().map(_.getLong(0))
-      require(clash.isEmpty,
-        s"$op: ${idCol}s ${clash.mkString(", ")} are tombstoned at $path — " +
-          "a tombstone would suppress the re-appended doc until the next " +
-          "compact; run compact(...) (applies + clears tombstones) before " +
-          "re-appending a retired id")
-    }
 
   def open(path: String): Handle = {
-    val fs = fsOf(path)
-    // a COMMITTED rebuild supersedes every other pending state — roll it
-    // forward before the per-generation heals below
-    completeRebuild(path)
-    for (d <- Seq("bands", "grams")) restoreInterruptedSwap(fs, path, d)
-    healPending(path)
-    // an interrupted retire is ABORTED (tombstones are set-semantics and
-    // the caller re-runs retire on failure — duplicates are harmless),
-    // so a half-published pending dir must not linger as live state
-    fs.delete(new HPath(path, "retire.pending"), true)
-    val s = readSmall(fs, new HPath(path, "band_index.json"))
+    StagedCommit.heal(path, store)
+    val s = readSmall(fsOf(path), new HPath(path, "band_index.json"))
     Handle(path, jsonField(s, "n_docs"), jsonField(s, "ngram").toInt,
       jsonField(s, "num_hashes").toInt, jsonField(s, "bands").toInt)
   }
@@ -197,47 +145,23 @@ object BandIndex {
     * deferred to [[compact]], which applies the tombstones and clears
     * them; until then retired rows cost only their storage.
     *
-    * Crash-safe by staging + rename: ids are written to `retire.pending`
-    * and published file-by-file (Spark part names are unique per job, so
-    * republishing after a crash cannot collide); an interrupted retire is
-    * aborted at the next [[open]] and the caller re-runs it — tombstones
-    * are a SET, so re-retiring already-retired ids is a no-op in effect.
-    * Retiring an id not in the index is allowed (and meaningless);
-    * re-appending a retired doc_id FAILS FAST at append (the tombstone
-    * would silently suppress the reincarnation until the next compact —
-    * see `requireNoTombstoned`); the sanctioned takedown-then-repost path
-    * is [[compact]] (applies + clears tombstones), then append. */
-  def retire(ids: DataFrame, h: Handle): Handle =
-      Lease.withLease(h.path, "BandIndex.retire") {
-    val fs = fsOf(h.path)
-    val pending = new HPath(h.path, "retire.pending")
-    fs.delete(pending, true) // abort any interrupted predecessor
-    withWriterCoalesce(ids.sparkSession) {
-      ids.select(col("doc_id").cast("long").as("doc_id")).distinct()
-        .write.mode("overwrite").parquet(s"${h.path}/retire.pending")
-    }
-    val dst = new HPath(h.path, "tombstones")
-    fs.mkdirs(dst)
-    Lease.fence(h.path, "BandIndex.retire")
-    for (f <- fs.listStatus(pending)
-         if f.isFile && f.getPath.getName.startsWith("part-"))
-      renameOrFail(fs, f.getPath, new HPath(dst, f.getPath.getName))
-    fs.delete(pending, true)
+    * Crash-safe by staging + rename ([[StagedCommit.retire]]): an
+    * interrupted retire is aborted at the next [[open]] and the caller
+    * re-runs it — tombstones are a SET. Retiring an id not in the index is
+    * allowed (and meaningless); re-appending a retired doc_id FAILS FAST
+    * at append (the tombstone would silently suppress the reincarnation
+    * until the next compact); the sanctioned takedown-then-repost path is
+    * [[compact]] (applies + clears tombstones), then append. */
+  def retire(ids: DataFrame, h: Handle): Handle = {
+    StagedCommit.retire(ids, h.path, "doc_id", "BandIndex.retire")
     h
   }
 
   /** The retired-doc_id table, if any retirements are outstanding —
     * probes anti-join it; [[compact]] applies and clears it. */
   private[graft] def tombstones(spark: SparkSession,
-                                path: String): Option[DataFrame] = {
-    val fs = fsOf(path)
-    val dir = new HPath(path, "tombstones")
-    if (fs.exists(dir) &&
-        fs.listStatus(dir).exists(f => f.isFile &&
-          f.getPath.getName.startsWith("part-")))
-      Some(spark.read.parquet(s"$path/tombstones"))
-    else None
-  }
+                                path: String): Option[DataFrame] =
+    StagedCommit.tombstones(spark, path)
 
   /** Index an ACCEPTED drop: its band rows and gram rows are staged,
     * then renamed into the live tables — time ∝ drop, the corpus is
@@ -249,24 +173,25 @@ object BandIndex {
     append(newDocs, h, text, crashAfterStep = 99)
 
   /** [[append]] with an injected crash point — spec-only seam for the
-    * heal matrix (2 = before the commit marker, 3 = after it). */
+    * heal matrix (2 = before the commit marker, 3 = after it). The staged
+    * offline append of [[StagedCommit]]: stage → intent → `_staged`
+    * commit marker → publish-by-rename → meta → clean; a crash before the
+    * marker aborts the append (index untouched, re-run it), a crash after
+    * rolls forward on the next [[open]]. */
   private[store] def append(newDocs: DataFrame, h: Handle, text: String,
                             crashAfterStep: Int): Handle =
       Lease.withLease(h.path, "BandIndex.append") {
     def crash(step: Int): Unit = if (step == crashAfterStep)
       throw new IllegalStateException(s"injected crash after step $step")
-    val fs = fsOf(h.path)
-    healPending(h.path) // resolve any interrupted predecessor first
-    requireNoTombstoned(newDocs, h.path, "doc_id", "BandIndex.append")
-    val pending = new HPath(h.path, "append.pending")
-    require(!fs.exists(pending),
-      s"append.pending survived heal — concurrent append? ${h.path}")
+    val pending = StagedCommit.beginPending(h.path, store)
+    StagedCommit.requireNoTombstoned(newDocs, h.path, "doc_id",
+      "BandIndex.append")
     // 1. stage the drop's band rows + gram rows
     withWriterCoalesce(newDocs.sparkSession) {
       Dedup.bandedRows(newDocs, h.ngram, h.numHashes, h.bands, text)
         .select(col("doc_id"), col("bkey"), col("band"))
         .write.mode("overwrite").partitionBy("band")
-        .parquet(s"${h.path}/append.pending/bands")
+        .parquet(s"$pending/bands")
     }
     // drift: observe the drop's distinct-shingle volume on the staging
     // pass itself (zero extra jobs) — recorded after publish
@@ -274,114 +199,50 @@ object BandIndex {
     withWriterCoalesce(newDocs.sparkSession) {
       Dedup.shingleHashRows(newDocs, h.ngram, text, distinct = true)
         .observe(gobs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"${h.path}/append.pending/grams")
+        .write.mode("overwrite").parquet(s"$pending/grams")
     }
     crash(1)
     // 2. intent: the TARGET count (idempotent for the roll-forward)
     val target = h.nDocs + newDocs.count()
-    writeSmall(fs, new HPath(pending, "intent.json"),
+    writeSmall(fsOf(h.path), new HPath(pending, "intent.json"),
       s"""{"n_docs":$target}""")
     crash(2)
-    // 3. commit point — fenced: a writer that lost its lease to a
-    // stale-takeover while staging must not commit into the successor's
-    // generation (open() will then ABORT the unmarked staging)
-    Lease.fence(h.path, "BandIndex.append")
-    writeSmall(fs, new HPath(pending, "_staged"), "")
+    // 3. commit point
+    StagedCommit.commitPending(h.path, store)
     crash(3)
     // 4-6. publish (renames, meta, clean)
-    publishPending(h.path)
+    StagedCommit.publishPending(h.path, store)
     // advisory update AFTER publish: a crash in this window loses the
     // drop's drift record (statistic goes stale, never wrong/doubled)
-    readObs1(gobs).foreach(g => recordDrop(h.path, target - h.nDocs, g))
+    readObs1(gobs).foreach(g =>
+      StagedCommit.recordDrop(h.path, store, target - h.nDocs, g.toDouble))
     h.copy(nDocs = target)
   }
 
-  /** Abort an append that never reached its commit marker; roll a
-    * committed one forward. No-op without staging. */
-  private def healPending(path: String): Unit = {
-    val fs = fsOf(path)
-    val pending = new HPath(path, "append.pending")
-    if (fs.exists(pending)) {
-      if (fs.exists(new HPath(pending, "_staged"))) publishPending(path)
-      else fs.delete(pending, true)
-    }
-  }
-
-  /** Publish a committed append — safe to re-run from any crash point:
-    * Spark part-file names are unique per job, and a file already
-    * renamed no longer appears in the staging listing, so the rename
-    * loop is idempotent; the meta write lands the intent's absolute
-    * target. */
-  private def publishPending(path: String): Unit = {
-    // no-op from the lease-free heal path (open); aborts a leased writer
-    // whose lease was taken over while it staged
-    Lease.fence(path, "BandIndex.publishPending")
-    val fs = fsOf(path)
-    val pending = new HPath(path, "append.pending")
-    val stagedBands = new HPath(pending, "bands")
-    if (fs.exists(stagedBands)) {
-      for (b <- fs.listStatus(stagedBands) if b.isDirectory) {
-        val dst = new HPath(s"$path/bands/${b.getPath.getName}")
-        fs.mkdirs(dst) // rename silently returns false without the parent
-        for (f <- fs.listStatus(b.getPath) if f.isFile)
-          renameOrFail(fs, f.getPath, new HPath(dst, f.getPath.getName))
-      }
-    }
-    val stagedGrams = new HPath(pending, "grams")
-    if (fs.exists(stagedGrams)) {
-      val dst = new HPath(path, "grams")
-      fs.mkdirs(dst)
-      for (f <- fs.listStatus(stagedGrams)
-           if f.isFile && f.getPath.getName.startsWith("part-"))
-        renameOrFail(fs, f.getPath, new HPath(dst, f.getPath.getName))
-    }
-    val intent = readSmall(fs, new HPath(pending, "intent.json"))
-    val meta = readSmall(fs, new HPath(path, "band_index.json"))
-    writeMeta(path, jsonField(intent, "n_docs"),
-      jsonField(meta, "ngram").toInt, jsonField(meta, "num_hashes").toInt,
-      jsonField(meta, "bands").toInt)
-    fs.delete(pending, true)
-  }
-
   /** Idempotent, batch-id-keyed streaming append — the continuous form
-    * of [[append]] for `foreachBatch` sinks (Structured Streaming
-    * replays a micro-batch after a crash, so every step must land the
-    * same end state on replay; the Warehouse `publishBatch` discipline):
-    *
-    *  1. commit marker `_stream_commits/<bid>` present → no-op;
-    *  2. staged intent present (a prior attempt finished staging) →
-    *     publish the STAGED rows without re-evaluating `novel` — the
-    *     batch's accepted set was fixed at first evaluation, so a probe
-    *     that feeds `novel` never sees this bid's own partially
-    *     published rows (publish starts strictly after the intent);
-    *  3. otherwise evaluate `novel` (by name), stage its band/gram rows
-    *     + an ABSOLUTE-target intent, then publish: delete any
-    *     `bid-N-*` leftovers, rename staged files to deterministic
-    *     `bid-N-k` names, rewrite meta from the intent, write the
-    *     marker LAST, drop staging.
+    * of [[append]] for `foreachBatch` sinks, by the stage-once stream batch
+    * of [[StagedCommit.appendBatch]]: a committed bid no-ops; otherwise
+    * `novel` (by name) is evaluated ONCE and its band/gram rows staged with
+    * an ABSOLUTE-target `intent.json`, then published under bid-keyed
+    * names, the meta rewritten from the intent, and the marker written
+    * LAST. A replay after staging publishes the staged rows without
+    * re-evaluating `novel`, so a probe that feeds `novel` never sees this
+    * bid's own partially published rows.
     *
     * `autoCompactAt > 0` bounds small-file fragmentation: when the live
     * `bands/` part-file count exceeds it after a publish, [[compact]]
-    * runs in-line (post-marker, so replays never re-trigger it; its
-    * swap-with-backup discipline keeps it crash-safe). 0 disables —
-    * offline callers schedule [[compact]] themselves.
+    * runs in-line. 0 disables — offline callers schedule [[compact]]
+    * themselves.
     *
-    * Underscore-prefixed staging/marker dirs are invisible to the
-    * probe's parquet scans. Readers see an append-only index: a batch's
-    * rows become visible file-by-file during publish and atomically
-    * "count" only once the meta/marker land — the same eventual-append
-    * exposure every streaming sink in this store family documents. */
+    * Readers see an append-only index: a batch's rows become visible
+    * file-by-file during publish and atomically "count" only once the
+    * meta/marker land — the same eventual-append exposure every streaming
+    * sink in this store family documents. */
   def appendBatch(path: String, bid: Long, text: String = "text",
                   autoCompactAt: Int = 0)
-                 (novel: => DataFrame): Unit = {
-    val fs = fsOf(path)
-    val marker = new HPath(s"$path/_stream_commits/$bid")
-    if (fs.exists(marker)) return // replay no-op: no lease, no work
-    Lease.withLease(path, "BandIndex.appendBatch") {
-    val h = open(path) // heals any interrupted OFFLINE append first
-    val staging = s"$path/_stream_staging/bid=$bid"
-    val intentP = new HPath(s"$staging/intent.json")
-    if (!fs.exists(intentP)) {
+                 (novel: => DataFrame): Unit =
+    StagedCommit.appendBatch(path, bid, store, autoCompactAt)(open(path)) {
+        (h, staging) =>
       // evaluate `novel` exactly ONCE (round-14 VERDICT: three separate
       // actions — two writes + a count — re-ran the thunk's plan, and in
       // StreamDedup that plan is the corpus probe + verify anti-join).
@@ -390,7 +251,8 @@ object BandIndex {
       // rides along as an observed metric on the checkpoint job itself.
       val obs = new org.apache.spark.sql.Observation()
       val docs = novel.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-      requireNoTombstoned(docs, path, "doc_id", "BandIndex.appendBatch")
+      StagedCommit.requireNoTombstoned(docs, path, "doc_id",
+        "BandIndex.appendBatch")
       withWriterCoalesce(docs.sparkSession) {
         Dedup.bandedRows(docs, h.ngram, h.numHashes, h.bands, text)
           .select(col("doc_id"), col("bkey"), col("band"))
@@ -414,86 +276,8 @@ object BandIndex {
       } catch { // never observed — count the checkpointed blocks instead
         case _: java.util.concurrent.TimeoutException => docs.count()
       }
-      readObs1(gobs).foreach { g =>
-        writeSmall(fs, new HPath(s"$staging/drift_stats.json"),
-          s"""{"n":$n,"grams":$g}""")
-      }
-      writeSmall(fs, intentP, s"""{"n_docs":${h.nDocs + n}}""")
-    }
-    // publish with bid-keyed names DERIVED FROM the staged file names —
-    // staging is written exactly once (guarded by the intent), so the
-    // source names are stable across replays and each staged file maps
-    // to one destination. A replay after a crash mid-publish renames
-    // only the files still in staging; files already published keep
-    // their names and are never deleted (a delete-leftovers pass here
-    // would destroy rows whose staged source is already gone).
-    def moveIn(srcDir: HPath, dstDir: HPath): Unit = {
-      fs.mkdirs(dstDir)
-      for (f <- fs.listStatus(srcDir)
-           if f.isFile && f.getPath.getName.startsWith("part-")) {
-        val dst = new HPath(dstDir, s"bid-$bid-${f.getPath.getName}")
-        if (fs.exists(dst)) fs.delete(f.getPath, false)
-        else renameOrFail(fs, f.getPath, dst)
-      }
-    }
-    Lease.fence(path, "BandIndex.appendBatch") // publish starts here
-    val stagedBands = new HPath(s"$staging/bands")
-    if (fs.exists(stagedBands))
-      for (b <- fs.listStatus(stagedBands) if b.isDirectory)
-        moveIn(b.getPath, new HPath(s"$path/bands/${b.getPath.getName}"))
-    val stagedGrams = new HPath(s"$staging/grams")
-    if (fs.exists(stagedGrams))
-      moveIn(stagedGrams, new HPath(s"$path/grams"))
-    val target = jsonField(readSmall(fs, intentP), "n_docs")
-    writeMeta(path, target, h.ngram, h.numHashes, h.bands)
-    fs.mkdirs(new HPath(s"$path/_stream_commits"))
-    writeSmall(fs, marker, "")
-    // drift merge strictly AFTER the marker: a replayed bid no-ops at the
-    // marker check and can never double-count; a crash between marker and
-    // merge loses this drop's drift record (stale advisory, never wrong)
-    val ds = new HPath(s"$staging/drift_stats.json")
-    if (fs.exists(ds)) {
-      val j = readSmall(fs, ds)
-      recordDrop(path, jsonField(j, "n"), jsonField(j, "grams"))
-    }
-    fs.delete(new HPath(staging), true)
-    // auto-compact policy (autoCompactAt > 0): per-drop appends rename
-    // one file set per batch into the live dirs, so a long-running
-    // stream accumulates small files until probes pay file-open latency
-    // instead of scan throughput. Compacting AFTER the commit marker is
-    // replay-safe (a replayed bid no-ops above and never re-compacts)
-    // and crash-safe (compact's swap-with-backup heals at open).
-    if (autoCompactAt > 0 &&
-        countPartFiles(fs, new HPath(path, "bands")) > autoCompactAt)
-      compact(org.apache.spark.sql.SparkSession.active, open(path))
-    }
-  }
-
-  private def countPartFiles(fs: org.apache.hadoop.fs.FileSystem,
-                             dir: HPath): Int =
-    if (!fs.exists(dir)) 0
-    else fs.listStatus(dir).map { st =>
-      if (st.isDirectory) countPartFiles(fs, st.getPath)
-      // streaming publishes bid-keyed names (bid-N-part-...): contains,
-      // not startsWith, or the policy would never count the very files
-      // the per-batch appends accumulate
-      else if (st.getPath.getName.contains("part-")) 1 else 0
-    }.sum
-
-  /** Drop all streaming bookkeeping (`_stream_commits` markers and any
-    * `_stream_staging` intents) at an index path. A NEW stream — fresh
-    * checkpoint, batch ids restarting at 0 — must call this before its
-    * first batch: a stale staged intent from a dead stream at the same
-    * bid would otherwise be published in place of the new batch (whose
-    * `novel` thunk would never run), silently dropping its documents,
-    * and a stale commit marker would suppress the new batch outright.
-    * Safe because markers/staging only ever belong to ONE live stream
-    * (the append contract forbids concurrent writers). */
-  private[graft] def clearStreamState(path: String): Unit = {
-    val fs = fsOf(path)
-    fs.delete(new HPath(path, "_stream_commits"), true)
-    fs.delete(new HPath(path, "_stream_staging"), true)
-  }
+      (s"""{"n_docs":${h.nDocs + n}}""", readObs1(gobs).map(g => (n, g.toDouble)))
+    } { _ => compact(SparkSession.active, open(path)) }
 
   /** Offline maintenance: rewrite both tables into `filesPerPartition`
     * sorted files per band / per gram shard — every append renames one
@@ -510,19 +294,7 @@ object BandIndex {
       Lease.withLease(h.path, "BandIndex.compact") {
     require(filesPerPartition >= 1,
       s"filesPerPartition must be >= 1: $filesPerPartition")
-    val fs = fsOf(h.path)
-    for (d <- Seq("bands", "grams")) restoreInterruptedSwap(fs, h.path, d)
-    healPending(h.path) // an unresolved append must publish before rewrite
-    def swap(tmp: String, dir: String): Unit = {
-      Lease.fence(h.path, "BandIndex.compact")
-      val tmpP = new HPath(h.path, tmp)
-      val dstP = new HPath(h.path, dir)
-      val bakP = new HPath(h.path, dir + "_compact_bak")
-      fs.delete(bakP, true)
-      if (fs.exists(dstP)) renameOrFail(fs, dstP, bakP)
-      renameOrFail(fs, tmpP, dstP)
-      fs.delete(bakP, true)
-    }
+    StagedCommit.heal(h.path, store) // an unresolved append publishes first
     val tomb = tombstones(spark, h.path)
     def dropRetired(df: DataFrame): DataFrame = tomb match {
       case Some(t) => df.join(broadcast(t.select("doc_id")),
@@ -541,22 +313,23 @@ object BandIndex {
         s"BandIndex.compact: tombstones at ${h.path} retire EVERY live " +
           "doc — compacting would write an empty unreadable index. Delete " +
           "the index or rebuild it instead of compacting a full retirement")
-    withWriterCoalesce(spark) {
-      dropRetired(spark.read.parquet(s"${h.path}/bands"))
-        .repartition(col("band"),
-          pmod(xxhash64(col("bkey")), lit(filesPerPartition)))
-        .sortWithinPartitions("bkey", "doc_id")
-        .write.mode("overwrite").partitionBy("band")
-        .parquet(s"${h.path}/bands_compact_tmp")
+    StagedCommit.swap(h.path, "bands", "BandIndex.compact") { tmp =>
+      withWriterCoalesce(spark) {
+        dropRetired(spark.read.parquet(s"${h.path}/bands"))
+          .repartition(col("band"),
+            pmod(xxhash64(col("bkey")), lit(filesPerPartition)))
+          .sortWithinPartitions("bkey", "doc_id")
+          .write.mode("overwrite").partitionBy("band").parquet(tmp)
+      }
     }
-    swap("bands_compact_tmp", "bands")
-    withWriterCoalesce(spark) {
-      dropRetired(spark.read.parquet(s"${h.path}/grams"))
-        .repartition(filesPerPartition, col("doc_id"))
-        .sortWithinPartitions("doc_id", "gram")
-        .write.mode("overwrite").parquet(s"${h.path}/grams_compact_tmp")
+    StagedCommit.swap(h.path, "grams", "BandIndex.compact") { tmp =>
+      withWriterCoalesce(spark) {
+        dropRetired(spark.read.parquet(s"${h.path}/grams"))
+          .repartition(filesPerPartition, col("doc_id"))
+          .sortWithinPartitions("doc_id", "gram")
+          .write.mode("overwrite").parquet(tmp)
+      }
     }
-    swap("grams_compact_tmp", "grams")
     if (tomb.isEmpty) h // layout maintenance only — content/meta unchanged
     else {
       // retirement applied: refresh the doc count from the surviving gram
@@ -564,7 +337,7 @@ object BandIndex {
       val nLive = spark.read.parquet(s"${h.path}/grams")
         .select("doc_id").distinct().count()
       writeMeta(h.path, nLive, h.ngram, h.numHashes, h.bands)
-      fs.delete(new HPath(h.path, "tombstones"), true)
+      StagedCommit.clearTombstones(h.path)
       h.copy(nDocs = nLive)
     }
   }
@@ -612,101 +385,30 @@ object BandIndex {
       appendedN >= 16 && (ratio > bound || ratio < 1.0 / bound)
   }
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Drift state at `path`: None for an index built before the monitor
     * existed (no baseline — rebuild to start monitoring) — or whose
     * ledger is unreadable/corrupt: the monitor is ADVISORY, so a damaged
     * ledger degrades to "no baseline" (rebuild restarts monitoring),
     * never to a parse error that breaks probes or appends. */
-  def driftStats(path: String): Option[BandDrift] = {
-    val fs = fsOf(path)
-    val p = new HPath(path, "band_drift.json")
-    if (!fs.exists(p)) None
-    else try {
-      val j = readSmall(fs, p)
-      for {
-        buildN <- jsonFieldOpt(j, "build_n")
-        buildG <- jsonFieldOpt(j, "build_grams")
-        appN <- jsonFieldOpt(j, "app_n")
-        appG <- jsonFieldOpt(j, "app_grams")
-        lastN <- jsonFieldOpt(j, "last_n")
-        lastG <- jsonFieldOpt(j, "last_grams")
-      } yield BandDrift(buildN,
-        if (buildN > 0) buildG.toDouble / buildN else 0.0,
-        appN, if (appN > 0) appG.toDouble / appN else 0.0,
-        lastN, if (lastN > 0) lastG.toDouble / lastN else 0.0)
-    } catch { case _: Exception => None }
-  }
+  def driftStats(path: String): Option[BandDrift] =
+    StagedCommit.driftOf(path, "band_drift.json")(parseDrift)
+
+  private def parseDrift(j: String): Option[BandDrift] =
+    for {
+      buildN <- jsonFieldOpt(j, "build_n")
+      buildG <- jsonFieldOpt(j, "build_grams")
+      appN <- jsonFieldOpt(j, "app_n")
+      appG <- jsonFieldOpt(j, "app_grams")
+      lastN <- jsonFieldOpt(j, "last_n")
+      lastG <- jsonFieldOpt(j, "last_grams")
+    } yield BandDrift(buildN,
+      if (buildN > 0) buildG.toDouble / buildN else 0.0,
+      appN, if (appN > 0) appG.toDouble / appN else 0.0,
+      lastN, if (lastN > 0) lastG.toDouble / lastN else 0.0)
 
   /** The count of a single-`count` observation riding a staging write
-    * ([[TextIndex.readObsRow]] poll). */
+    * ([[StagedCommit.readObsRow]] poll). */
   private def readObs1(obs: org.apache.spark.sql.Observation): Option[Long] =
     readObsRow(obs).filter(r => r.length >= 1 && !r.isNullAt(0))
       .map(_.getLong(0))
-
-  /** Write the build-time shingle baseline (all integers — gram counts;
-    * atomic — a crashed baseline write must not strand a truncated
-    * ledger that every later parse trips over). */
-  private def writeDriftBaseline(path: String, nDocs: Long,
-                                 grams: Long): Unit =
-    if (nDocs > 0)
-      try writeSmallAtomic(fsOf(path), new HPath(path, "band_drift.json"),
-        s"""{"build_n":$nDocs,"build_grams":$grams,"app_n":0,""" +
-          s""""app_grams":0,"last_n":0,"last_grams":0}""")
-      catch { case e: Exception =>
-        log.warn(s"BandIndex: drift baseline write at $path failed — " +
-          s"monitoring disabled until the next rebuild (${e.getMessage})")
-      }
-
-  /** Merge one drop's shingle aggregates into the ledger and warn when
-    * the advisory FIRST crosses its bound (once per crossing, not per
-    * append). No-ops without a (readable) baseline. The whole update is
-    * best-effort and runs strictly AFTER the drop published: an advisory
-    * bookkeeping failure (corrupt ledger, transient FS error) must never
-    * surface as a failed append — the caller would retry an append that
-    * actually committed and duplicate its rows. */
-  private def recordDrop(path: String, n: Long, grams: Long): Unit = try {
-    if (n <= 0) return
-    val fs = fsOf(path)
-    val p = new HPath(path, "band_drift.json")
-    if (!fs.exists(p)) return
-    val j = readSmall(fs, p)
-    // exact-integer ledger arithmetic, one read: any missing/garbled
-    // field means a damaged ledger — skip (monitoring resumes at the
-    // next rebuild), never throw past the published append
-    val parsed = for {
-      buildN <- jsonFieldOpt(j, "build_n")
-      buildG <- jsonFieldOpt(j, "build_grams")
-      priorN <- jsonFieldOpt(j, "app_n")
-      priorG <- jsonFieldOpt(j, "app_grams")
-    } yield (buildN, buildG, priorN, priorG)
-    parsed.foreach { case (buildN, buildG, priorN, priorG) =>
-      val appN = priorN + n
-      val appG = priorG + grams
-      writeSmallAtomic(fs, p,
-        s"""{"build_n":$buildN,"build_grams":$buildG,""" +
-          s""""app_n":$appN,"app_grams":$appG,""" +
-          s""""last_n":$n,"last_grams":$grams}""")
-      def advised(an: Long, ag: Long): Boolean = {
-        val buildMean = if (buildN > 0) buildG.toDouble / buildN else 0.0
-        BandDrift(buildN, buildMean, an,
-          if (an > 0) ag.toDouble / an else 0.0, n,
-          if (n > 0) grams.toDouble / n else 0.0).rebuildAdvised()
-      }
-      if (advised(appN, appG) && !advised(priorN, priorG)) {
-        val buildMean = if (buildN > 0) buildG.toDouble / buildN else 1.0
-        val ratio = (appG.toDouble / appN) / buildMean
-        log.warn(s"BandIndex: appended shingle-count drift at $path " +
-          s"crossed the rebuild bound (ratio $ratio over $appN appended " +
-          "docs) — the knee-rule geometry no longer matches the appended " +
-          "docs and probe recall on them is degrading; rebuild with " +
-          "BandIndex.write to re-derive the geometry and reset the " +
-          "baseline")
-      }
-    }
-  } catch { case e: Exception =>
-    log.warn(s"BandIndex: drift ledger update at $path failed — advisory " +
-      s"is stale, the published append is unaffected (${e.getMessage})")
-  }
 }

@@ -1,7 +1,6 @@
 package graft.store
 
 import graft.pipeline.Ann
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,236 +25,124 @@ import org.apache.spark.sql.functions._
   *    marker, roll forward after), restores interrupted swaps, aborts
   *    interrupted retires — then reads the quantizer.
   *
-  * Same staged-append/commit-marker file protocol as [[TextIndex]] and
-  * [[BandIndex]]; vec_ids must be new per the append contract.
+  * The staged-append/commit-marker file protocols of [[StagedCommit]], as
+  * [[TextIndex]] and [[BandIndex]]; vec_ids must be new per the append contract.
   * Re-appending a RETIRED id fails fast (the tombstone would silently
   * suppress it — run [[compact]] first, which applies and clears
   * tombstones). All mutations run under the single-writer [[Lease]]. */
 object IvfStore {
-  import TextIndex.{fsOf, readSmall, writeSmall, writeSmallAtomic,
-    jsonFieldOpt, renameOrFail, restoreInterruptedSwap, readObsRow}
+  import StagedCommit.{jsonFieldOpt, jsonD, readObsRow}
 
-  /** Stage a drop's assigned+normed rows, then publish by rename. The
-    * probe result after append is spec-pinned equal to an index WRITTEN
-    * with the same centroids over the union corpus. */
+  /** The staged-commit protocols' view of an IVF index: an append stages
+    * and publishes the vector lists; a rebuild swaps the quantizer and its
+    * lists in together, so probes never see new centroids over old
+    * assignments. No meta: the quantizer is the index. */
+  private[graft] val store: StagedCommit.Store = StagedCommit.Store("IvfStore",
+    tables = Seq("vectors"), swapped = Seq("vectors"),
+    rebuilt = Seq("centroids", "vectors"),
+    superseded = StagedCommit.StreamAndRetireState,
+    publish = (_, _) => (),
+    // the fresh residual baseline (observed aggregates carried in the
+    // marker) resets the drift ledger with the fresh quantizer
+    land = (root, intent) =>
+      for (n <- jsonFieldOpt(intent, "n") if n > 0) {
+        val mean = jsonD(intent, "s") / n
+        val variance = math.max(0.0, jsonD(intent, "s2") / n - mean * mean)
+        StagedCommit.writeBaseline(root, store,
+          s""""build_n":$n,"build_mean":$mean,""" +
+            s""""build_std":${math.sqrt(variance)}""")
+      },
+    ledger = Some(StagedCommit.Ledger("drift.json", "sum", integral = false,
+      drift = j => parseDrift(j).map(d => (d.ratio, d.rebuildAdvised())),
+      warning = (root, ratio, appN) =>
+        s"IvfStore: appended-residual drift at $root crossed the rebuild " +
+          s"bound (ratio $ratio over $appN appended vectors) — probe recall " +
+          "is degrading under the frozen quantizer; rebuild with " +
+          "Ann.writeIvfIndex to refresh the geometry and reset the baseline")))
+
+  /** Stage a drop's assigned+normed rows, then publish by rename (the
+    * staged offline append of [[StagedCommit]]). The probe result after
+    * append is spec-pinned equal to an index WRITTEN with the same
+    * centroids over the union corpus. */
   def append(newVecs: DataFrame, index: Ann.IvfIndex): Ann.IvfIndex =
       Lease.withLease(index.root, "IvfStore.append") {
-    val fs = fsOf(index.root)
-    healPending(index.root)
-    val pending = new HPath(index.root, "append.pending")
-    require(!fs.exists(pending),
-      s"append.pending survived heal — concurrent append? ${index.root}")
-    requireNoTombstoned(newVecs, index.root, "IvfStore.append")
+    val pending = StagedCommit.beginPending(index.root, store)
+    StagedCommit.requireNoTombstoned(newVecs, index.root, "vec_id",
+      "IvfStore.append")
     // drift: observe the drop's assignment residuals on the staging pass
     // itself (zero extra jobs) — recorded after publish
     val obs = new org.apache.spark.sql.Observation()
-    withWriterCoalesce(newVecs.sparkSession) {
-      Ann.ivfStoredRowsWithDist(newVecs, index.centroids)
+    stageVectors(newVecs, index.centroids, obs, s"$pending/vectors")
+    StagedCommit.commitPending(index.root, store)
+    StagedCommit.publishPending(index.root, store)
+    // advisory update AFTER publish: a crash in this window loses the
+    // drop's drift record (statistic goes stale, never wrong/doubled)
+    readObs2(obs).foreach { case (n, s) =>
+      StagedCommit.recordDrop(index.root, store, n, s) }
+    index
+  }
+
+  /** Writes `vecs` assigned under the frozen quantizer to `dir`, observing
+    * the drop's (count, Σ residual) on `obs`. */
+  private def stageVectors(vecs: DataFrame, cents: Array[(Long, Array[Long])],
+                           obs: org.apache.spark.sql.Observation,
+                           dir: String): Unit =
+    withWriterCoalesce(vecs.sparkSession) {
+      Ann.ivfStoredRowsWithDist(vecs, cents)
         .observe(obs, count(lit(1)).as("n"),
           sum(col("adist").cast("double")).as("s"))
         .drop("adist")
         .repartition(col("list_id"))
         .write.partitionBy("list_id").mode("overwrite")
-        .parquet(s"${index.root}/append.pending/vectors")
+        .parquet(dir)
     }
-    // commit point: everything before is abortable, everything after
-    // rolls forward (publish is idempotent — renamed files leave the
-    // staging listing, Spark part names are unique per job). Fenced: a
-    // writer that lost its lease while staging must not commit into the
-    // successor's generation.
-    Lease.fence(index.root, "IvfStore.append")
-    writeSmall(fs, new HPath(pending, "_staged"), "")
-    publishPending(index.root)
-    // advisory update AFTER publish: a crash in this window loses the
-    // drop's drift record (statistic goes stale, never wrong/doubled)
-    readObs2(obs).foreach { case (n, s) => recordDrop(index.root, n, s) }
-    index
-  }
-
-  /** Fail-fast reincarnation guard — [[BandIndex]]'s `requireNoTombstoned`
-    * for vec_ids: a tombstoned id re-appended would stay suppressed by
-    * the probe anti-join until the next [[compact]], silently. Sanctioned
-    * repost path: compact (applies + clears tombstones), then append. */
-  private def requireNoTombstoned(vecs: DataFrame, root: String,
-                                  op: String): Unit =
-    tombstones(vecs.sparkSession, root).foreach { t =>
-      val clash = vecs.join(
-          broadcast(t.select(col("vec_id").cast("long").as("vec_id"))),
-          Seq("vec_id"), "left_semi")
-        .select("vec_id").limit(3).collect().map(_.getLong(0))
-      require(clash.isEmpty,
-        s"$op: vec_ids ${clash.mkString(", ")} are tombstoned at $root — " +
-          "the tombstone would suppress the re-appended vector until the " +
-          "next compact; run compact(...) before re-appending a retired id")
-    }
-
-  private def healPending(root: String): Unit = {
-    val fs = fsOf(root)
-    val pending = new HPath(root, "append.pending")
-    if (fs.exists(pending)) {
-      if (fs.exists(new HPath(pending, "_staged"))) publishPending(root)
-      else fs.delete(pending, true)
-    }
-  }
-
-  private def publishPending(root: String): Unit = {
-    // no-op from the lease-free heal path (open); aborts a leased writer
-    // whose lease was taken over while it staged
-    Lease.fence(root, "IvfStore.publishPending")
-    val fs = fsOf(root)
-    val pending = new HPath(root, "append.pending")
-    val staged = new HPath(pending, "vectors")
-    if (fs.exists(staged)) {
-      for (d <- fs.listStatus(staged) if d.isDirectory) {
-        val dst = new HPath(s"$root/vectors/${d.getPath.getName}")
-        fs.mkdirs(dst) // rename silently returns false without the parent
-        for (f <- fs.listStatus(d.getPath) if f.isFile)
-          renameOrFail(fs, f.getPath, new HPath(dst, f.getPath.getName))
-      }
-    }
-    fs.delete(pending, true)
-  }
 
   /** Idempotent, batch-id-keyed streaming append — the continuous form
-    * of [[append]] for `foreachBatch` sinks, with [[BandIndex.appendBatch]]'s
-    * replay discipline verbatim:
-    *
-    *  1. commit marker `_stream_commits/<bid>` present → no-op;
-    *  2. staged rows present (a prior attempt finished staging) → publish
-    *     them without re-evaluating `novel` — the batch's accepted set
-    *     was fixed at first evaluation, so a probe that feeds `novel`
-    *     never sees this bid's own partially published rows;
-    *  3. otherwise evaluate `novel`, stage its assigned+normed rows under
-    *     the FROZEN quantizer, then publish with bid-keyed names derived
-    *     from the staged file names (stable across replays — files
-    *     already published are skipped, never deleted), write meta-free
-    *     state, marker LAST, drop staging.
-    *
-    * `autoCompactAt > 0` bounds small-file fragmentation exactly as in
-    * [[BandIndex.appendBatch]] (post-marker, replay-safe). */
+    * of [[append]] for `foreachBatch` sinks, by the stage-once stream batch
+    * of [[StagedCommit.appendBatch]] (the [[BandIndex.appendBatch]] replay
+    * discipline): a committed bid no-ops; a batch whose staging finished
+    * publishes without re-evaluating `novel`; otherwise `novel` is staged
+    * under the FROZEN quantizer, then published with bid-keyed names, the
+    * marker LAST. `autoCompactAt > 0` bounds small-file fragmentation
+    * (post-marker, replay-safe). */
   def appendBatch(root: String, bid: Long, autoCompactAt: Int = 0)
-                 (novel: => DataFrame): Unit = {
-    val fs = fsOf(root)
-    val marker = new HPath(s"$root/_stream_commits/$bid")
-    if (fs.exists(marker)) return // replay no-op: no lease, no work
-    Lease.withLease(root, "IvfStore.appendBatch") {
-    val h = open(org.apache.spark.sql.SparkSession.active, root)
-    val staging = s"$root/_stream_staging/bid=$bid"
-    val stagedDone = new HPath(s"$staging/_staged")
-    if (!fs.exists(stagedDone)) {
+                 (novel: => DataFrame): Unit =
+    StagedCommit.appendBatch(root, bid, store, autoCompactAt)(
+        open(SparkSession.active, root)) { (h, staging) =>
       // `novel` stays single-evaluation: its one action is the staged
       // write below, except when tombstones are outstanding — then the
       // reincarnation guard needs a second action, so checkpoint first
       val docs0 = novel
       val docs =
-        if (tombstones(org.apache.spark.sql.SparkSession.active, root)
-            .isDefined) docs0.localCheckpoint()
+        if (tombstones(SparkSession.active, root).isDefined)
+          docs0.localCheckpoint()
         else docs0
-      requireNoTombstoned(docs, root, "IvfStore.appendBatch")
+      StagedCommit.requireNoTombstoned(docs, root, "vec_id",
+        "IvfStore.appendBatch")
       val obs = new org.apache.spark.sql.Observation()
-      withWriterCoalesce(docs.sparkSession) {
-        Ann.ivfStoredRowsWithDist(docs, h.centroids)
-          .observe(obs, count(lit(1)).as("n"),
-            sum(col("adist").cast("double")).as("s"))
-          .drop("adist")
-          .repartition(col("list_id"))
-          .write.partitionBy("list_id").mode("overwrite")
-          .parquet(s"$staging/vectors")
-      }
+      stageVectors(docs, h.centroids, obs, s"$staging/vectors")
       // drift aggregates persist WITH the staging (the accepted set is
       // fixed at first evaluation; a replay publishes without re-running
       // `novel`, so the observation only exists on this first attempt)
-      readObs2(obs).foreach { case (n, s) =>
-        writeSmall(fs, new HPath(s"$staging/drift_stats.json"),
-          s"""{"n":$n,"sum":$s}""")
-      }
-      writeSmall(fs, stagedDone, "")
-    }
-    Lease.fence(root, "IvfStore.appendBatch") // publish starts here
-    val staged = new HPath(s"$staging/vectors")
-    if (fs.exists(staged)) {
-      for (d <- fs.listStatus(staged) if d.isDirectory) {
-        val dst = new HPath(s"$root/vectors/${d.getPath.getName}")
-        fs.mkdirs(dst)
-        for (f <- fs.listStatus(d.getPath)
-             if f.isFile && f.getPath.getName.startsWith("part-")) {
-          val dstF = new HPath(dst, s"bid-$bid-${f.getPath.getName}")
-          if (fs.exists(dstF)) fs.delete(f.getPath, false)
-          else renameOrFail(fs, f.getPath, dstF)
-        }
-      }
-    }
-    fs.mkdirs(new HPath(s"$root/_stream_commits"))
-    writeSmall(fs, marker, "")
-    // drift merge strictly AFTER the marker: a replayed bid no-ops at the
-    // marker check and can never double-count; a crash between marker and
-    // merge loses this drop's drift record (stale advisory, never wrong)
-    val ds = new HPath(s"$staging/drift_stats.json")
-    if (fs.exists(ds)) {
-      val j = readSmall(fs, ds)
-      recordDrop(root, TextIndex.jsonField(j, "n"), jsonD(j, "sum"))
-    }
-    fs.delete(new HPath(staging), true)
-    if (autoCompactAt > 0 &&
-        countPartFiles(fs, new HPath(root, "vectors")) > autoCompactAt)
-      compact(org.apache.spark.sql.SparkSession.active, h)
-    }
-  }
-
-  private def countPartFiles(fs: org.apache.hadoop.fs.FileSystem,
-                             dir: HPath): Int =
-    if (!fs.exists(dir)) 0
-    else fs.listStatus(dir).map { st =>
-      if (st.isDirectory) countPartFiles(fs, st.getPath)
-      else if (st.getPath.getName.contains("part-")) 1 else 0
-    }.sum
-
-  /** Drop all streaming bookkeeping at an index root — a NEW stream
-    * (fresh checkpoint, bids restarting at 0) must call this before its
-    * first batch, for exactly [[BandIndex.clearStreamState]]'s reasons. */
-  private[graft] def clearStreamState(root: String): Unit = {
-    val fs = fsOf(root)
-    fs.delete(new HPath(root, "_stream_commits"), true)
-    fs.delete(new HPath(root, "_stream_staging"), true)
-  }
+      ("", readObs2(obs))
+    } (h => compact(SparkSession.active, h))
 
   /** Retire vectors: ids land in `tombstones/` through the staged-rename
-    * discipline (interrupted retires abort at [[open]]; tombstones are a
-    * set, so re-running is harmless). Probes exclude them immediately;
-    * [[compact]] makes the drop physical. Retiring a vector whose id
-    * seeded a CENTROID does not move the quantizer — frozen geometry is
-    * the delta contract, and the seed's VALUE is part of the index, not
-    * a live vector. */
-  def retire(ids: DataFrame, index: Ann.IvfIndex): Ann.IvfIndex =
-      Lease.withLease(index.root, "IvfStore.retire") {
-    val fs = fsOf(index.root)
-    val pending = new HPath(index.root, "retire.pending")
-    fs.delete(pending, true)
-    withWriterCoalesce(ids.sparkSession) {
-      ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
-        .write.mode("overwrite").parquet(s"${index.root}/retire.pending")
-    }
-    val dst = new HPath(index.root, "tombstones")
-    fs.mkdirs(dst)
-    Lease.fence(index.root, "IvfStore.retire")
-    for (f <- fs.listStatus(pending)
-         if f.isFile && f.getPath.getName.startsWith("part-"))
-      renameOrFail(fs, f.getPath, new HPath(dst, f.getPath.getName))
-    fs.delete(pending, true)
+    * discipline ([[StagedCommit.retire]]: interrupted retires abort at
+    * [[open]]; tombstones are a set, so re-running is harmless). Probes
+    * exclude them immediately; [[compact]] makes the drop physical.
+    * Retiring a vector whose id seeded a CENTROID does not move the
+    * quantizer — frozen geometry is the delta contract, and the seed's
+    * VALUE is part of the index, not a live vector. */
+  def retire(ids: DataFrame, index: Ann.IvfIndex): Ann.IvfIndex = {
+    StagedCommit.retire(ids, index.root, "vec_id", "IvfStore.retire")
     index
   }
 
   /** The retired-id table, if any retirements are outstanding. */
   private[graft] def tombstones(spark: SparkSession,
-                                root: String): Option[DataFrame] = {
-    val fs = fsOf(root)
-    val dir = new HPath(root, "tombstones")
-    if (fs.exists(dir) &&
-        fs.listStatus(dir).exists(f => f.isFile &&
-          f.getPath.getName.startsWith("part-")))
-      Some(spark.read.parquet(s"$root/tombstones"))
-    else None
-  }
+                                root: String): Option[DataFrame] =
+    StagedCommit.tombstones(spark, root)
 
   /** Tombstone-aware probe: [[Ann.ivfProbeTopK]] with outstanding
     * retirements excluded before ranking. */
@@ -272,9 +159,7 @@ object IvfStore {
               filesPerPartition: Int = 1): Ann.IvfIndex =
       Lease.withLease(index.root, "IvfStore.compact") {
     require(filesPerPartition >= 1)
-    val fs = fsOf(index.root)
-    restoreInterruptedSwap(fs, index.root, "vectors")
-    healPending(index.root)
+    StagedCommit.heal(index.root, store)
     val tomb = tombstones(spark, index.root)
     val live = tomb match {
       case Some(t) => spark.read.parquet(s"${index.root}/vectors")
@@ -291,68 +176,24 @@ object IvfStore {
         s"IvfStore.compact: tombstones at ${index.root} retire EVERY " +
           "live vector — compacting would write an empty unreadable " +
           "index. Delete or rebuild instead of compacting a full retirement")
-    withWriterCoalesce(live.sparkSession) {
-      live
-        .repartition(col("list_id"),
-          pmod(xxhash64(col("vid")), lit(filesPerPartition)))
-        .sortWithinPartitions("vid")
-        .write.mode("overwrite").partitionBy("list_id")
-        .parquet(s"${index.root}/vectors_compact_tmp")
+    StagedCommit.swap(index.root, "vectors", "IvfStore.compact") { tmp =>
+      withWriterCoalesce(live.sparkSession) {
+        live
+          .repartition(col("list_id"),
+            pmod(xxhash64(col("vid")), lit(filesPerPartition)))
+          .sortWithinPartitions("vid")
+          .write.mode("overwrite").partitionBy("list_id").parquet(tmp)
+      }
     }
-    Lease.fence(index.root, "IvfStore.compact")
-    val tmpP = new HPath(index.root, "vectors_compact_tmp")
-    val dstP = new HPath(index.root, "vectors")
-    val bakP = new HPath(index.root, "vectors_compact_bak")
-    fs.delete(bakP, true)
-    if (fs.exists(dstP)) renameOrFail(fs, dstP, bakP)
-    renameOrFail(fs, tmpP, dstP)
-    fs.delete(bakP, true)
-    fs.delete(new HPath(index.root, "tombstones"), true)
+    StagedCommit.clearTombstones(index.root)
     index
   }
 
   /** Heal-then-open: resolve any interrupted rebuild/append/compact/
     * retire, then read the stored quantizer. */
   def open(spark: SparkSession, root: String): Ann.IvfIndex = {
-    val fs = fsOf(root)
-    // a COMMITTED rebuild supersedes every other pending state — roll it
-    // forward before the per-generation heals below
-    completeRebuild(root)
-    restoreInterruptedSwap(fs, root, "vectors")
-    healPending(root)
-    fs.delete(new HPath(root, "retire.pending"), true)
+    StagedCommit.heal(root, store)
     Ann.openIvfIndex(spark, root)
-  }
-
-  /** Roll a COMMITTED rebuild ([[Ann.writeIvfIndex]]) forward —
-    * idempotent from every crash point, called by [[open]] and the
-    * rebuild itself; no-op without the marker. The superseded
-    * generation's maintenance state dies first (stale tombstones would
-    * wrongly suppress new vectors, stale streaming markers a fresh
-    * stream's first batches, a staged append belongs to the dead
-    * generation, and the drift ledger resets with the fresh quantizer),
-    * then centroids and vectors swap in — the quantizer and its lists
-    * land together, so probes never see new centroids over old
-    * assignments — then the fresh drift baseline (observed residual
-    * aggregates carried in the marker) lands and the marker clears. */
-  private[graft] def completeRebuild(root: String): Unit = {
-    val fs = fsOf(root)
-    val marker = new HPath(root, "rebuild.intent.json")
-    if (!fs.exists(marker)) return
-    // no-op from the lease-free heal path (open); aborts a leased writer
-    // whose lease was taken over — the successor's own open() rolls the
-    // committed marker forward to the identical end state
-    Lease.fence(root, "IvfStore.completeRebuild")
-    val intent = readSmall(fs, marker)
-    for (d <- Seq("tombstones", "retire.pending", "append.pending",
-        "_stream_commits", "_stream_staging", "drift.json"))
-      fs.delete(new HPath(root, d), true)
-    for (d <- Seq("centroids", "vectors"))
-      TextIndex.rollRebuildSwap(fs, root, d)
-    jsonFieldOpt(intent, "n").foreach(n =>
-      writeDriftBaselineStats(root, n, jsonD(intent, "s"),
-        jsonD(intent, "s2")))
-    fs.delete(marker, false)
   }
 
   /** The (n, Σd, Σd²) residual aggregates of a rebuild's staging-write
@@ -399,105 +240,26 @@ object IvfStore {
       appendedN >= 16 && ratio > bound
   }
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Drift state at `root`: None for an index built before the monitor
     * existed (no baseline — rebuild to start monitoring) — or whose
     * ledger is unreadable/corrupt: the monitor is ADVISORY, so a damaged
     * ledger degrades to "no baseline" (rebuild restarts monitoring),
     * never to a parse error that breaks probes or appends. */
-  def driftStats(spark: SparkSession, root: String): Option[IvfDrift] = {
-    val fs = fsOf(root)
-    val p = new HPath(root, "drift.json")
-    if (!fs.exists(p)) None
-    else try {
-      val j = readSmall(fs, p)
-      for {
-        buildN <- jsonFieldOpt(j, "build_n")
-        appN <- jsonFieldOpt(j, "app_n")
-        lastN <- jsonFieldOpt(j, "last_n")
-      } yield IvfDrift(buildN, jsonD(j, "build_mean"), jsonD(j, "build_std"),
-        appN, if (appN > 0) jsonD(j, "app_sum") / appN else 0.0,
-        lastN, if (lastN > 0) jsonD(j, "last_sum") / lastN else 0.0)
-    } catch { case _: Exception => None }
-  }
+  def driftStats(spark: SparkSession, root: String): Option[IvfDrift] =
+    StagedCommit.driftOf(root, "drift.json")(parseDrift)
 
-  /** Numeric JSON field as Double (the metas otherwise hold only longs;
-    * drift means/stds are genuinely fractional). */
-  private def jsonD(s: String, k: String): Double = {
-    val parts = s.split(s""""$k":""")
-    if (parts.length < 2) 0.0
-    else parts(1).takeWhile(c => c.isDigit || "+-.eE".contains(c)).toDouble
-  }
+  private def parseDrift(j: String): Option[IvfDrift] =
+    for {
+      buildN <- jsonFieldOpt(j, "build_n")
+      appN <- jsonFieldOpt(j, "app_n")
+      lastN <- jsonFieldOpt(j, "last_n")
+    } yield IvfDrift(buildN, jsonD(j, "build_mean"), jsonD(j, "build_std"),
+      appN, if (appN > 0) jsonD(j, "app_sum") / appN else 0.0,
+      lastN, if (lastN > 0) jsonD(j, "last_sum") / lastN else 0.0)
 
   /** The (n, sum) pair of a drop observation riding a staging write
-    * ([[TextIndex.readObsRow]] poll). */
+    * ([[StagedCommit.readObsRow]] poll). */
   private def readObs2(obs: org.apache.spark.sql.Observation): Option[(Long, Double)] =
     readObsRow(obs).filter(r => r.length >= 2 && !r.isNullAt(0))
       .map(r => (r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1)))
-
-  /** Write the build-time residual baseline from the rebuild's observed
-    * (n, Σd, Σd²) aggregates. A rebuild thus RESETS the drift ledger —
-    * fresh geometry, fresh baseline, cumulative append stats back to
-    * zero. Atomic, best-effort: a failed write means no baseline, never
-    * a truncated one (and never a failed rebuild). */
-  private def writeDriftBaselineStats(root: String, n: Long, s: Double,
-                                      s2: Double): Unit =
-    if (n > 0) try {
-      val mean = s / n
-      val variance = math.max(0.0, s2 / n - mean * mean)
-      writeSmallAtomic(fsOf(root), new HPath(root, "drift.json"),
-        s"""{"build_n":$n,"build_mean":$mean,""" +
-          s""""build_std":${math.sqrt(variance)},"app_n":0,""" +
-          s""""app_sum":0.0,"last_n":0,"last_sum":0.0}""")
-    } catch { case e: Exception =>
-      log.warn(s"IvfStore: drift baseline write at $root failed — " +
-        s"monitoring disabled until the next rebuild (${e.getMessage})")
-    }
-
-  /** Merge one drop's residual aggregates into the ledger and warn when
-    * the advisory FIRST crosses its bound (once per crossing, not per
-    * append). No-ops without a (readable) baseline. Best-effort and
-    * strictly post-publish: an advisory bookkeeping failure (corrupt
-    * ledger, transient FS error) must never surface as a failed append —
-    * the caller would retry an append that actually committed and
-    * duplicate its vectors. */
-  private def recordDrop(root: String, n: Long, s: Double): Unit = try {
-    if (n <= 0) return
-    val fs = fsOf(root)
-    val p = new HPath(root, "drift.json")
-    if (!fs.exists(p)) return
-    val j = readSmall(fs, p)
-    val parsed = for {
-      buildN <- jsonFieldOpt(j, "build_n")
-      priorN <- jsonFieldOpt(j, "app_n")
-    } yield (buildN, priorN)
-    parsed.foreach { case (buildN, priorN) =>
-      val buildMean = jsonD(j, "build_mean")
-      val buildStd = jsonD(j, "build_std")
-      val priorSum = jsonD(j, "app_sum")
-      val appN = priorN + n
-      val appSum = priorSum + s
-      writeSmallAtomic(fs, p,
-        s"""{"build_n":$buildN,"build_mean":$buildMean,""" +
-          s""""build_std":$buildStd,""" +
-          s""""app_n":$appN,"app_sum":$appSum,"last_n":$n,"last_sum":$s}""")
-      def advised(an: Long, asum: Double): Boolean =
-        IvfDrift(buildN, buildMean, buildStd, an,
-          if (an > 0) asum / an else 0.0, n,
-          if (n > 0) s / n else 0.0).rebuildAdvised()
-      if (advised(appN, appSum) && !advised(priorN, priorSum)) {
-        val ratio =
-          if (buildMean > 0) (appSum / appN) / buildMean else 0.0
-        log.warn(s"IvfStore: appended-residual drift at $root crossed " +
-          s"the rebuild bound (ratio $ratio over $appN appended " +
-          "vectors) — probe recall is degrading under the frozen " +
-          "quantizer; rebuild with Ann.writeIvfIndex to refresh the " +
-          "geometry and reset the baseline")
-      }
-    }
-  } catch { case e: Exception =>
-    log.warn(s"IvfStore: drift ledger update at $root failed — advisory " +
-      s"is stale, the published append is unaffected (${e.getMessage})")
-  }
 }

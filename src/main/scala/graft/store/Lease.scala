@@ -64,10 +64,10 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * such stores the lease degrades to advisory and the staging protocols
   * lose crash atomicity; run these stores there only behind a
   * conditional-write/CAS backend (e.g. a coordination service or S3
-  * conditional PUT seam). [[TextIndex.fsOf]] warns once per scheme when
+  * conditional PUT seam). [[StagedCommit.fsOf]] warns once per scheme when
   * an index root resolves to a known object-store scheme. */
 object Lease {
-  import TextIndex.{fsOf, readSmall, writeSmall}
+  import StagedCommit.{fsOf, readSmall, writeSmall}
 
   /** Liveness horizon: a lease whose timestamp is older than this is a
     * crashed writer and may be taken over. */
@@ -232,7 +232,7 @@ object Lease {
       // read defensively: a lease mid-write (or 0-byte from a dying
       // holder) parses as live — conservative, the operator retries
       val s = try readSmall(fs, p) catch { case _: Exception => "" }
-      val ts = TextIndex.jsonFieldOpt(s, "ts").getOrElse(Long.MaxValue)
+      val ts = StagedCommit.jsonFieldOpt(s, "ts").getOrElse(Long.MaxValue)
       val age = System.currentTimeMillis() - ts
       if (age <= staleMs)
         throw new IllegalStateException(

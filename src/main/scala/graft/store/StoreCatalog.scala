@@ -1,7 +1,7 @@
 package graft.store
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,9 +21,10 @@ final case class LevelExtent(first: Long, closedEnd: Long)
   * `files` lists the raw and level files the catalog describes, relative to
   * the store root. [[Warehouse.open]] trusts the catalog only when that list
   * equals its own listing, so a catalog is exact or unused: any other writer
-  * (a stream sink, `Tools.retire`, `compact`, a file added by hand) or a
-  * crash between the data write and the catalog write leaves it unused, and
-  * the handle derives what a caller asks for from the data. */
+  * (a stream sink, a file added by hand) or a crash between the data write
+  * and the catalog write leaves it unused, and the handle derives what a
+  * caller asks for from the data. Ingest, append, `Warehouse.compact` and
+  * `Tools.retire` write it after their data. */
 final case class StoreCatalog(files: Seq[String],
                               metrics: Map[String, MetricExtent],
                               levels: Map[(Long, String), LevelExtent])
@@ -50,7 +51,7 @@ object StoreCatalog {
   /** The files `tables` read, sorted, relative to `root` (the file index's
     * listing: no Spark job). */
   def filesOf(root: String, tables: DataFrame*): Seq[String] = {
-    val fs = fsOf(tables.head.sparkSession, root)
+    val fs = StagedCommit.fsOf(root)
     val prefix = fs.makeQualified(new Path(root)).toUri.getPath.stripSuffix("/") + "/"
     tables.flatMap(_.inputFiles).map { f =>
       val p = new Path(f).toUri.getPath
@@ -58,7 +59,7 @@ object StoreCatalog {
     }.sorted
   }
 
-  /** Replaces the catalog: written beside it, then renamed in. */
+  /** Replaces the catalog atomically: written beside it, then renamed in. */
   def write(spark: SparkSession, root: String, c: StoreCatalog): Unit = {
     val om = new ObjectMapper()
     val doc = om.createObjectNode()
@@ -72,19 +73,14 @@ object StoreCatalog {
     for (((i, m), e) <- c.levels.toSeq.sortBy(_._1))
       ls.addObject().put("interval", i).put("metric", m).put("first", e.first)
         .put("closed_end", e.closedEnd)
-    val fs = fsOf(spark, root)
-    val tmp = new Path(s"$root/$fileName.tmp")
-    val dst = new Path(s"$root/$fileName")
-    val out = fs.create(tmp, true)
-    try out.write(om.writeValueAsBytes(doc)) finally out.close()
-    fs.delete(dst, false)
-    require(fs.rename(tmp, dst), s"catalog: rename $tmp -> $dst failed")
+    StagedCommit.writeSmallAtomic(StagedCommit.fsOf(root), new Path(s"$root/$fileName"),
+      om.writeValueAsString(doc))
   }
 
   /** The catalog file's content, if the store has one. */
   def read(spark: SparkSession, root: String): Option[StoreCatalog] = {
     val p = new Path(s"$root/$fileName")
-    val fs = fsOf(spark, root)
+    val fs = StagedCommit.fsOf(root)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
@@ -102,7 +98,4 @@ object StoreCatalog {
           LevelExtent(n.get("first").asLong, n.get("closed_end").asLong)).toMap))
     }
   }
-
-  private def fsOf(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 }

@@ -1,7 +1,7 @@
 package graft.store
 
 import graft.pipeline.TextOps
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,110 +39,37 @@ object TextIndex {
     java.lang.Long.parseLong(d.map(b => f"$b%02x").mkString.take(15), 16)
   }
 
-  /** Schemes already warned about — the store contract ([[Lease]]
-    * scaladoc) requires HDFS-class atomic create/rename, which S3-class
-    * object stores emulate non-atomically; warn once per scheme, not per
-    * call. */
-  private val warnedSchemes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  import StagedCommit.{fsOf, readSmall, writeSmall, jsonField, jsonFieldOpt}
 
-  private[store] def fsOf(path: String): FileSystem = {
-    val p = new HPath(path)
-    val scheme = Option(p.toUri.getScheme).getOrElse("").toLowerCase
-    if (Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "oss")(scheme) &&
-        warnedSchemes.add(scheme))
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"graft store at a '$scheme' object-store path: the Lease and " +
-          "staging protocols require HDFS-class atomic create/rename " +
-          "(see graft.store.Lease scaladoc) — on this store the lease " +
-          "degrades to advisory and crash atomicity is best-effort; use " +
-          "a conditional-write backend for production mutation")
-    p.getFileSystem(
-      org.apache.spark.SparkContext.getOrCreate().hadoopConfiguration)
-  }
-
-  private[store] def readSmall(fs: FileSystem, p: HPath): String = {
-    val in = fs.open(p)
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.commons.io.IOUtils.copy(in, bos)
-      new String(bos.toByteArray, "UTF-8")
-    } finally in.close()
-  }
-
-  private[store] def writeSmall(fs: FileSystem, p: HPath, s: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(s.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Atomic replacement for [[writeSmall]] where a PARTIAL file must
-    * never be observable (commit markers, advisory ledgers): the content
-    * lands complete in a tmp name first and the rename is the publish.
-    * A crash leaves either the old file, no file, or the new file —
-    * never a truncated one (the plain create-truncate shape can strand a
-    * 0-byte file that poisons every later parse). The delete→rename pair
-    * is not itself atomic (Hadoop rename refuses existing targets): a
-    * crash between them loses the OLD file, so callers must tolerate
-    * absence — every caller here does (markers are existence checks,
-    * ledgers degrade to "no baseline"). */
-  private[graft] def writeSmallAtomic(fs: FileSystem, p: HPath,
-                                      s: String): Unit = {
-    val tmp = new HPath(p.getParent,
-      s"${p.getName}.tmp.${System.nanoTime()}")
-    writeSmall(fs, tmp, s)
-    fs.delete(p, false)
-    renameOrFail(fs, tmp, p)
-  }
-
-  /** Bounded poll of a `Dataset.observe` metric row — the observed write
-    * is the action, so metrics arrive within milliseconds of it; None
-    * (callers skip their advisory update, never block a pipeline) if the
-    * metrics node was pruned (e.g. an empty batch) or never fires within
-    * `timeoutMs`. One implementation for every store-side ride-along
-    * observation (BandIndex/IvfStore drift, baselines). */
-  private[store] def readObsRow(obs: org.apache.spark.sql.Observation,
-                                timeoutMs: Long = 30000L): Option[org.apache.spark.sql.Row] = {
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    while (!obs.future.isCompleted && System.nanoTime() < deadline)
-      Thread.sleep(10)
-    if (!obs.future.isCompleted) None
-    else Some(scala.concurrent.Await.result(obs.future,
-      scala.concurrent.duration.Duration(1, "s")))
-  }
-
-  private[store] def jsonField(s: String, k: String): Long =
-    s.split(s""""$k":""")(1).takeWhile(c => c.isDigit || c == '-').toLong
-
-  /** Absent field → None instead of an opaque index-out-of-bounds —
-    * metas written before a field existed must stay openable. */
-  private[store] def jsonFieldOpt(s: String, k: String): Option[Long] = {
-    val parts = s.split(s""""$k":""")
-    if (parts.length < 2) None
-    else Some(parts(1).takeWhile(c => c.isDigit || c == '-').toLong)
-  }
-
-  private[store] def renameOrFail(fs: FileSystem, src: HPath, dst: HPath): Unit =
-    require(fs.rename(src, dst),
-      s"TextIndex: rename $src -> $dst failed (Hadoop rename returns " +
-        "false on missing destination parents or existing targets)")
-
-  /** One step of a committed-rebuild roll-forward: swap
-    * `<dir>_rebuild_tmp` into `<dir>` (old generation aside, then
-    * dropped). Idempotent from every crash point — a tmp that is gone
-    * already swapped; the backup always clears. Only ever called under a
-    * rebuild marker, so the old generation is never needed back. */
-  private[store] def rollRebuildSwap(fs: FileSystem, path: String,
-                                     dir: String): Unit = {
-    val tmp = new HPath(path, dir + "_rebuild_tmp")
-    val bak = new HPath(path, dir + "_rebuild_bak")
-    val dst = new HPath(path, dir)
-    if (fs.exists(tmp)) {
-      fs.delete(bak, true)
-      if (fs.exists(dst)) renameOrFail(fs, dst, bak)
-      renameOrFail(fs, tmp, dst)
-    }
-    fs.delete(bak, true)
-  }
+  /** The staged-commit protocols' view of a text index: an append stages
+    * postings and doclen and replaces the dict whole (`dict.next`); the
+    * meta lands the staged intent's counts. */
+  private val store = StagedCommit.Store("TextIndex",
+    tables = Seq("postings", "doclen"),
+    swapped = Seq("postings", "doclen", "positions"),
+    rebuilt = Seq("postings", "dict", "doclen"),
+    // the POSITIONAL tier indexes the superseded corpus: phraseSearch
+    // answering from it after a rebuild would silently return the old
+    // corpus's phrases — re-run writePositional after a rebuild
+    superseded = Seq("positions"),
+    publish = (path, staged) => {
+      val fs = fsOf(path)
+      val intent = readSmall(fs, new HPath(staged, "intent.json"))
+      val meta = readSmall(fs, new HPath(path, "text_index.json"))
+      // an intent from a pre-BM25 binary lacks big_l — keep the meta's
+      // (possibly absent → -1 legacy marker) rather than crash
+      val bigL = jsonFieldOpt(intent, "big_l")
+        .orElse(jsonFieldOpt(meta, "big_l")).getOrElse(-1L)
+      writeSmall(fs, new HPath(path, "text_index.json"),
+        s"""{"n_docs":${jsonField(intent, "n_docs")},""" +
+          s""""buckets":${jsonField(meta, "buckets")},"big_l":$bigL}""")
+    },
+    land = (path, intent) =>
+      writeSmall(fsOf(path), new HPath(path, "text_index.json"),
+        s"""{"n_docs":${jsonField(intent, "n_docs")},""" +
+          s""""buckets":${jsonField(intent, "buckets")},""" +
+          s""""big_l":${jsonField(intent, "big_l")}}"""),
+    replaced = Seq("dict"))
 
   private def postingsOf(docs: DataFrame, buckets: Int,
                          text: String): DataFrame =
@@ -156,107 +83,41 @@ object TextIndex {
             text: String = "text"): Handle =
     write(docs, path, buckets, text, 0)
 
+  /** [[write]] with an injected crash point — spec-only seam for the
+    * rebuild matrix (1 = staged, 2 = committed). A rebuild at a path
+    * SUPERSEDES any staged append there, even one past its commit marker:
+    * rebuilding at a fixed path after a crashed append is the CLI `index` /
+    * textIndexDeltaFor flow. */
   private[store] def write(docs: DataFrame, path: String, buckets: Int,
             text: String, crashAfterStep: Int): Handle =
       Lease.withLease(path, "TextIndex.write") {
-    def crash(step: Int): Unit = if (step == crashAfterStep)
-      throw new RuntimeException(s"spec crash seam: rebuild step $step")
     require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    val wfs = fsOf(path)
-    // roll forward a prior COMMITTED rebuild first (its marker
-    // supersedes everything at this path), so the staging below starts
-    // clean
-    completeRebuild(path)
-    // 1. stage the new generation into tmp dirs — the live index stays
-    //    fully intact and searchable until the commit marker below: a
-    //    crash (or a lease lost to a GC-pause takeover) during these
-    //    long writes must not leave a mixed-generation index (new
-    //    postings under the old meta's n_docs/big_l was exactly that
-    //    corruption)
-    for (d <- Seq("postings", "dict", "doclen"))
-      wfs.delete(new HPath(path, d + "_rebuild_tmp"), true)
-    val tf = postingsOf(docs, buckets, text)
-    withWriterCoalesce(docs.sparkSession) {
-      tf.write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/postings_rebuild_tmp")
-    }
-    // df = docs-per-token over the postings just written (re-read: the
-    // written files are the one materialization; no second corpus scan)
     val spark = docs.sparkSession
-    withWriterCoalesce(spark) {
-      spark.read.parquet(s"$path/postings_rebuild_tmp")
-        .groupBy("bucket", "token").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/dict_rebuild_tmp")
+    StagedCommit.rebuild(path, store, "TextIndex.write", crashAfterStep) { tmp =>
+      withWriterCoalesce(spark) {
+        postingsOf(docs, buckets, text).write.mode("overwrite")
+          .partitionBy("bucket").parquet(tmp("postings"))
+        // df = docs-per-token over the postings just written (re-read: the
+        // written files are the one materialization; no second corpus scan)
+        spark.read.parquet(tmp("postings"))
+          .groupBy("bucket", "token").agg(count(lit(1)).as("df"))
+          .write.mode("overwrite").partitionBy("bucket").parquet(tmp("dict"))
+        // per-doc length (Σ tf) — the BM25 normalizer; derived from the
+        // written postings, so still a single corpus scan overall
+        spark.read.parquet(tmp("postings"))
+          .groupBy("doc_id").agg(sum("tf").as("dl"))
+          .write.mode("overwrite").parquet(tmp("doclen"))
+      }
+      val bigL = spark.read.parquet(tmp("doclen"))
+        .agg(coalesce(sum("dl"), lit(0L))).head().getLong(0)
+      val nDocs = docs.count()
+      (s"""{"n_docs":$nDocs,"buckets":$buckets,"big_l":$bigL}""",
+        Handle(path, nDocs, buckets, bigL))
     }
-    // per-doc length (Σ tf) — the BM25 normalizer; derived from the
-    // written postings, so still a single corpus scan overall
-    withWriterCoalesce(spark) {
-      spark.read.parquet(s"$path/postings_rebuild_tmp")
-        .groupBy("doc_id").agg(sum("tf").as("dl"))
-        .write.mode("overwrite").parquet(s"$path/doclen_rebuild_tmp")
-    }
-    val bigL = spark.read.parquet(s"$path/doclen_rebuild_tmp")
-      .agg(coalesce(sum("dl"), lit(0L))).head().getLong(0)
-    val nDocs = docs.count()
-    crash(1) // staged, not committed: open() leaves the old index as-is
-    // 2. commit point — fenced (a writer that lost its lease must not
-    //    supersede the successor's generation), then the marker rename
-    //    is the atomic commit; everything after rolls forward
-    Lease.fence(path, "TextIndex.write")
-    writeSmallAtomic(wfs, new HPath(path, "rebuild.intent.json"),
-      s"""{"n_docs":$nDocs,"buckets":$buckets,"big_l":$bigL}""")
-    crash(2) // committed: open() completes the rebuild
-    completeRebuild(path)
-    Handle(path, nDocs, buckets, bigL)
-  }
-
-  /** Roll a COMMITTED rebuild forward — idempotent from every crash
-    * point, called by [[open]] and [[write]]; no-op without the marker.
-    * The superseded generation's maintenance state dies first: a staged
-    * append — even one past its `_staged` commit marker — belongs to the
-    * dead generation (healing it into the NEW index would roll stale
-    * postings in and overwrite the fresh meta with the stale intent's
-    * n_docs/big_l: corruption with no error — rebuilding at a fixed path
-    * after a crashed append is exactly the CLI `index` /
-    * textIndexDeltaFor flow, so this is a live path, not paranoia), and
-    * so does the POSITIONAL tier: `positions/` indexes the superseded
-    * corpus, and [[phraseSearch]] answering from it after a rebuild
-    * would silently return the old corpus's phrases — re-run
-    * [[writePositional]] after a rebuild. Then postings/dict/doclen
-    * swap in, the meta lands, and the marker clears. */
-  private def completeRebuild(path: String): Unit = {
-    val fs = fsOf(path)
-    val marker = new HPath(path, "rebuild.intent.json")
-    if (!fs.exists(marker)) return
-    // no-op from the lease-free heal path (open); aborts a leased writer
-    // whose lease was taken over — the successor's own open() rolls the
-    // committed marker forward to the identical end state
-    Lease.fence(path, "TextIndex.completeRebuild")
-    val intent = readSmall(fs, marker)
-    for (d <- Seq("append.pending", "dict.next", "positions"))
-      fs.delete(new HPath(path, d), true)
-    for (d <- Seq("postings", "dict", "doclen"))
-      rollRebuildSwap(fs, path, d)
-    writeSmall(fs, new HPath(path, "text_index.json"),
-      s"""{"n_docs":${jsonField(intent, "n_docs")},""" +
-        s""""buckets":${jsonField(intent, "buckets")},""" +
-        s""""big_l":${jsonField(intent, "big_l")}}""")
-    fs.delete(marker, false)
   }
 
   def open(path: String): Handle = {
-    // a COMMITTED rebuild supersedes every other pending state — roll it
-    // forward before the per-generation heals below
-    completeRebuild(path)
-    // restore interrupted compact swaps BEFORE the append heal: its
-    // publishPending mkdirs into postings/, and a writer that recreates
-    // a mid-swap-missing dir strands the backup for the next compact's
-    // cleanup to delete (the Warehouse restoreStore lesson)
-    val ofs = fsOf(path)
-    for (d <- Seq("postings", "doclen", "positions"))
-      restoreInterruptedSwap(ofs, path, d)
-    healPending(path)
+    StagedCommit.heal(path, store)
     val s = readSmall(fsOf(path), new HPath(path, "text_index.json"))
     // big_l = -1 marks an index persisted before the BM25 tier existed:
     // tf-idf/phrase search still work; bm25TopK refuses loudly
@@ -265,25 +126,20 @@ object TextIndex {
   }
 
   /** Incremental maintenance: index a batch of NEW documents into an
-    * existing index. Delta postings and the merged dict are STAGED
-    * first, then published in an order every crash point of which
-    * [[open]] can resolve — the Warehouse compact/publish discipline:
+    * existing index, by the staged offline append of [[StagedCommit]]:
     *
-    *  1. delta postings → `append.pending/postings` (staging);
-    *  2. intent (target n_docs) → `append.pending/intent.json`;
+    *  1. delta postings and doc lengths → the staging dir;
+    *  2. intent (target n_docs, big_l) → its `intent.json`;
     *  3. merged dict (vocab-sized `df` sums) → `dict.next`;
-    *  4. `append.pending/_staged` marker — the commit point;
-    *  5. staged files RENAMED into the live `postings` bucket dirs
-    *     (unique part names — idempotent on replay);
-    *  6. dict swap (delete `dict`, rename `dict.next`);
-    *  7. meta rewritten to the intent's target (idempotent);
-    *  8. staging removed.
+    *  4. its `_staged` marker — the commit point;
+    *  5. staged files RENAMED into the live bucket dirs (unique part
+    *     names — idempotent on replay), the dict swapped in, the meta
+    *     rewritten to the intent's target, staging removed.
     *
     * Crash before the `_staged` marker → [[open]] ABORTS the append
     * (staging + `dict.next` deleted, index untouched — re-run it);
-    * crash after → [[open]] ROLLS FORWARD (finishes the renames, the
-    * swap and the meta write). At no point does a reader see new
-    * postings with the old dict or vice versa after heal. The doc_ids
+    * crash after → [[open]] ROLLS FORWARD. At no point does a reader see
+    * new postings with the old dict or vice versa after heal. The doc_ids
     * MUST be new — this is append, not upsert; re-adding an id
     * double-counts it exactly as appending the same rows twice to any
     * log would.
@@ -312,32 +168,26 @@ object TextIndex {
         "rebuild it with TextIndex.write before appending")
     val spark = newDocs.sparkSession
     val fs = fsOf(h.path)
-    healPending(h.path) // resolve any interrupted predecessor first
-    val pending = new HPath(h.path, "append.pending")
-    require(!fs.exists(pending),
-      s"append.pending survived heal — concurrent append? ${h.path}")
+    val pending = StagedCommit.beginPending(h.path, store)
     // 1. stage the delta postings + doc lengths
     val tf = postingsOf(newDocs, h.buckets, text)
-    withWriterCoalesce(newDocs.sparkSession) {
+    withWriterCoalesce(spark) {
       tf.write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"${h.path}/append.pending/postings")
-      newDocs.sparkSession.read
-        .parquet(s"${h.path}/append.pending/postings")
+        .parquet(s"$pending/postings")
+      spark.read.parquet(s"$pending/postings")
         .groupBy("doc_id").agg(sum("tf").as("dl"))
-        .write.mode("overwrite")
-        .parquet(s"${h.path}/append.pending/doclen")
+        .write.mode("overwrite").parquet(s"$pending/doclen")
     }
     crash(1)
     // 2. intent: the TARGET counts (idempotent for the heal)
     val target = h.nDocs + newDocs.count()
-    val targetL = h.bigL + newDocs.sparkSession.read
-      .parquet(s"${h.path}/append.pending/doclen")
+    val targetL = h.bigL + spark.read.parquet(s"$pending/doclen")
       .agg(coalesce(sum("dl"), lit(0L))).head().getLong(0)
     writeSmall(fs, new HPath(pending, "intent.json"),
       s"""{"n_docs":$target,"big_l":$targetL}""")
     crash(2)
     // 3. merged dict
-    val add = spark.read.parquet(s"${h.path}/append.pending/postings")
+    val add = spark.read.parquet(s"$pending/postings")
       .groupBy("bucket", "token").agg(count(lit(1)).as("df"))
     withWriterCoalesce(spark) {
       spark.read.parquet(s"${h.path}/dict")
@@ -347,91 +197,12 @@ object TextIndex {
         .parquet(s"${h.path}/dict.next")
     }
     crash(3)
-    // 4. commit point — fenced: a writer that lost its lease to a
-    // stale-takeover while staging must not commit into the successor's
-    // generation (open() will then ABORT the unmarked staging)
-    Lease.fence(h.path, "TextIndex.append")
-    writeSmall(fs, new HPath(pending, "_staged"), "")
+    // 4. commit point
+    StagedCommit.commitPending(h.path, store)
     crash(4)
-    // 5-8. publish
-    publishPending(h.path)
+    // 5. publish
+    StagedCommit.publishPending(h.path, store)
     Handle(h.path, target, h.buckets, targetL)
-  }
-
-  /** Resolve an interrupted [[append]]: abort if it never reached the
-    * `_staged` commit point, roll it forward otherwise. No-op when no
-    * staging exists. */
-  private def healPending(path: String): Unit = {
-    val fs = fsOf(path)
-    val pending = new HPath(path, "append.pending")
-    val next = new HPath(path, "dict.next")
-    if (fs.exists(pending)) {
-      if (fs.exists(new HPath(pending, "_staged"))) publishPending(path)
-      else { fs.delete(pending, true); fs.delete(next, true) }
-    } else if (fs.exists(next)) {
-      if (fs.exists(new HPath(path, "dict"))) fs.delete(next, true)
-      else fs.rename(next, new HPath(path, "dict")) // legacy swap heal
-    }
-  }
-
-  /** Steps 5-8 of [[append]] — safe to re-run from any crash point:
-    * renames skip already-moved files, the swap skips when already
-    * done, the meta write lands the intent's absolute target. */
-  private def publishPending(path: String): Unit = {
-    // no-op from the lease-free heal path (open); aborts a leased writer
-    // whose lease was taken over while it staged
-    Lease.fence(path, "TextIndex.publishPending")
-    val fs = fsOf(path)
-    val pending = new HPath(path, "append.pending")
-    val staged = new HPath(pending, "postings")
-    if (fs.exists(staged)) {
-      for (b <- fs.listStatus(staged) if b.isDirectory) {
-        val dst = new HPath(s"$path/postings/${b.getPath.getName}")
-        fs.mkdirs(dst)
-        for (f <- fs.listStatus(b.getPath) if f.isFile)
-          renameOrFail(fs, f.getPath, new HPath(dst, f.getPath.getName))
-      }
-    }
-    val stagedDl = new HPath(pending, "doclen")
-    if (fs.exists(stagedDl)) {
-      val dlDir = new HPath(path, "doclen")
-      fs.mkdirs(dlDir) // rename silently returns false without the parent
-      for (f <- fs.listStatus(stagedDl)
-           if f.isFile && f.getPath.getName.startsWith("part-"))
-        renameOrFail(fs, f.getPath, new HPath(dlDir, f.getPath.getName))
-    }
-    val dict = new HPath(path, "dict")
-    val next = new HPath(path, "dict.next")
-    if (fs.exists(next)) {
-      fs.delete(dict, true)
-      renameOrFail(fs, next, dict)
-    }
-    val intent = readSmall(fs, new HPath(pending, "intent.json"))
-    val meta = readSmall(fs, new HPath(path, "text_index.json"))
-    val buckets = jsonField(meta, "buckets")
-    // an intent from a pre-BM25 binary lacks big_l — keep the meta's
-    // (possibly absent → -1 legacy marker) rather than crash
-    val bigL = jsonFieldOpt(intent, "big_l")
-      .orElse(jsonFieldOpt(meta, "big_l")).getOrElse(-1L)
-    writeSmall(fs, new HPath(path, "text_index.json"),
-      s"""{"n_docs":${jsonField(intent, "n_docs")},"buckets":$buckets,""" +
-        s""""big_l":$bigL}""")
-    fs.delete(pending, true)
-  }
-
-  /** If a compact crashed between `rename(dst -> bak)` and
-    * `rename(tmp -> dst)`, `dst` is missing and the backup holds the
-    * only copy — restore it (the Warehouse restoreInterruptedSwap
-    * discipline; rename-loser tolerance for concurrent readers). */
-  private[store] def restoreInterruptedSwap(fs: FileSystem, path: String,
-                                     dir: String): Unit = {
-    val dstP = new HPath(path, dir)
-    val bakP = new HPath(path, dir + "_compact_bak")
-    if (!fs.exists(dstP) && fs.exists(bakP)) {
-      if (!fs.rename(bakP, dstP))
-        require(fs.exists(dstP),
-          s"TextIndex compact: restore $bakP -> $dstP failed")
-    }
   }
 
   /** Offline maintenance: rewrite the index into few large sorted files
@@ -442,53 +213,31 @@ object TextIndex {
     * file opens dominate the bucket-pruned scan). Compaction restores
     * `filesPerPartition` token-sorted files per bucket with content
     * identical, so search results are bit-equal before and after
-    * (spec-pinned). Crash-safe via the Warehouse directory-swap
-    * discipline: live dir moves aside before the rewrite moves in, and
-    * [[open]] (or the next compact) restores an interrupted swap. Run
-    * offline, like every reference maintenance tool. */
+    * (spec-pinned). Crash-safe by [[StagedCommit.swap]], which [[open]]
+    * (or the next compact) restores. Run offline, like every reference
+    * maintenance tool. */
   def compact(spark: SparkSession, h: Handle,
               filesPerPartition: Int = 1): Handle =
       Lease.withLease(h.path, "TextIndex.compact") {
     require(filesPerPartition >= 1,
       s"filesPerPartition must be >= 1: $filesPerPartition")
+    StagedCommit.heal(h.path, store) // an unresolved append publishes first
     val fs = fsOf(h.path)
-    for (d <- Seq("postings", "doclen", "positions"))
-      restoreInterruptedSwap(fs, h.path, d)
-    healPending(h.path) // an unresolved append must publish before rewrite
-    def swap(tmp: String, dir: String): Unit = {
-      Lease.fence(h.path, "TextIndex.compact")
-      val tmpP = new HPath(h.path, tmp)
-      val dstP = new HPath(h.path, dir)
-      val bakP = new HPath(h.path, dir + "_compact_bak")
-      fs.delete(bakP, true)
-      if (fs.exists(dstP)) renameOrFail(fs, dstP, bakP)
-      renameOrFail(fs, tmpP, dstP)
-      fs.delete(bakP, true)
-    }
+    def rewrite(dir: String)(
+        layout: DataFrame => org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]): Unit =
+      if (fs.exists(new HPath(h.path, dir)))
+        StagedCommit.swap(h.path, dir, "TextIndex.compact") { tmp =>
+          layout(spark.read.parquet(s"${h.path}/$dir")).mode("overwrite").parquet(tmp)
+        }
     withWriterCoalesce(spark) {
-      spark.read.parquet(s"${h.path}/postings")
-        .repartition(col("bucket"),
+      rewrite("postings")(_.repartition(col("bucket"),
           pmod(xxhash64(col("token")), lit(filesPerPartition)))
-        .sortWithinPartitions("token", "doc_id")
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"${h.path}/postings_compact_tmp")
-      swap("postings_compact_tmp", "postings")
-      if (fs.exists(new HPath(h.path, "doclen"))) {
-        spark.read.parquet(s"${h.path}/doclen")
-          .repartition(filesPerPartition, col("doc_id"))
-          .sortWithinPartitions("doc_id")
-          .write.mode("overwrite").parquet(s"${h.path}/doclen_compact_tmp")
-        swap("doclen_compact_tmp", "doclen")
-      }
-      if (fs.exists(new HPath(h.path, "positions"))) {
-        spark.read.parquet(s"${h.path}/positions")
-          .repartition(col("bucket"),
-            pmod(xxhash64(col("token")), lit(filesPerPartition)))
-          .sortWithinPartitions("token", "doc_id", "pos")
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"${h.path}/positions_compact_tmp")
-        swap("positions_compact_tmp", "positions")
-      }
+        .sortWithinPartitions("token", "doc_id").write.partitionBy("bucket"))
+      rewrite("doclen")(_.repartition(filesPerPartition, col("doc_id"))
+        .sortWithinPartitions("doc_id").write)
+      rewrite("positions")(_.repartition(col("bucket"),
+          pmod(xxhash64(col("token")), lit(filesPerPartition)))
+        .sortWithinPartitions("token", "doc_id", "pos").write.partitionBy("bucket"))
     }
     h // layout maintenance only — content and meta are unchanged
   }

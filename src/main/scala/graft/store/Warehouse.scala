@@ -276,25 +276,6 @@ object Warehouse {
   private def readRaw(spark: SparkSession, root: String): DataFrame =
     spark.read.schema(rawSchema).parquet(s"$root/raw")
 
-  /** If a compact crashed between `rename(dst -> bak)` and
-    * `rename(tmp -> dst)`, `dst` is missing and the backup holds the only
-    * copy. Every reader and the next compact must restore it — otherwise
-    * `readLevels` would treat the missing dir as a legitimately empty store
-    * and a subsequent compact would delete the backup and commit an empty
-    * levels table. */
-  private def restoreInterruptedSwap(
-      fs: FileSystem, dst: String): Unit = {
-    val dstP = new Path(dst)
-    val bakP = new Path(dst + "_compact_bak")
-    if (!fs.exists(dstP) && fs.exists(bakP)) {
-      // two concurrent readers can both pass the exists checks; the rename
-      // loser is fine as long as SOMEONE completed the restore — only a
-      // still-missing dst is a real failure
-      if (!fs.rename(bakP, dstP))
-        require(fs.exists(dstP), s"compact: restore $bakP -> $dst failed")
-    }
-  }
-
   /** Guard for [[compact]]: streaming publishes land as
     * `<table>/<part>=…/bid-N-k.parquet` with a commit marker written LAST
     * (StreamIngest.publishBatch). A bid file whose marker is missing is a
@@ -335,24 +316,25 @@ object Warehouse {
     * `raw/` before any reader runs would otherwise strand the backup — the
     * restore then skips (dst exists) and the next compact deletes the only
     * pre-crash copy. */
-  private[graft] def restoreStore(spark: SparkSession, root: String): Unit = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    restoreInterruptedSwap(fs, s"$root/levels")
-    restoreInterruptedSwap(fs, s"$root/raw")
+  private[graft] def restoreStore(root: String): Unit = {
+    StagedCommit.restore(root, "levels")
+    StagedCommit.restore(root, "raw")
   }
 
   /** Levels table; a legitimately empty directory (a store whose data span
-    * closes no interval: tests/basics.cpp:88-93) reads as empty. */
+    * closes no interval: tests/basics.cpp:88-93) reads as empty. Restores
+    * an interrupted compact swap first: otherwise the missing directory
+    * would read as a legitimately empty store, and a later compact would
+    * delete the backup and commit an empty levels table. */
   def readLevels(spark: SparkSession, root: String): DataFrame = {
-    restoreInterruptedSwap(
-      new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration), s"$root/levels")
+    StagedCommit.restore(root, "levels")
     spark.read.schema(levelSchema).parquet(s"$root/levels")
   }
 
   /** Opens a store snapshot without running a Spark job. The catalog is
     * kept only when the files it lists are the files this snapshot reads. */
   def open(spark: SparkSession, root: String): Hta = {
-    restoreStore(spark, root)
+    restoreStore(root)
     val (raw, levels) = (readRaw(spark, root), readLevels(spark, root))
     Hta(raw, levels, readMeta(spark, root),
       StoreCatalog.read(spark, root).filter(_.files == StoreCatalog.filesOf(root, raw, levels)))
@@ -364,43 +346,40 @@ object Warehouse {
     * small-files problem that erodes scan efficiency at 100 TB (tiny row
     * groups defeat min/max pruning, file-open overhead dominates). Compaction
     * restores large sorted row groups while keeping layout and content
-    * identical. Directory-level swap: run offline, like every reference
-    * maintenance tool; streaming commit markers are untouched so replayed
-    * micro-batches remain no-ops after compaction. */
+    * identical. Directory-level swap ([[StagedCommit.swap]]): run offline,
+    * like every reference maintenance tool; streaming commit markers are
+    * untouched so replayed micro-batches remain no-ops after compaction. The
+    * catalog is rewritten last with the new file list: the pre-compact one's
+    * facts when it was current, else derived from the data. */
   def compact(spark: SparkSession, root: String,
               filesPerPartition: Int = 8): Hta = {
-    // a previous compact may have crashed mid-swap — recover BOTH dirs
-    // before reading (readLevels guards levels itself, but the raw read
-    // below has no per-read guard) and before swap() deletes any backup
-    restoreStore(spark, root)
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a previous compact may have crashed mid-swap — `open` recovers BOTH
+    // dirs before reading and before the swaps delete any backup
+    val before = open(spark, root)
     // a crashed stream may have left a PARTIAL publish (bid-N-k files with
     // no commit marker). Compacting would rewrite those into anonymous
     // part-files, so the restarted stream's replay cleanup (delete bid-N-*,
     // republish) would find nothing to delete and DUPLICATE the rows —
     // refuse until the stream has replayed (or the partials are removed).
-    assertNoUncommittedPublishes(fs, root)
-    // Crash-safe swap: the live dir is moved aside BEFORE the tmp moves in,
-    // so no crash point leaves the store without data — worst case the
-    // backup dir survives and the next compact (or a manual rename) recovers
-    // it. Every rename result is checked; rename-returning-false would
-    // otherwise silently drop raw/ (permanent loss) or levels/ (rebuildable).
-    def swap(tmp: String, dst: String): Unit = {
-      val tmpP = new Path(tmp)
-      val dstP = new Path(dst)
-      val bakP = new Path(dst + "_compact_bak")
-      fs.delete(bakP, true)
-      if (fs.exists(dstP))
-        require(fs.rename(dstP, bakP), s"compact: rename $dst -> $bakP failed")
-      require(fs.rename(tmpP, dstP), s"compact: rename $tmp -> $dst failed")
-      fs.delete(bakP, true)
+    assertNoUncommittedPublishes(StagedCommit.fsOf(root), root)
+    StagedCommit.swap(root, "levels", "Warehouse.compact") { tmp =>
+      writeLevel(before.levels, tmp, SaveMode.Overwrite, filesPerPartition)
     }
-    writeLevel(readLevels(spark, root), s"$root/levels_compact_tmp", SaveMode.Overwrite,
-      filesPerPartition)
-    swap(s"$root/levels_compact_tmp", s"$root/levels")
-    writeRaw(readRaw(spark, root).drop("tb"), readMeta(spark, root).intervalMax,
-      s"$root/raw_compact_tmp", SaveMode.Overwrite, filesPerPartition)
-    swap(s"$root/raw_compact_tmp", s"$root/raw")
+    StagedCommit.swap(root, "raw", "Warehouse.compact") { tmp =>
+      writeRaw(before.raw.drop("tb"), before.meta.intervalMax, tmp, SaveMode.Overwrite,
+        filesPerPartition)
+    }
+    recatalog(spark, root, before.catalog)
+  }
+
+  /** Writes a catalog for the files maintenance left: `kept`'s facts (the
+    * maintenance moved rows between files without changing them), or the
+    * facts derived from the data; returns the reopened store. Written after
+    * the data, as by append: a crash in between leaves it unused. */
+  private[graft] def recatalog(spark: SparkSession, root: String,
+                               kept: Option[StoreCatalog]): Hta = {
+    val c = kept.getOrElse(StoreCatalog.derive(open(spark, root)))
+    writeCatalog(spark, root, c.metrics, c.levels)
     open(spark, root)
   }
 

@@ -2,9 +2,10 @@ package graft
 
 /** Persisted index stores ([[graft.store.Warehouse]],
   * [[graft.store.TextIndex]], [[graft.store.BandIndex]],
-  * [[graft.store.IvfStore]]) and their shared maintenance discipline:
-  * staged writes, commit markers, publish-by-rename, swap-with-backup
-  * compaction, single-writer [[graft.store.Lease]].
+  * [[graft.store.IvfStore]]) and their shared maintenance discipline,
+  * written once in [[graft.store.StagedCommit]]: staged writes, commit
+  * markers, publish-by-rename, swap-with-backup compaction; and the
+  * single-writer [[graft.store.Lease]].
   *
   * ==Filesystem contract==
   * Every crash-safety and mutual-exclusion guarantee in this package
@@ -21,7 +22,7 @@ package graft
   * NOT — S3A "rename" is a copy+delete emulation and create-exclusivity
   * is best-effort — so on such stores the lease degrades to advisory and
   * staged publishes lose crash atomicity. Run mutations there only
-  * behind a conditional-write/CAS seam; [[graft.store.TextIndex.fsOf]]
+  * behind a conditional-write/CAS seam; [[graft.store.StagedCommit.fsOf]]
   * logs a once-per-scheme warning when an index root resolves to a known
   * object-store scheme. Readers are unaffected either way (append-only
   * or swap-published state by design). */

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.pipeline.Dedup
-import graft.store.BandIndex
+import graft.store.{BandIndex, StagedCommit}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -40,7 +40,7 @@ object StreamDedup {
     // Clear it before the first batch; a RESUMED stream (checkpoint has
     // committed offsets) keeps the state, which is its own replay log.
     if (checkpointIsFresh(docs.sparkSession, checkpoint))
-      BandIndex.clearStreamState(indexPath)
+      StagedCommit.clearStreamState(indexPath)
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")

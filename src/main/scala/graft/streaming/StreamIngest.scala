@@ -124,7 +124,7 @@ object StreamIngest {
     // recover an interrupted compact swap BEFORE writing anything: a sink
     // that recreated a missing dir would strand the backup (restore skips
     // when dst exists) and the next compact would delete the only copy
-    graft.store.Warehouse.restoreStore(spark, root)
+    graft.store.Warehouse.restoreStore(root)
     graft.store.Warehouse.writeMetaPublic(meta, root, spark)
     closedRows(samples, meta)
       .writeStream
@@ -155,8 +155,7 @@ object StreamIngest {
   private def publishBatch(batch: org.apache.spark.sql.DataFrame, root: String,
                            table: String, partitionCol: String, bid: Long): Unit = {
     import org.apache.hadoop.fs.Path
-    val fs = new Path(root)
-      .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = graft.store.StagedCommit.fsOf(root)
     val marker = new Path(s"$root/_stream_commits/$table/$bid")
     // pre-per-table stores wrote LEVEL markers flat at _stream_commits/<bid>
     // (the raw sink, and with it the <table>/ namespacing, came later) —
@@ -205,7 +204,7 @@ object StreamIngest {
     import org.apache.spark.sql.functions._
     // same pre-start recovery as sinkToWarehouse: a sink that recreates a
     // missing $root/raw would mask an interrupted compact swap
-    graft.store.Warehouse.restoreStore(samples.sparkSession, root)
+    graft.store.Warehouse.restoreStore(root)
     samples.toDF()
       .withColumn("tb", col("time") - pmod(col("time"), lit(meta.intervalMax)))
       .writeStream

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.pipeline.Ann
-import graft.store.IvfStore
+import graft.store.{IvfStore, StagedCommit}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -28,7 +28,7 @@ object StreamSemanticDedup {
             threshold: Double = 0.95, nprobe: Int = 4,
             autoCompactAt: Int = 1024): StreamingQuery = {
     if (StreamDedup.checkpointIsFresh(vecs.sparkSession, checkpoint))
-      IvfStore.clearStreamState(indexRoot)
+      StagedCommit.clearStreamState(indexRoot)
     vecs.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")

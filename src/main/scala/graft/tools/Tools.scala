@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.hta.{AggOps, Throttle}
 import graft.model.Meta
-import graft.store.{Hta, StoreCatalog, Warehouse}
+import graft.store.{Hta, StagedCommit, StoreCatalog, Warehouse}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
@@ -222,33 +222,28 @@ object Tools {
     *
     * Crash ordering: levels swap first; a crash before the raw deletes
     * leaves only EXTRA raw partitions, and a re-run (idempotent)
-    * finishes the job. Refuses to empty the store entirely — that is
-    * `drop`, not retention. */
+    * finishes the job. The catalog the retired data derives is written
+    * last, so a crash before it leaves the old one unused, not wrong.
+    * Refuses to empty the store entirely — that is `drop`, not
+    * retention. */
   def retire(spark: SparkSession, root: String, horizon: Long): Hta = {
-    graft.store.Warehouse.restoreStore(spark, root)
+    Warehouse.restoreStore(root)
     val meta = Warehouse.readMeta(spark, root)
     val h = horizon - Math.floorMod(horizon, meta.intervalMax)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StagedCommit.fsOf(root)
     val rawDirs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/raw"))
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("tb="))
       .map(st => st.getPath.getName.stripPrefix("tb=").toLong -> st.getPath)
     require(rawDirs.exists(_._1 >= h),
       s"retire($h) would delete EVERY raw bucket — refusing; " +
         "dropping a whole store is a delete, not retention")
-    Warehouse.writeLevel(Warehouse.readLevels(spark, root).where(col("time") >= h),
-      s"$root/levels_compact_tmp", org.apache.spark.sql.SaveMode.Overwrite)
-    val tmpP = new org.apache.hadoop.fs.Path(s"$root/levels_compact_tmp")
-    val dstP = new org.apache.hadoop.fs.Path(s"$root/levels")
-    val bakP = new org.apache.hadoop.fs.Path(s"$root/levels_compact_bak")
-    fs.delete(bakP, true)
-    if (fs.exists(dstP))
-      require(fs.rename(dstP, bakP), s"retire: rename levels -> bak failed")
-    require(fs.rename(tmpP, dstP), s"retire: rename tmp -> levels failed")
-    fs.delete(bakP, true)
+    StagedCommit.swap(root, "levels", "Tools.retire") { tmp =>
+      Warehouse.writeLevel(Warehouse.readLevels(spark, root).where(col("time") >= h),
+        tmp, org.apache.spark.sql.SaveMode.Overwrite)
+    }
     for ((tb, p) <- rawDirs if tb < h)
       require(fs.delete(p, true), s"retire: delete $p failed")
-    Warehouse.open(spark, root)
+    Warehouse.recatalog(spark, root, None)
   }
 
   /** T1 — hta_dump (src/tools/dump.cpp:44-88): per-metric summary. */

@@ -1,0 +1,60 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The benchmark main's pass loop and records: a pass that throws has no
+  * time, and a query with one is left out of every timed figure. */
+class BenchSpec extends AnyFunSuite {
+
+  private def fails(): Unit = throw new IllegalStateException("planted")
+
+  test("a pass that throws gives no time, and a failed query is never rerun") {
+    var calls = 0
+    val ps = Bench.passes("q0_fails", 3, floor = Some(1e-9)) { () => calls += 1; fails() }
+    assert(ps === Vector(None, None, None))
+    assert(calls === 3, "the outlier reruns are for slow passes, not failed ones")
+    var n = 0
+    val mixed = Bench.passes("q0_second_fails", 3, floor = None) { () =>
+      n += 1
+      if (n == 2) fails()
+    }
+    assert(mixed.map(_.isDefined) === Vector(true, false, true))
+  }
+
+  test("a slow query reruns until a pass lands inside twice its prior min") {
+    var n = 0
+    val ps = Bench.passes("q0_slow", 3, floor = Some(0.05)) { () =>
+      n += 1
+      if (n <= 4) Thread.sleep(150)
+    }
+    assert(ps.size === 5 && ps.forall(_.isDefined))
+    assert(ps.last.get < 0.1)
+  }
+
+  test("a query with a failed pass is ok:false and left out of the total and the map") {
+    val good = Bench.Measured("q1_good", Vector(Some(2.0), Some(1.5), Some(1.75)), 0.5)
+    val bad = Bench.Measured("q2_bad", Vector(Some(9.0), None, Some(8.0)), 0.5)
+    assert(good.ok && !bad.ok)
+    val detail = Bench.detailJson(Seq(good, bad), "sf0.1", 0.1, 0.2, 3)
+    assert(detail.contains(""""value":1.5,"""))
+    assert(detail.contains(""""q1_good":1.5"""))
+    assert(detail.contains(""""q2_bad":{"ok":false}"""))
+    assert(detail.contains(""""q2_bad":[9.0,null,8.0]"""))
+    assert(detail.contains(""""n_failed":1"""))
+    val line = Bench.stdoutLine(Seq(good, bad), "/data/sf0.1")
+    assert(line.contains(""""value":1.50,"""))
+    assert(line.contains(""""queries":{"q1":2}"""))
+    assert(line.contains(""""n_queries":2,"n_failed":1"""))
+  }
+
+  test("the stdout line stays inside the 2000-character window it is read from") {
+    // 250 registered queries, a third of them failing, all slower than 10 s
+    // (the widest values the map prints); sbt's [success] trailer takes ~75
+    val rs = (1 to 250).map { i =>
+      Bench.Measured(f"q$i%03d_query_name", Vector.fill(3)(
+        if (i % 3 == 0) None else Some(100.0 + i)), 1.0)
+    }
+    val line = Bench.stdoutLine(rs, "/data/sf0.1")
+    assert(line.length + 75 < 2000, s"${line.length} characters")
+  }
+}

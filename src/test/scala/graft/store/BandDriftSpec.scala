@@ -100,7 +100,7 @@ class BandDriftSpec extends SparkSpec {
   test("an index built before the monitor reports None, not a fake baseline") {
     val path = tmpDir("band-drift-legacy")
     val h = BandIndex.write(base, path)
-    TextIndex.fsOf(path).delete(
+    StagedCommit.fsOf(path).delete(
       new org.apache.hadoop.fs.Path(path, "band_drift.json"), false)
     assert(BandIndex.driftStats(path).isEmpty)
     // appends on a legacy index skip the advisory, never crash

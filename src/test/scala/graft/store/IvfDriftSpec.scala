@@ -91,7 +91,7 @@ class IvfDriftSpec extends SparkSpec {
   test("an index built before the monitor reports None, not a fake baseline") {
     val root = tmpDir("ivf-drift-legacy")
     Ann.writeIvfIndex(base, root, nlist = 16, kmeansIters = 0)
-    TextIndex.fsOf(root).delete(
+    StagedCommit.fsOf(root).delete(
       new org.apache.hadoop.fs.Path(root, "drift.json"), false)
     assert(IvfStore.driftStats(spark, root).isEmpty)
     // appends on a legacy index skip the advisory, never crash

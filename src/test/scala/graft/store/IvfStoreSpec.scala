@@ -150,4 +150,21 @@ class IvfStoreSpec extends SparkSpec {
     val got = IvfStore.probeTopK(queries, IvfStore.open(spark, root), k = 5)
     assert(got.count() === 0)
   }
+
+  test("a vector of the wrong dimension fails the append with its id, " +
+    "never lands in a null list") {
+    val root = tmpDir("ivf-short-dim")
+    val h = Ann.writeIvfIndex(emb.where(col("vec_id") < 64), root,
+      nlist = 4, kmeansIters = 0)
+    val count = spark.read.parquet(s"$root/vectors").count()
+    val short = emb.where(col("vec_id") === 400)
+      .withColumn("embedding", slice(col("embedding"), 1, 3))
+    val e = intercept[Exception](IvfStore.append(short, h))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("vec_id 400"))),
+      e.toString)
+    IvfStore.open(spark, root)
+    assert(spark.read.parquet(s"$root/vectors").count() === count)
+    assert(!new java.io.File(s"$root/vectors/list_id=__HIVE_DEFAULT_PARTITION__").exists)
+  }
 }

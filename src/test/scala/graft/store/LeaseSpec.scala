@@ -113,8 +113,8 @@ class LeaseSpec extends SparkSpec {
   }
 
   private def leaseOwner(root: String): String = {
-    val fs = TextIndex.fsOf(root)
-    val s = TextIndex.readSmall(fs,
+    val fs = StagedCommit.fsOf(root)
+    val s = StagedCommit.readSmall(fs,
       new org.apache.hadoop.fs.Path(root, "_writer.lease"))
     s.split("\"owner\":\"")(1).takeWhile(_ != '"')
   }
@@ -151,7 +151,7 @@ class LeaseSpec extends SparkSpec {
     // rolled back by the next open(), and the index is untouched
     val healed = BandIndex.open(bp)
     assert(healed.nDocs === h.nDocs, "aborted staging must not publish")
-    assert(!TextIndex.fsOf(bp).exists(
+    assert(!StagedCommit.fsOf(bp).exists(
       new org.apache.hadoop.fs.Path(bp, "append.pending")),
       "open() must abort the unmarked staging")
     // the successor's lease survived our release; once IT crashes

@@ -28,7 +28,7 @@ class RebuildSpec extends SparkSpec {
   private lazy val corpusB =
     docs.where(col("doc_id") >= 100 && col("doc_id") < 150)
 
-  private def fs(p: String) = TextIndex.fsOf(p)
+  private def fs(p: String) = StagedCommit.fsOf(p)
   private def exists(p: String, n: String) = fs(p).exists(new HPath(p, n))
 
   test("BandIndex rebuild: a crash BEFORE the commit marker leaves the " +
@@ -152,7 +152,7 @@ class RebuildSpec extends SparkSpec {
     val p = tmpDir("poison-band")
     val h = BandIndex.write(corpusA, p)
     // simulate a crash mid-ledger-write: 0-byte band_drift.json
-    TextIndex.writeSmall(fs(p), new HPath(p, "band_drift.json"), "")
+    StagedCommit.writeSmall(fs(p), new HPath(p, "band_drift.json"), "")
     val drop = docs.where(col("doc_id") >= 400 && col("doc_id") < 405)
     val h2 = BandIndex.append(drop, h) // must publish, not throw
     assert(h2.nDocs === 25)
@@ -165,7 +165,7 @@ class RebuildSpec extends SparkSpec {
     val ip = tmpDir("poison-ivf")
     val ih = Ann.writeIvfIndex(emb.where(col("vec_id") < 64), ip,
       nlist = 4, kmeansIters = 0)
-    TextIndex.writeSmall(fs(ip), new HPath(ip, "drift.json"), "")
+    StagedCommit.writeSmall(fs(ip), new HPath(ip, "drift.json"), "")
     val vdrop = emb.where(col("vec_id") >= 400 && col("vec_id") < 405)
     IvfStore.append(vdrop, ih) // must publish, not throw
     assert(spark.read.parquet(s"$ip/vectors").count() === 69)

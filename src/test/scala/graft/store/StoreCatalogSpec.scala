@@ -49,6 +49,19 @@ class StoreCatalogSpec extends SparkSpec {
       assert(h.catalog.map(c => (c.metrics, c.levels)) === Some((d.metrics, d.levels)),
         s"catalog after the batch ending at $until")
     }
+    // maintenance keeps the catalog current: compact moves rows between
+    // files, retire drops whole buckets
+    for ((what, run) <- Seq[(String, () => Hta)](
+        "compact" -> (() => Warehouse.compact(spark, r, filesPerPartition = 2)),
+        "retire" -> (() => graft.tools.Tools.retire(spark, r, tp(1200))))) {
+      val h = run()
+      val opened = Warehouse.open(spark, r)
+      assert(opened.catalog.isDefined, s"open keeps the catalog after $what")
+      val d = derived(opened)
+      for (c <- Seq(h.catalog, opened.catalog))
+        assert(c.map(c => (c.metrics, c.levels)) === Some((d.metrics, d.levels)),
+          s"catalog after $what")
+    }
     val opened = Warehouse.open(spark, root)
     assert(opened.catalog.isDefined)
     assert(opened.extents === derived(opened).metrics)

@@ -62,7 +62,7 @@ class StreamSemanticDedupSpec extends SparkSpec {
     }
     assert(storedIds(root) === Set(1L, 2L, 300L))
     // a fresh stream at the same root must clear the dead stream's state
-    IvfStore.clearStreamState(root)
+    graft.store.StagedCommit.clearStreamState(root)
     IvfStore.appendBatch(root, bid = 0)(mkDf(Seq(vec(301, 0f, 0f, 0f, 70f))))
     assert(storedIds(root) === Set(1L, 2L, 300L, 301L))
   }
