@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every registered query on SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout. Results are fully materialized (not `.count()`,
@@ -8,22 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match GraftSession: sub-MB shuffles here carry compute-heavy
-      // gram/window rows; the 1 MB coalesce floor serialized them
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE_FLOOR", "64k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietAdjudicatedWarnings()
+    val spark = GraftSession.local()
     // warm the JVM/codegen once on the smallest SF so per-query numbers
     // measure the plan, not first-call classloading; pre-build the warehouse
     // the round-trip queries read (built once, queried many times)
@@ -80,7 +64,7 @@ object Bench {
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       } catch { case _: Throwable => Map.empty }
     }
-    val BasePasses = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt).getOrElse(3)
+    val BasePasses = GraftSession.envInt("SPARK_GRAFT_BENCH_PASSES", 3)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
@@ -91,11 +75,9 @@ object Bench {
       }
     val loadEnd = loadAvg
     val detail = detailJson(results, sfDir, loadStart, loadEnd, BasePasses)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
-        "BENCH_DETAIL.json")), detail)
-    catch { case _: Throwable => () }
-    println(stdoutLine(results, sfDir))
+    val written = writeDetail(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json"), detail)
+    println(stdoutLine(results, sfDir, written))
     spark.stop()
   }
 
@@ -138,16 +120,26 @@ object Bench {
     s"""{"metric":"total","value":${ok.map(_.min).sum},"unit":"sec","queries":$m,"sf":"$sfDir","passes":$p,"load_after_query":$l,"load_start":$loadStart,"load_end":$loadEnd,"reruns":$rr,"base_passes":$basePasses,"n_failed":${results.size - ok.size}}"""
   }
 
+  /** Writes the detail record to `path`: `Some(path)` once written, else
+    * `None` after saying why on stderr, so the stdout line never points at
+    * a file that may hold another run's numbers. */
+  def writeDetail(path: String, detail: String): Option[String] =
+    try { java.nio.file.Files.writeString(java.nio.file.Paths.get(path), detail); Some(path) }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] cannot write the detail record to $path: $e"); None }
+
   /** The stdout line: total and slowest-query map over the queries whose
     * passes all succeeded, the query and failure counts, and "sf" as the
     * basename. Only the last 2000 characters of the run's stdout are kept
     * and the JSON line is parsed out of them, so the line lists only the
     * TopSlow slowest queries and stays well inside that window at any
     * query count; per-pass totals and the FULL per-query map live in
-    * BENCH_DETAIL.json. build.sbt forwards the forked run's stdout
+    * BENCH_DETAIL.json, named in `detail` (null when it was not written).
+    * build.sbt forwards the forked run's stdout
     * unprefixed (an "[info] " prefix fails a per-line JSON parse).
     * Locale.ROOT: a comma decimal separator would corrupt the JSON line. */
-  def stdoutLine(results: Seq[Measured], sfDir: String): String = {
+  def stdoutLine(results: Seq[Measured], sfDir: String,
+                 detail: Option[String]): String = {
     def r2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f",
       Double.box(v))
     def r1(v: Double): String =
@@ -164,6 +156,6 @@ object Bench {
         s"\"q" + (if (num.isEmpty) "0" else num) + "\":" + r1(r.min) }
       .mkString("{", ",", "}")
     val sfShort = sfDir.split('/').lastOption.getOrElse(sfDir)
-    s"""{"metric":"total","value":${r2(ok.map(_.min).sum)},"unit":"sec","queries":$qs,"n_queries":${results.size},"n_failed":${results.size - ok.size},"detail":"BENCH_DETAIL.json","sf":"$sfShort"}"""
+    s"""{"metric":"total","value":${r2(ok.map(_.min).sum)},"unit":"sec","queries":$qs,"n_queries":${results.size},"n_failed":${results.size - ok.size},"detail":${detail.fold("null")("\"" + _ + "\"")},"sf":"$sfShort"}"""
   }
 }

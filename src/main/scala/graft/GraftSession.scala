@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared SparkSession configuration for the graft engine.
   *
-  * Scale notes (local[32] here; design target is a 1000-executor cluster):
+  * The only place in the engine that builds a SparkSession: every main
+  * calls [[local]], the tests and htabench call [[builder]].
+  *
+  * Scale notes (local mode here; design target is a 1000-executor cluster):
   *  - shuffle.partitions is sized for local mode; on a cluster this comes from
   *    AQE (`spark.sql.adaptive.coalescePartitions.enabled`) which is on.
   *  - `nanosAsLong` keeps int64-ns parquet timestamps as LongType — the engine
@@ -33,8 +36,8 @@ object GraftSession {
       // letting sub-MB-but-compute-bound shuffles spread; at cluster
       // scale shuffles big enough to matter coalesce by the advisory
       // size exactly as before.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE_FLOOR", "64k"))
+      // (A/B settled in OPTIMIZATION_r17.md: "Global 64k stays")
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // default-on since 3.2, pinned explicitly: runtime re-splitting of
       // skewed shuffle joins is part of the 100 TB skew story alongside the
       // chunked gap lift (AggOps.gapLiftChunked)
@@ -73,8 +76,22 @@ object GraftSession {
         s"$key must be true or false, got '$raw'"))
     }
 
+  /** A positive integer environment value: `raw` as read from `key`; a
+    * non-integer or non-positive value fails naming the key and the value. */
+  def positiveInt(key: String, raw: String): Int =
+    raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"$key must be a positive integer, got '$raw'"))
+
+  /** The environment's `key` through [[positiveInt]], or `default` when unset. */
+  def envInt(key: String, default: => Int): Int =
+    sys.env.get(key).fold(default)(positiveInt(key, _))
+
+  /** The session every main runs on: [[builder]] with `SPARK_GRAFT_CPUS`
+    * cores and shuffle partitions (else every processor the JVM sees),
+    * logging at WARN with the adjudicated window warnings quiet. */
   def local(): SparkSession = {
-    val s = builder().getOrCreate()
+    val n = envInt("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors)
+    val s = builder(s"local[$n]", n).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     quietAdjudicatedWarnings()
     s

@@ -13,7 +13,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val whRoot = args.lift(1).getOrElse("/tmp/audit_wh")
-    val spark = GraftSession.builder(master = "local[8]", shufflePartitions = 8).getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val ev = Tables.events(spark, sfDir)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.pipeline.{Ann, Dedup, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-evidence harness (round-17 VERDICT item 3): at sf0.1 every
@@ -26,21 +26,9 @@ import org.apache.spark.sql.functions._
 object ScalingLeg {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/testdata_x100")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE_FLOOR", "64k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietAdjudicatedWarnings()
+    val passes = GraftSession.envInt("SPARK_GRAFT_BENCH_PASSES", 2)
+    val spark = GraftSession.local()
+    val cpus = spark.sparkContext.defaultParallelism.toString
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -49,20 +37,12 @@ object ScalingLeg {
 
     def run(name: String)(body: => DataFrame): Unit = {
       if (only.exists(!_.contains(name))) return
-      // (seconds, ok) per pass: a pass that threw did not do the leg's
-      // work, so its time is reported but never counted as the leg's wall
-      val timed = (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try {
-          spark.sparkContext.setJobDescription(s"scalingleg: $name")
-          body.queryExecution.toRdd.foreachPartition(
-            (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
-              while (it.hasNext) it.next())
-          true
-        } catch {
-          case e: Throwable => System.err.println(s"[leg] $name: ${e.getMessage}"); false
-        } finally spark.sparkContext.setJobDescription(null)
-        ((System.nanoTime() - t0) / 1e9, ok)
+      val timed = Bench.passes(name, passes, floor = None) { () =>
+        spark.sparkContext.setJobDescription(s"scalingleg: $name")
+        try body.queryExecution.toRdd.foreachPartition(
+          (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
+            while (it.hasNext) it.next())
+        finally spark.sparkContext.setJobDescription(null)
       }
       println(legLine(name, cpus, timed))
     }
@@ -127,12 +107,13 @@ object ScalingLeg {
 
   private def round2(t: Double): Double = math.round(t * 100) / 100.0
 
-  /** One leg's JSON line: `"ok":false` and no `wall_s` when any pass threw,
-    * else `wall_s` is the fastest pass. */
-  def legLine(name: String, cpus: String, passes: Seq[(Double, Boolean)]): String = {
-    val ok = passes.forall(_._2)
-    val wall = if (ok) s""""wall_s":${round2(passes.map(_._1).min)},""" else ""
+  /** One leg's JSON line: `"ok":false` and no `wall_s` when any pass threw
+    * (a thrown pass has no time: `null` in `passes`), else `wall_s` is the
+    * fastest pass. */
+  def legLine(name: String, cpus: String, passes: Seq[Option[Double]]): String = {
+    val ok = passes.forall(_.isDefined)
+    val wall = if (ok) s""""wall_s":${round2(passes.flatten.min)},""" else ""
     s"""SCALINGLEG {"leg":"$name","cpus":$cpus,"ok":$ok,$wall""" +
-      s""""passes":[${passes.map(p => round2(p._1)).mkString(",")}]}"""
+      s""""passes":[${passes.map(_.fold("null")(t => round2(t).toString)).mkString(",")}]}"""
   }
 }

@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // ns-int64 timestamps stay LongType (engine is ns-exact; TimestampType is µs)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match GraftSession/Bench (verify must run the bench's plans)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE_FLOOR", "64k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietAdjudicatedWarnings()
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // local iteration aid: SPARK_GRAFT_ONLY=q23_fingerprint (driver sets none)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

@@ -25,9 +25,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * paths to the same cost model without leaving Catalyst).
   *
   * Registered via `SparkSessionExtensions.injectFunction`
-  * (`graft.plans.GraftExtensions`); `Ann` probes
-  * `spark.catalog.functionExists("graft_dot")` and falls back to the
-  * interpreted form on sessions built without the extension. */
+  * (`graft.plans.GraftExtensions`), which every graft session carries; a
+  * session without it fails `Ann`'s scoring at analysis, naming
+  * `graft_dot`. */
 case class DotProductLong(left: Expression, right: Expression)
     extends BinaryExpression {
 

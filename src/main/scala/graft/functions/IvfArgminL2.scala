@@ -26,8 +26,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
   * when both struct fields are projected.
   *
   * NULL on: null inputs, a null element, a centroid whose length differs
-  * from the vector's, or an empty centroid matrix (callers route the
-  * empty-quantizer degenerate case before planning this expression). */
+  * from the vector's, or an empty centroid matrix (`Ann.ivfAssignWithDist`
+  * fails any such row by its vec_id). */
 case class IvfArgminL2(left: Expression, right: Expression)
     extends BinaryExpression {
 

@@ -28,22 +28,22 @@ object Ann {
   def quantize(e: Column): Column =
     transform(e, x => round(x.cast("double") * Q).cast("long"))
 
+  /** The interpreted dot product, the reference form `graft_dot` is pinned
+    * bit-identical to (DotProductLongSpec); [[cosinePairs]], [[lshBucket]]
+    * and [[lshCosinePairsExpr]] score through it on purpose. */
   private def dotQ(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
   /** Dot product for the candidate-scoring JOINS: the codegen'd
-    * `graft_dot` expression when the session carries `GraftExtensions`
-    * (every graft entry point does), else the interpreted [[dotQ]] —
-    * bit-identical results either way (FunctionsSpec). The scoring join
-    * evaluates one dot per (query, candidate) pair, the only per-PAIR
-    * expression in the engine, so the interpreted HOF's constant
-    * (zipped-array allocation + two closures per element) multiplies by
-    * n·q — the codegen path is a primitive loop inside whole-stage
-    * codegen instead. */
-  private[pipeline] def dotFast(spark: org.apache.spark.sql.SparkSession)
-                     (a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("graft_dot")) call_function("graft_dot", a, b)
-    else dotQ(a, b)
+    * `graft_dot` expression `GraftExtensions` registers in every graft
+    * session (a session without it fails at analysis naming the routine).
+    * The scoring join evaluates one dot per (query, candidate) pair, the
+    * only per-PAIR expression in the engine, so the interpreted [[dotQ]]'s
+    * constant (zipped-array allocation + two closures per element) would
+    * multiply by n·q — this is a primitive loop inside whole-stage codegen
+    * instead. */
+  private[pipeline] def dotFast(a: Column, b: Column): Column =
+    call_function("graft_dot", a, b)
 
   private def normQ(a: Column): Column =
     sqrt(aggregate(transform(a, x => x * x), lit(0L), (acc, x) => acc + x).cast("double"))
@@ -54,21 +54,20 @@ object Ann {
     * the interpreted transform/aggregate pair allocates a squared array
     * and runs two closures per element). normQ stays for the reference
     * (interpreted-on-purpose) forms. */
-  private def normFast(spark: org.apache.spark.sql.SparkSession)(a: Column): Column =
-    sqrt(dotFast(spark)(a, a).cast("double"))
+  private def normFast(a: Column): Column =
+    sqrt(dotFast(a, a).cast("double"))
 
   /** Exact cosine top-k for each query vector. `queries` and `corpus` both
     * (id, embedding); queries assumed small → broadcast (no shuffle of the
     * corpus at all; the only wide op is the per-query top-k window over
     * corpus-partition-local candidates). */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val spark = corpus.sparkSession
     val q = broadcast(queries.select(col("vec_id").as("qid"), quantize(col("embedding")).as("qe"))
-      .withColumn("qn", normFast(spark)(col("qe"))))
+      .withColumn("qn", normFast(col("qe"))))
     val c = corpus.select(col("vec_id").as("vid"), quantize(col("embedding")).as("ve"))
-      .withColumn("vn", normFast(spark)(col("ve")))
+      .withColumn("vn", normFast(col("ve")))
     val scored = c.join(q, col("qid") =!= col("vid"))
-      .withColumn("cosine", dotFast(corpus.sparkSession)(col("qe"), col("ve"))
+      .withColumn("cosine", dotFast(col("qe"), col("ve"))
         .cast("double") / (col("qn") * col("vn")))
     val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vid"))
     scored.withColumn("rnk", row_number().over(w).cast("long"))
@@ -90,15 +89,14 @@ object Ann {
     * @return (qid, q_label, vid, neg_label, rnk, cosine), ≤ k rows per
     *         query */
   def hardNegatives(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val spark = corpus.sparkSession
     val q = broadcast(queries.select(col("vec_id").as("qid"),
         col("label").as("q_label"), quantize(col("embedding")).as("qe"))
-      .withColumn("qn", normFast(spark)(col("qe"))))
+      .withColumn("qn", normFast(col("qe"))))
     val c = corpus.select(col("vec_id").as("vid"),
         col("label").as("neg_label"), quantize(col("embedding")).as("ve"))
-      .withColumn("vn", normFast(spark)(col("ve")))
+      .withColumn("vn", normFast(col("ve")))
     val scored = c.join(q, col("q_label") =!= col("neg_label"))
-      .withColumn("cosine", dotFast(corpus.sparkSession)(col("qe"), col("ve"))
+      .withColumn("cosine", dotFast(col("qe"), col("ve"))
         .cast("double") / (col("qn") * col("vn")))
     val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vid"))
     scored.withColumn("rnk", row_number().over(w).cast("long"))
@@ -299,7 +297,6 @@ object Ann {
       }
     }
     val ccLit = typedlit(ccTab)
-    val spark = corpus.sparkSession
     // x·c between sub-vector j of `vec` and codebook entry c (1-based
     // element_at positions; j, c are 0-based lambda ints) — one codegen'd
     // graft_dot primitive loop over array slices instead of a dsub-step
@@ -308,7 +305,7 @@ object Ann {
     def subXc(vec: Column, j: Column, c: Column): Column = {
       val sub = slice(vec, j * dsub + lit(1), lit(dsub))
       val subc = slice(element_at(centLit, c + 1), j * dsub + lit(1), lit(dsub))
-      dotFast(spark)(sub, subc)
+      dotFast(sub, subc)
     }
     // code assignment = argmin_c Σ(x−c)² = argmin_c (c·c − 2·x·c): the x·x
     // term is constant across the ksub candidates, so dropping it shifts
@@ -331,7 +328,7 @@ object Ann {
     // qxx array column instead of ksub re-evals inside the inner lambda
     val qxxCol = transform(sequence(lit(0), lit(m - 1)), j => {
       val sub = slice(col("qe"), j * dsub + lit(1), lit(dsub))
-      dotFast(spark)(sub, sub)
+      dotFast(sub, sub)
     })
     val dtabCol = transform(sequence(lit(0), lit(m - 1)), j =>
       transform(sequence(lit(0), lit(ksub - 1)), cc => {
@@ -376,13 +373,6 @@ object Ann {
     org.apache.spark.sql.types.StructField("list_id",
       org.apache.spark.sql.types.LongType, nullable = false)))
 
-  private val ivfAssignDistSchema = org.apache.spark.sql.types.StructType(
-    ivfAssignSchema.fields :+ org.apache.spark.sql.types.StructField(
-      "adist", org.apache.spark.sql.types.LongType, nullable = false))
-
-  // Row/RDD form rather than Dataset[(Long, Array[Long])]: Product encoders
-  // need compile-time reflection that breaks under REPL/notebook
-  // classloaders, and a library entry point can't assume an application one.
   def ivfAssign(corpus: DataFrame, centroids: Array[(Long, Array[Long])]): DataFrame =
     ivfAssignWithDist(corpus, centroids).drop("adist")
 
@@ -395,53 +385,39 @@ object Ann {
     * build-time baseline ([[graft.store.IvfStore.driftStats]]). */
   def ivfAssignWithDist(corpus: DataFrame,
                         centroids: Array[(Long, Array[Long])]): DataFrame = {
-    val spark = corpus.sparkSession
-    if (centroids.nonEmpty &&
-        spark.catalog.functionExists("graft_ivf_argmin")) {
-      // r17: the codegen'd `graft_ivf_argmin` expression replaces the r16
-      // RDD map. The RDD round-trip forced an InternalRow→Row→InternalRow
-      // conversion per vector, ran the centroid scan as an interpreted
-      // closure outside whole-stage codegen, and erased size estimates
-      // (every caller that joined the assignment back onto its own source
-      // subtree planned blind). Identical assignment semantics: exact
-      // Σ(v−c)² in int64, strict-< keep-first tie rule — bit-equality with
-      // the RDD loop is spec-pinned (FunctionsSpec) and oracle-checked
-      // (q196/q43/q193/q194). Both struct fields are projected from ONE
-      // expression eval (codegen subexpression elimination).
-      val centLit = typedlit(centroids.map(_._2.toSeq).toSeq)
-      return corpus
-        .select(col("vec_id").as("vid"), quantize(col("embedding")).as("ve"))
-        .withColumn("_bd", call_function("graft_ivf_argmin", col("ve"), centLit))
-        .select(col("vid"), col("ve"),
-          col("_bd").getField("list_id").as("list_id"),
-          col("_bd").getField("adist").as("adist"))
-    }
-    // fallback (session without GraftExtensions, or an empty quantizer —
-    // the historical behavior assigns list 0 at distance Long.MaxValue)
-    val bc = spark.sparkContext.broadcast(centroids)
-    val rdd = corpus.select(col("vec_id"), quantize(col("embedding")).as("e"))
-      .rdd.map { r =>
-        val id = r.getLong(0)
-        val v = r.getSeq[Long](1).toArray
-        val cs = bc.value
-        var best = 0; var bestD = Long.MaxValue
-        var i = 0
-        while (i < cs.length) {
-          val c = cs(i)._2
-          var d = 0L; var k = 0
-          while (k < v.length) { val t = v(k) - c(k); d += t * t; k += 1 }
-          if (d < bestD) { bestD = d; best = i }
-          i += 1
-        }
-        org.apache.spark.sql.Row(id, v.toSeq, best.toLong, bestD)
-      }
-    spark.createDataFrame(rdd, ivfAssignDistSchema)
+    // the codegen'd `graft_ivf_argmin` expression: exact Σ(v−c)² in int64,
+    // strict-< keep-first tie rule (IvfArgminL2Spec), oracle-checked through
+    // q196/q43/q193/q194; both struct fields are projected from ONE
+    // expression eval (codegen subexpression elimination)
+    val centLit = typedlit(centroids.map(_._2.toSeq).toSeq)
+    val why =
+      if (centroids.isEmpty) "the quantizer has no centroids"
+      else "its embedding is null, holds a null element or does not match " +
+        "the quantizer's dimension"
+    corpus
+      .select(col("vec_id").as("vid"), quantize(col("embedding")).as("ve"))
+      .withColumn("_bd", call_function("graft_ivf_argmin", col("ve"), centLit))
+      .select(col("vid"), col("ve"),
+        // NULL for a malformed vector: fail it by id, or every join on
+        // list_id downstream drops it silently (and a store write files it
+        // under list_id=__HIVE_DEFAULT_PARTITION__, which no probe reads)
+        when(col("_bd").isNull, raise_error(concat(lit("IVF assignment: vec_id "),
+            col("vid"), lit(s" has no list ($why)"))).cast("long"))
+          .otherwise(col("_bd").getField("list_id")).as("list_id"),
+        col("_bd").getField("adist").as("adist"))
   }
 
-  def ivfCentroids(corpus: DataFrame, nlist: Int): Array[(Long, Array[Long])] =
+  def ivfCentroids(corpus: DataFrame, nlist: Int): Array[(Long, Array[Long])] = {
+    requireLists(nlist)
     corpus.select(col("vec_id"), quantize(col("embedding")).as("e"))
       .orderBy("vec_id").limit(nlist).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+  }
+
+  /** An empty quantizer (`nlist` = 0) cannot hold a vector: every one
+    * would fail [[ivfAssignWithDist]]. */
+  private def requireLists(nlist: Int): Unit =
+    require(nlist > 0, s"IVF quantizer needs nlist > 0, got nlist = $nlist")
 
   /** Deterministic distributed k-means (Lloyd's) for the IVF coarse
     * quantizer. Init = `nlist` evenly-spaced vectors in vec_id order (spread
@@ -461,6 +437,7 @@ object Ann {
     * the recall; raise nprobe to trade it back explicitly. */
   def kmeansCentroids(corpus: DataFrame, nlist: Int,
                       iters: Int = 3): Array[(Long, Array[Long])] = {
+    requireLists(nlist)
     val q = corpus.select(col("vec_id"), quantize(col("embedding")).as("e"))
     val n = q.count()
     val step = math.max(1L, n / nlist)
@@ -494,7 +471,7 @@ object Ann {
       else ivfCentroids(corpus, nlist)
     val spark = corpus.sparkSession
     val assigned = ivfAssign(corpus, cents)
-      .withColumn("vn", normFast(spark)(col("ve")))
+      .withColumn("vn", normFast(col("ve")))
     val bc = spark.sparkContext.broadcast(cents)
     val qRdd = queries.select(col("vec_id"), quantize(col("embedding")).as("e"))
       .rdd.flatMap { r =>
@@ -514,9 +491,9 @@ object Ann {
         f => f.copy(name = f.name match {
           case "vid" => "qid"; case "ve" => "qe"; case other => other })
       }))
-    val qb = broadcast(q.withColumn("qn", normFast(spark)(col("qe"))))
+    val qb = broadcast(q.withColumn("qn", normFast(col("qe"))))
     val scored = assigned.join(qb, Seq("list_id")).where(col("qid") =!= col("vid"))
-      .withColumn("cosine", dotFast(spark)(col("qe"), col("ve"))
+      .withColumn("cosine", dotFast(col("qe"), col("ve"))
         .cast("double") / (col("qn") * col("vn")))
     val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vid"))
     scored.withColumn("rnk", row_number().over(w).cast("long"))
@@ -602,7 +579,7 @@ object Ann {
   private[graft] def ivfStoredRows(corpus: DataFrame,
                                    cents: Array[(Long, Array[Long])]): DataFrame =
     ivfAssign(corpus, cents)
-      .withColumn("vn", normFast(corpus.sparkSession)(col("ve")))
+      .withColumn("vn", normFast(col("ve")))
 
   /** [[ivfStoredRows]] plus the `adist` residual column — the writer
     * observes drift aggregates on it DURING the write pass
@@ -611,16 +588,7 @@ object Ann {
   private[graft] def ivfStoredRowsWithDist(corpus: DataFrame,
                                            cents: Array[(Long, Array[Long])]): DataFrame =
     ivfAssignWithDist(corpus, cents)
-      // `graft_ivf_argmin` is NULL for a vector of the wrong dimension or
-      // with a null element; written as is, the row would land under
-      // list_id=__HIVE_DEFAULT_PARTITION__, which no probe's literal
-      // list_id filter ever reads
-      .withColumn("list_id", when(col("list_id").isNull,
-          raise_error(concat(lit("IVF store write: vec_id "), col("vid"),
-            lit(" has no list (its embedding is null, holds a null element " +
-              "or does not match the quantizer's dimension)"))).cast("long"))
-        .otherwise(col("list_id")))
-      .withColumn("vn", normFast(corpus.sparkSession)(col("ve")))
+      .withColumn("vn", normFast(col("ve")))
 
   /** Open a persisted index: only the nlist-row quantizer is read eagerly
     * (it must sit on the driver to route probes); the inverted lists stay
@@ -673,9 +641,9 @@ object Ann {
         f => f.copy(name = f.name match {
           case "vid" => "qid"; case "ve" => "qe"; case other => other })
       }))
-    val qb = broadcast(q.withColumn("qn", normFast(spark)(col("qe"))))
+    val qb = broadcast(q.withColumn("qn", normFast(col("qe"))))
     val scored = vecs.join(qb, Seq("list_id")).where(col("qid") =!= col("vid"))
-      .withColumn("cosine", dotFast(spark)(col("qe"), col("ve"))
+      .withColumn("cosine", dotFast(col("qe"), col("ve"))
         .cast("double") / (col("qn") * col("vn")))
     val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vid"))
     scored.withColumn("rnk", row_number().over(w).cast("long"))
@@ -707,13 +675,12 @@ object Ann {
   /** [[lshBucket]] over an ALREADY-quantized column attribute: the caller
     * projects `quantize(embedding).as("e")` once and the h plane dots read
     * that attribute (CollapseProject keeps the stages apart — `e` is
-    * non-cheap and multiply-referenced), through the codegen'd `graft_dot`
-    * when registered. Bit-identical bucket ids to [[lshBucket]]. */
-  private def lshBucketFromQuantized(spark: org.apache.spark.sql.SparkSession)
-                                    (q: Column, h: Int, dim: Int): Column =
+    * non-cheap and multiply-referenced), through the codegen'd `graft_dot`.
+    * Bit-identical bucket ids to [[lshBucket]]. */
+  private def lshBucketFromQuantized(q: Column, h: Int, dim: Int): Column =
     (0 until h).map { p =>
       val plane = array((0 until dim).map(j => lit(planeComponent(p, j))): _*)
-      when(dotFast(spark)(q, plane) >= 0, lit(1L << p)).otherwise(0L)
+      when(dotFast(q, plane) >= 0, lit(1L << p)).otherwise(0L)
     }.reduce(_ + _)
 
   /** Embedding near-dup pairs at 100 TB scale: hyperplane-LSH bucketing, then
@@ -738,7 +705,7 @@ object Ann {
                      maxBucket: Int = 10000): DataFrame = {
     val spark = corpus.sparkSession
     val c = corpus.select(col("vec_id"), quantize(col("embedding")).as("e"))
-      .withColumn("bucket", lshBucketFromQuantized(spark)(col("e"), h, dim))
+      .withColumn("bucket", lshBucketFromQuantized(col("e"), h, dim))
       .repartition(col("bucket"))
       .sortWithinPartitions("bucket")
     val t = threshold
@@ -857,20 +824,19 @@ object Ann {
     * recovering most near-boundary misses. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               h: Int = 8, dim: Int = 64): DataFrame = {
-    val spark = corpus.sparkSession
     val c = corpus.select(col("vec_id").as("vid"), quantize(col("embedding")).as("ve"))
-      .withColumn("bucket", lshBucketFromQuantized(spark)(col("ve"), h, dim))
-      .withColumn("vn", normFast(spark)(col("ve")))
+      .withColumn("bucket", lshBucketFromQuantized(col("ve"), h, dim))
+      .withColumn("vn", normFast(col("ve")))
     val probes = (0 to h).map { i =>
       if (i == 0) col("qb") else col("qb").bitwiseXOR(lit(1L << (i - 1)))
     }
     val q = broadcast(queries
       .select(col("vec_id").as("qid"), quantize(col("embedding")).as("qe"))
-      .withColumn("qb", lshBucketFromQuantized(spark)(col("qe"), h, dim))
-      .withColumn("qn", normFast(spark)(col("qe")))
+      .withColumn("qb", lshBucketFromQuantized(col("qe"), h, dim))
+      .withColumn("qn", normFast(col("qe")))
       .withColumn("bucket", explode(array(probes: _*))))
     val scored = c.join(q, Seq("bucket")).where(col("qid") =!= col("vid"))
-      .withColumn("cosine", dotFast(corpus.sparkSession)(col("qe"), col("ve"))
+      .withColumn("cosine", dotFast(col("qe"), col("ve"))
         .cast("double") / (col("qn") * col("vn")))
     val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vid"))
     scored.withColumn("rnk", row_number().over(w).cast("long"))
@@ -989,10 +955,10 @@ object Ann {
     // are bit-exact int64 identities (congruent mod 2⁶⁴ even under
     // wraparound), so every guard fires on exactly the same values.
     val d2 = (a: Column, b: Column) => {
-      val ab = dotFast(spark)(a, b)
-      dotFast(spark)(a, a) + dotFast(spark)(b, b) - ab - ab
+      val ab = dotFast(a, b)
+      dotFast(a, a) + dotFast(b, b) - ab - ab
     }
-    val n2 = (a: Column) => dotFast(spark)(a, a)
+    val n2 = (a: Column) => dotFast(a, a)
     // centroid table: nlist rows, rides broadcast everywhere below
     val centDf = broadcast(spark.createDataFrame(
       spark.sparkContext.parallelize(cents.toIndexedSeq.zipWithIndex.map {
@@ -1038,7 +1004,7 @@ object Ann {
     asg.withColumn("_n2c", guardN2(n2(col("ve"))))
       .join(pCand, "list_id")
       .withColumn("_d2", col("_n2c") + col("_n2p") -
-        lit(2L) * dotFast(spark)(col("ve"), col("pe")))
+        lit(2L) * dotFast(col("ve"), col("pe")))
       .where(col("_d2") <= d2max)
       .groupBy(col("vid").as("vec_id"))
       .agg(count(lit(1)).as("n_hits"), min("_d2").as("min_d2"))

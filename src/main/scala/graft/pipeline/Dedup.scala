@@ -843,8 +843,7 @@ object Dedup {
     *     only ever holds the merged ~`-log2(fpp)·1.44` bits/gram result —
     *     ~6x smaller than the exact set at the default 1% fpp);
     *  2. probe it with Spark's own codegen'd `BloomFilterMightContain`
-    *     (registered as `graft_might_contain`; interpreted-eval fallback
-    *     when the session lacks GraftExtensions) to cut the corpus gram
+    *     (registered as `graft_might_contain` by GraftExtensions) to cut the corpus gram
     *     stream to candidates — the only rows that must SHUFFLE on gram;
     *  3. exact-verify candidates against the benchmark grams with a
     *     left-semi shuffle join, so Bloom false positives are removed and
@@ -859,7 +858,6 @@ object Dedup {
   def decontaminateBloom(corpus: DataFrame, benchmark: DataFrame,
                          n: Int = 8, text: String = "text",
                          fpp: Double = 0.01): DataFrame = {
-    val spark = corpus.sparkSession
     // benchmark-sized, referenced three times (count, filter build, verify
     // join) — checkpoint rather than re-shingle thrice; blocks free on GC
     val benchGrams = shingleHashRows(benchmark, n, text)
@@ -871,21 +869,7 @@ object Dedup {
       bloom.writeTo(bos)
       bos.toByteArray
     }
-    val probe =
-      if (spark.catalog.functionExists("graft_might_contain"))
-        call_function("graft_might_contain", lit(bytes), col("gram"))
-      else {
-        // degraded path: an interpreted UDF probe loses whole-stage
-        // codegen — say so once, loudly, so a run without GraftExtensions
-        // is diagnosable from its logs rather than only from its profile
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          "decontaminateBloom: graft_might_contain is not registered " +
-            "(GraftExtensions absent) — falling back to an interpreted " +
-            "UDF Bloom probe; register spark.sql.extensions=" +
-            "graft.plans.GraftExtensions for the codegen'd path")
-        val b = spark.sparkContext.broadcast(bloom)
-        udf((g: Long) => b.value.mightContainLong(g)).apply(col("gram"))
-      }
+    val probe = call_function("graft_might_contain", lit(bytes), col("gram"))
     val corpusGrams = shingleHashRows(corpus, n, text)
     val totals = corpusGrams.groupBy("doc_id")
       .agg(count(lit(1)).as("n_grams"))
@@ -2113,7 +2097,7 @@ object Dedup {
       // Σcv² through the codegen'd graft_dot (r17): same exact int64 sum
       // as the interpreted transform/aggregate pair, evaluated once per
       // corpus row on a frame that is referenced three times below
-      .withColumn("n2", Ann.dotFast(spark)(col("cv"), col("cv")))
+      .withColumn("n2", Ann.dotFast(col("cv"), col("cv")))
       .withColumn("n2",
         when(col("n2") > maxN2 || col("n2") < 0L,
           raise_error(concat(lit("semanticDedup: doc "), col("doc_id"),
@@ -2135,7 +2119,7 @@ object Dedup {
       .select(col("list_id"), col("_ci"), col("_blk").as("_cj"),
         col("doc_id").as("_idb"), col("cv").as("_cvb"), col("n2").as("_n2b"))
     val t2n = tauNum * tauNum; val t2d = tauDen * tauDen
-    val dot = Ann.dotFast(spark)(col("_cva"), col("_cvb"))
+    val dot = Ann.dotFast(col("_cva"), col("_cvb"))
     val dominated = a.join(b, Seq("list_id", "_ci", "_cj"))
       .where(col("_ida") =!= col("_idb"))
       // strictly positive norms: without the guard the integer accept

@@ -41,7 +41,7 @@ class BenchSpec extends AnyFunSuite {
     assert(detail.contains(""""q2_bad":{"ok":false}"""))
     assert(detail.contains(""""q2_bad":[9.0,null,8.0]"""))
     assert(detail.contains(""""n_failed":1"""))
-    val line = Bench.stdoutLine(Seq(good, bad), "/data/sf0.1")
+    val line = Bench.stdoutLine(Seq(good, bad), "/data/sf0.1", Some("BENCH_DETAIL.json"))
     assert(line.contains(""""value":1.50,"""))
     assert(line.contains(""""queries":{"q1":2}"""))
     assert(line.contains(""""n_queries":2,"n_failed":1"""))
@@ -54,7 +54,19 @@ class BenchSpec extends AnyFunSuite {
       Bench.Measured(f"q$i%03d_query_name", Vector.fill(3)(
         if (i % 3 == 0) None else Some(100.0 + i)), 1.0)
     }
-    val line = Bench.stdoutLine(rs, "/data/sf0.1")
+    val line = Bench.stdoutLine(rs, "/data/sf0.1", Some("BENCH_DETAIL.json"))
     assert(line.length + 75 < 2000, s"${line.length} characters")
+  }
+
+  test("a detail record that cannot be written is named null, never a stale file") {
+    // a path under a regular file cannot be created, whoever runs the test
+    val f = java.io.File.createTempFile("bench-detail", ".json")
+    f.deleteOnExit()
+    val good = Bench.Measured("q1_good", Vector(Some(2.0)), 0.5)
+    assert(Bench.writeDetail(s"$f/BENCH_DETAIL.json", "{}") === None)
+    assert(Bench.stdoutLine(Seq(good), "/data/sf0.1", None).contains(""""detail":null,"""))
+    assert(Bench.writeDetail(f.getPath, "{}") === Some(f.getPath))
+    assert(Bench.stdoutLine(Seq(good), "/data/sf0.1", Some(f.getPath))
+      .contains(s""""detail":"${f.getPath}","""))
   }
 }

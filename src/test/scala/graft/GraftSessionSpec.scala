@@ -1,6 +1,7 @@
 package graft
 
-/** `spark.graft.*` settings: a malformed value fails naming its key. */
+/** `spark.graft.*` settings and `SPARK_GRAFT_*` environment values: a
+  * malformed value fails naming its key. */
 class GraftSessionSpec extends SparkSpec {
 
   private val key = "spark.graft.test.probe"
@@ -38,9 +39,19 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("a scaling leg with a failed pass reports ok:false and no wall time") {
-    assert(ScalingLeg.legLine("cc", "8", Seq(2.0 -> true, 1.5 -> true)) ===
+    assert(ScalingLeg.legLine("cc", "8", Seq(Some(2.0), Some(1.5))) ===
       """SCALINGLEG {"leg":"cc","cpus":8,"ok":true,"wall_s":1.5,"passes":[2.0,1.5]}""")
-    assert(ScalingLeg.legLine("cc", "8", Seq(2.0 -> true, 0.1 -> false)) ===
-      """SCALINGLEG {"leg":"cc","cpus":8,"ok":false,"passes":[2.0,0.1]}""")
+    assert(ScalingLeg.legLine("cc", "8", Seq(Some(2.0), None)) ===
+      """SCALINGLEG {"leg":"cc","cpus":8,"ok":false,"passes":[2.0,null]}""")
+  }
+
+  test("an environment integer parses when positive and names its key when malformed") {
+    assert(GraftSession.positiveInt("SPARK_GRAFT_CPUS", " 8 ") === 8)
+    for (raw <- Seq("eight", "4.0", "0", "-2", "", "99999999999")) {
+      val e = intercept[IllegalArgumentException](
+        GraftSession.positiveInt("SPARK_GRAFT_BENCH_PASSES", raw))
+      assert(e.getMessage.contains("SPARK_GRAFT_BENCH_PASSES") &&
+        e.getMessage.contains(s"'$raw'"), e.getMessage)
+    }
   }
 }

@@ -218,6 +218,21 @@ class PipelineSpec extends SparkSpec {
     assert(sizes.length >= 12, s"only ${sizes.length}/16 lists populated")
   }
 
+  test("IVF search fails a malformed vector by its id instead of dropping it") {
+    val short = emb.where(col("vec_id") === 400)
+      .withColumn("embedding", slice(col("embedding"), 1, 3))
+    val corpus = emb.where(col("vec_id") < 64).unionByName(short)
+    val queries = emb.where(col("vec_id") < 3)
+    for (iters <- Seq(0, 3)) {
+      val e = intercept[Exception](
+        Ann.ivfTopK(queries, corpus, 5, nlist = 4, nprobe = 4, kmeansIters = iters).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("vec_id 400"))), e.toString)
+    }
+    val z = intercept[IllegalArgumentException](Ann.ivfTopK(queries, corpus, 5, nlist = 0))
+    assert(z.getMessage.contains("nlist = 0"))
+  }
+
   test("cosinePairsFast is bit-identical to the column-expression version") {
     val slow = Ann.cosinePairs(emb, 0.3).orderBy("vid_a", "vid_b").collect()
     val fast = Ann.cosinePairsFast(emb, 0.3).orderBy("vid_a", "vid_b").collect()
@@ -476,8 +491,8 @@ class PipelineSpec extends SparkSpec {
     val viaBloom = Dedup.decontaminateBloom(corpus, bench, n = 8)
       .orderBy("doc_id").collect().toSeq
     assert(viaBloom === exact)
-    // the codegen'd graft_might_contain probe is live on this session;
-    // also pin the interpreted-UDF fallback a vanilla session would take
+    // the codegen'd graft_might_contain probe is live on this session; a
+    // doc shorter than one gram takes the whole-text hash on both paths
     assert(spark.catalog.functionExists("graft_might_contain"))
     val tiny = Seq((1L, "a b c d e f g h i"), (2L, "x y")).toDF("doc_id", "text")
     val tb = Seq((9L, "a b c d e f g h")).toDF("doc_id", "text")
