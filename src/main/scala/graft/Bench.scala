@@ -9,30 +9,21 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
     // warm the JVM/codegen once on the smallest SF so per-query numbers
-    // measure the plan, not first-call classloading; pre-build the warehouse
-    // the round-trip queries read (built once, queried many times)
-    try SparkEntry.entry(spark).queryExecution.toRdd.count()
-    catch { case _: Throwable => () }
-    // pre-build ALL memoized stores (warehouse, clone, multi-Meta) so query
+    // measure the plan, not first-call classloading; then pre-build every
+    // memoized store (warehouse, clone, multi-Meta, indexes, layout) so query
     // timings measure retrieval plans, not one-time ingest
-    try graft.registry.Registry.warehouseFor(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.registry.Registry.cloneFor(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.registry.Registry.multiWarehouseFor(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.registry.Registry.ivfIndexFor(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.registry.Registry.curationLayoutFor(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.registry.Registry.textIndexFor(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.registry.Registry.textIndexDeltaFor(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.registry.Registry.textIndexPosFor(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.registry.Registry.bandIndexFor(spark, sfDir)
-    catch { case _: Throwable => () }
+    val r = graft.registry.Registry
+    val prebuildFailed = prebuild(Seq[(String, () => Any)](
+      "flagship" -> (() => SparkEntry.entry(spark).queryExecution.toRdd.count()),
+      "warehouse" -> (() => r.warehouseFor(spark, sfDir)),
+      "clone" -> (() => r.cloneFor(spark, sfDir)),
+      "multiWarehouse" -> (() => r.multiWarehouseFor(spark, sfDir)),
+      "ivfIndex" -> (() => r.ivfIndexFor(spark, sfDir)),
+      "curationLayout" -> (() => r.curationLayoutFor(spark, sfDir)),
+      "textIndex" -> (() => r.textIndexFor(spark, sfDir)),
+      "textIndexDelta" -> (() => r.textIndexDeltaFor(spark, sfDir)),
+      "textIndexPos" -> (() => r.textIndexPosFor(spark, sfDir)),
+      "bandIndex" -> (() => r.bandIndexFor(spark, sfDir))))
     // local iteration aid: SPARK_GRAFT_ONLY=q23_fingerprint,q15_dedup_neardup
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // Contention-robust measurement (three rounds of phantom regressions —
@@ -74,12 +65,22 @@ object Bench {
         Measured(name, ps, loadAvg)
       }
     val loadEnd = loadAvg
-    val detail = detailJson(results, sfDir, loadStart, loadEnd, BasePasses)
+    val detail = detailJson(results, sfDir, loadStart, loadEnd, BasePasses, prebuildFailed)
     val written = writeDetail(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json"), detail)
     println(stdoutLine(results, sfDir, written))
     spark.stop()
   }
+
+  /** Runs each pre-build step in order and returns the names of those that
+    * threw, each said on stderr; the queries that read a failed store then
+    * fail on their own, with their own error. */
+  def prebuild(steps: Seq[(String, () => Any)]): Seq[String] =
+    steps.flatMap { case (name, build) =>
+      try { build(); None }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] pre-build $name: $e"); Some(name) }
+    }
 
   /** One query's passes: seconds each, None for a pass that threw. */
   final case class Measured(name: String, passes: Vector[Option[Double]], load: Double) {
@@ -107,9 +108,9 @@ object Bench {
 
   /** BENCH_DETAIL.json: every query's min (`{"ok":false}` for a query with
     * a failed pass, which the total leaves out), its passes (null for a
-    * failed one) and the load after it. */
+    * failed one) and the load after it, and the pre-build steps that threw. */
   def detailJson(results: Seq[Measured], sfDir: String, loadStart: Double, loadEnd: Double,
-                 basePasses: Int): String = {
+                 basePasses: Int, prebuildFailed: Seq[String] = Nil): String = {
     def obj(f: Measured => String) =
       results.map(r => "\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
     val ok = results.filter(_.ok)
@@ -117,7 +118,7 @@ object Bench {
     val p = obj(_.passes.map(_.fold("null")(_.toString)).mkString("[", ",", "]"))
     val l = obj(_.load.toString)
     val rr = ok.filter(_.passes.size > basePasses).map("\"" + _.name + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":${ok.map(_.min).sum},"unit":"sec","queries":$m,"sf":"$sfDir","passes":$p,"load_after_query":$l,"load_start":$loadStart,"load_end":$loadEnd,"reruns":$rr,"base_passes":$basePasses,"n_failed":${results.size - ok.size}}"""
+    s"""{"metric":"total","value":${ok.map(_.min).sum},"unit":"sec","queries":$m,"sf":"$sfDir","passes":$p,"load_after_query":$l,"load_start":$loadStart,"load_end":$loadEnd,"reruns":$rr,"base_passes":$basePasses,"n_failed":${results.size - ok.size},"prebuild_failed":${prebuildFailed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
   }
 
   /** Writes the detail record to `path`: `Some(path)` once written, else

@@ -520,7 +520,7 @@ object Ann {
     *   `root/vectors/list_id=N/` — (vid, ve, vn) parquet, partitioned
     * `partitionBy(list_id)` is the point: a probe turns into a
     * partition-PRUNED scan of nprobe/nlist of the corpus (asserted by
-    * PipelineSpec/PlanAudit), the same layout discipline as the warehouse's
+    * PipelineSpec), the same layout discipline as the warehouse's
     * `interval=` levels. Norms are precomputed at write time so probes do
     * no corpus-side sqrt work. One assignment pass over the corpus, one
     * shuffle into the list partitions — both linear. */

@@ -77,7 +77,7 @@ object Curate {
     * instead of a corpus scan. Same pattern as the warehouse's
     * `interval=` levels and the IVF index's `list_id=`: pay one
     * partitioned write, then every selective read prunes statically
-    * (plan-asserted in PlanAudit).
+    * (asserted by PipelineSpec's curation-layout test).
     *
     * The write shuffles once on the bin join; boundary cuts are the
     * driver-literal quantileBins discipline, so the layout is

@@ -1340,7 +1340,7 @@ object Dedup {
         Seq("doc_id"), "left_semi"), handle.ngram, text, distinct = true)
       .localCheckpoint()
     // corpus side: STORED grams, candidate-doc-bounded probe — no corpus
-    // text scan anywhere in this plan (PlanAudit-asserted)
+    // text scan anywhere in this plan (asserted by PlanShapeSpec's q184 row)
     val cSh = spark.read.parquet(s"${handle.path}/grams")
       .join(broadcast(cands.select(col("corpus_id").as("doc_id")).distinct()),
         Seq("doc_id"), "left_semi")
@@ -2081,14 +2081,15 @@ object Dedup {
     val maxN2 = math.sqrt(Long.MaxValue.toDouble / t2dL).toLong - 1
     // (r16 optimization note: eagerly checkpointing this thrice-referenced
     // frame — pinParallelism + localCheckpoint — was MEASURED 2-3x SLOWER
-    // at sf0.1 (q115 4.1 -> 11.9 s repeatable): Spark's exchange reuse
-    // already deduplicates the heavy vectorize subtree across the three
-    // branches, and the eager materialization serializes what the lazy
-    // plan overlaps. Left lazy — and CONFIRMED at ×100 scale this round:
-    // graft.ScalingLeg's 500 k-doc probe measured the materialized
-    // variant slower at both 8 and 32 cores (numbers in SCALING.md), so
-    // the default stays lazy. The conf below exists for that probe and
-    // for corpora where re-tokenizing 3× loses to one materialization —
+    // at sf0.1 (q115 4.1 -> 11.9 s repeatable, OPTIMIZATION_r16.md:164-166):
+    // Spark's exchange reuse already deduplicates the heavy vectorize
+    // subtree across the three branches, and the eager materialization
+    // serializes what the lazy plan overlaps. Left lazy. A ×100 probe
+    // (graft.ScalingLeg, 500 k docs) was reported slower for the
+    // materialized variant at 8 and 32 cores, but its numbers were never
+    // committed (ROADMAP item 6 owns that record). The conf below exists
+    // for that probe and for corpora where re-tokenizing 3× loses to one
+    // materialization —
     // identical results either way, it only moves WHEN the frame is
     // computed.)
     val materialize = GraftSession.confBool(spark,

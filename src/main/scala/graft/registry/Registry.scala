@@ -21,35 +21,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Registry {
   type Entry = Shared.Entry
 
-  // shared time-range constants, re-exported for PlanAudit and the specs
+  // shared time-range constants, re-exported for the specs
   val B = Shared.B
   val E = Shared.E
-  val I1 = Shared.I1
-  val I2 = Shared.I2
-  val NOW = Shared.NOW
-  val COOLDOWN = Shared.COOLDOWN
-  val Bu = Shared.Bu
-  val Eu = Shared.Eu
-  val I1u = Shared.I1u
-  val I2u = Shared.I2u
-  val RetireHu = Shared.RetireHu
 
-  // memoized store/index builders (PlanAudit drives the same instances)
+  // memoized store/index builders (Bench pre-builds the same instances)
   def warehouseFor(s: SparkSession, d: String): graft.store.Hta = Shared.warehouseFor(s, d)
   def multiWarehouseFor(s: SparkSession, d: String): graft.store.MultiWarehouse.MultiHta = Shared.multiWarehouseFor(s, d)
   def cloneFor(s: SparkSession, d: String): graft.store.Hta = Shared.cloneFor(s, d)
-  def retiredFor(s: SparkSession, d: String): graft.store.Hta = Shared.retiredFor(s, d)
   def ivfIndexFor(s: SparkSession, d: String): graft.pipeline.Ann.IvfIndex = Shared.ivfIndexFor(s, d)
   def textIndexFor(s: SparkSession, d: String): graft.store.TextIndex.Handle = Shared.textIndexFor(s, d)
   def textIndexDeltaFor(s: SparkSession, d: String): graft.store.TextIndex.Handle = Shared.textIndexDeltaFor(s, d)
   def textIndexPosFor(s: SparkSession, d: String): graft.store.TextIndex.Handle = Shared.textIndexPosFor(s, d)
   def bandIndexFor(s: SparkSession, d: String): graft.store.BandIndex.Handle = Shared.bandIndexFor(s, d)
   def curationLayoutFor(s: SparkSession, d: String): String = Shared.curationLayoutFor(s, d)
-
-  // exact level/rollup recomputation (PlanAudit §levelExact)
-  def levelExact(ev: DataFrame, interval: Long): DataFrame = Shared.levelExact(ev, interval)
-  def rollupExact(level: DataFrame, childInterval: Long, parentInterval: Long): DataFrame = Shared.rollupExact(level, childInterval, parentInterval)
-  def aggRangeExact(ev: DataFrame, begin: Long, end: Long): DataFrame = Shared.aggRangeExact(ev, begin, end)
 
   val entries: Seq[Entry] =
     HtaEntries.entries ++

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * `bucket=`-partitioned parquet (bucket = 60-bit token hash mod
   * `buckets`), so a query probes ONLY its terms' buckets through a
   * LITERAL partition filter (statically pruned, plan-asserted in
-  * PlanAudit) instead of scanning the corpus the way the on-the-fly
+  * TextIndexSpec) instead of scanning the corpus the way the on-the-fly
   * q65 scorer must. Build once per corpus snapshot; at 100 TB the
   * postings build is one (doc, token) partial-agg shuffle + a
   * partitioned write, and every later query touches

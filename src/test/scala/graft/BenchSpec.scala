@@ -47,6 +47,25 @@ class BenchSpec extends AnyFunSuite {
     assert(line.contains(""""n_queries":2,"n_failed":1"""))
   }
 
+  test("a pre-build that throws is named on stderr and in the detail record; the rest still run") {
+    var ran = Vector.empty[String]
+    val err = new java.io.ByteArrayOutputStream
+    val prev = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val failed = try Bench.prebuild(Seq(
+      "first" -> (() => ran :+= "first"),
+      "broken" -> (() => fails()),
+      "last" -> (() => ran :+= "last")))
+    finally System.setErr(prev)
+    assert(failed === Seq("broken"))
+    assert(ran === Vector("first", "last"))
+    assert(err.toString.contains("[bench] pre-build broken: java.lang.IllegalStateException: planted"))
+    val good = Bench.Measured("q1_good", Vector(Some(1.0)), 0.5)
+    assert(Bench.detailJson(Seq(good), "sf0.1", 0.1, 0.2, 3, failed)
+      .contains(""""prebuild_failed":["broken"]"""))
+    assert(Bench.detailJson(Seq(good), "sf0.1", 0.1, 0.2, 3).contains(""""prebuild_failed":[]"""))
+  }
+
   test("the stdout line stays inside the 2000-character window it is read from") {
     // 250 registered queries, a third of them failing, all slower than 10 s
     // (the widest values the map prints); sbt's [success] trailer takes ~75

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
@@ -11,6 +12,15 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Every registered query built once at sf0.001, in name order: building
+    * all of them takes over a minute (several entries build a store or run
+    * a pass at construction), so the specs that walk the registry share
+    * this one map. */
+  lazy val registered: Map[String, DataFrame] =
+    scala.collection.immutable.ListMap.from(SparkEntry.queries.toSeq.sortBy(_._1).map {
+      case (name, fn) => name -> fn(spark, "/root/testdata/sf0.001")
+    })
 }
 
 /** Shared base for golden suites. The canonical 110-point fixture is the one
@@ -61,6 +71,24 @@ trait SparkSpec extends AnyFunSuite {
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally sc.removeSparkListener(l)
     jobs.get
+  }
+
+  /** The FORMATTED explain string of `df`'s physical plan with expression
+    * ids stripped (`metric#12` reads `metric`). Plan-shape checks read this
+    * string, never `executedPlan.collect`: under AQE the wrapper has no
+    * children until the first stage runs, so node matching counts 0. */
+  def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      .replaceAll("#\\d+L?", "")
+
+  /** Physical operators named `op` in a formatted plan. Tree lines read
+    * "<Op> [qualifiers] (12)" and the details repeat them as "(12) <Op>",
+    * so only the id-terminated tree lines count; `Exchange` (a shuffle)
+    * matches neither BroadcastExchange nor ReusedExchange. */
+  def countOps(plan: String, op: String): Int = {
+    val opRe = ("\\b" + op + "\\b").r
+    plan.linesIterator.count(l => l.trim.matches(".*\\(\\d+\\)$") &&
+      opRe.findFirstIn(l).isDefined)
   }
 
   def tmpDir(name: String): String = {

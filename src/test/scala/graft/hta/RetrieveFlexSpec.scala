@@ -69,6 +69,12 @@ class RetrieveFlexSpec extends SparkSpec {
     assert(r(1).getAs[Double]("sum") === 99 * 20.0)
   }
 
+  test("the routed plan reads exactly one interval= partition, no finer level") {
+    val pruned = formatted(RetrieveFlex.retrieveFlex(hta, tp(0), tp(300), 100 * S))
+      .linesIterator.filter(_.startsWith("PartitionFilters")).toSeq.distinct
+    assert(pruned.size === 1 && pruned.head.contains(s"(interval = ${100 * S})"), pruned)
+  }
+
   test("begin == end with extended scope returns the containing row (retrieve.cpp:207-211)") {
     val r = RetrieveFlex.retrieveFlex(hta, tp(15), tp(15), 10 * S, smooth = false)
     assert(r.collect().length === 1)

@@ -66,6 +66,28 @@ class ScopeMatrixSpec extends SparkSpec {
       assert(lvlCount(be, ee, sc) === n, s"scope $sc eps ($be,$ee)")
   }
 
+  /** The formatted plan's detail lines that start with `key`. */
+  private def planLines(df: org.apache.spark.sql.DataFrame, key: String): Seq[String] =
+    formatted(df).linesIterator.filter(_.startsWith(key)).toSeq
+
+  test("a bucketed raw scope pushes the time bounds and prunes tb partitions") {
+    val q = Scoped.scopedRange(hta.raw, t2(10100), t2(10300), is(Closed, Open),
+      bucket = Some(("tb", 1000 * S)))
+    val pushed = planLines(q, "PushedFilters")
+    assert(pushed.exists(l => l.contains("GreaterThanOrEqual(time,") &&
+      l.contains("LessThan(time,")), pushed)
+    val pruned = planLines(q, "PartitionFilters")
+    assert(pruned.exists(l => l.contains("(tb >= ") && l.contains("(tb <")), pruned)
+  }
+
+  test("a level read prunes to its interval= partition") {
+    val q = hta.levels.where(col("interval") === 100 * S &&
+      col("time") >= t2(10100) && col("time") < t2(10300))
+    val pruned = planLines(q, "PartitionFilters")
+    assert(pruned.size === 1 && pruned.head.contains(s"(interval = ${100 * S})"), pruned)
+    assert(planLines(q, "PushedFilters").exists(_.contains("GreaterThanOrEqual(time,")))
+  }
+
   test("O3 range() bounds (scope.cpp:95-96)") {
     val r = Queries.rangeBounds(raw).collect().head
     assert(r.getAs[Long]("first_time") === t2(0))

@@ -42,6 +42,19 @@ class TelescopeSpec extends SparkSpec {
     assert(levelRows <= 2 * 10 * 3) // ≤ 2·factor·#levels rows
   }
 
+  test("levels are scanned once under interval IN (…), raw under one tb bound") {
+    val scans = formatted(Telescope.aggregateRange(hta, tp(20), tp(220)))
+      .split("\n\n").map(_.trim).filter(_.matches("(?s)\\(\\d+\\) Scan parquet.*")).toSeq
+    def partitionFilters(scan: String) =
+      scan.linesIterator.find(_.startsWith("PartitionFilters")).getOrElse("")
+    val (levels, raw) = scans.partition(_.matches("(?s).*Location: [^\n]*/levels\\].*"))
+    assert(levels.size === 1, scans)
+    assert(partitionFilters(levels.head).contains("interval IN ("), levels)
+    assert(raw.size === 2, scans)
+    assert(raw.map(partitionFilters).distinct.size === 1 &&
+      partitionFilters(raw.head).contains("(tb >= "), raw)
+  }
+
   /** Metrics with their own data ranges (seconds), integer values. */
   private def series(metric: String, secs: Seq[Long]): Seq[(String, Long, Double)] =
     secs.map(t => (metric, tp(t), (t * 7 % 23 - 11).toDouble))

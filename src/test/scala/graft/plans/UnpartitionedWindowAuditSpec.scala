@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{SparkSpec, SparkTestSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => LWindow}
 
 /** Inventory enforcement for unpartitioned windows: WindowExec's
@@ -28,13 +28,11 @@ class UnpartitionedWindowAuditSpec extends SparkSpec {
     "q148_slo_burn" -> "hourly grid carry: (end-begin)/1h rows, aggregated before the window")
 
   test("only adjudicated queries plan unpartitioned windows") {
-    val dir = "/root/testdata/sf0.001"
     def hasUnpartitioned(p: LogicalPlan): Boolean =
       p.collectWithSubqueries {
         case w: LWindow if w.partitionSpec.isEmpty => w
       }.nonEmpty
-    val offenders = graft.SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val df = graft.SparkEntry.queries(name)(spark, dir)
+    val offenders = SparkTestSession.registered.toSeq.flatMap { case (name, df) =>
       if (hasUnpartitioned(df.queryExecution.optimizedPlan)) Some(name)
       else None
     }
